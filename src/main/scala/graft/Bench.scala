@@ -123,7 +123,11 @@ object Bench {
     val calibJson = calibSeries.map { case (p, i, s) =>
       s"""{"pass":$p,"i":$i,"sec":$s}"""
     }.mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","calib_sec":$calibSec,"prepare_sec":$prepSec,"passes":$passes,"failed":$failedJson,"queries":$qs,"sf":"$sfDir"}"""
+    // the board's parallelism: what SPARK_GRAFT_CPUS asked for and
+    // what the session's scheduler actually offers
+    val par = s""""cpus_requested":${cpus.toInt},""" +
+      s""""default_parallelism":${spark.sparkContext.defaultParallelism}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","calib_sec":$calibSec,"prepare_sec":$prepSec,"passes":$passes,"failed":$failedJson,"queries":$qs,"sf":"$sfDir",$par}"""
     println(line)
     // The driver's BENCH_rN capture keeps only the stdout tail (~60
     // late-alphabet queries diffable) — persist the COMPLETE result,
@@ -133,7 +137,7 @@ object Bench {
       "/root/repo/BENCH_FULL.json")
     try {
       val full = s"""{"calib_sec":$calibSec,"prepare_sec":$prepSec,""" +
-        s""""passes":$passes,"total_sec":$total,"sf":"$sfDir",""" +
+        s""""passes":$passes,"total_sec":$total,"sf":"$sfDir",$par,""" +
         s""""failed":$failedJson,"calib_series":$calibJson,""" +
         s""""queries":$qs,""" +
         s""""passes_raw":${perPass.map(qjson).mkString("[", ",", "]")}}"""

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, TimestampType}
 
@@ -66,11 +67,26 @@ object Fixtures {
 /** Table loaders + determinism helpers shared by all modules. */
 object T {
 
-  /** Load one harness parquet table (TESTDATA.md). Plain
-    * `spark.read.parquet` so Catalyst pushdown / pruning apply.
+  /** Load one harness parquet table (TESTDATA.md). Each fixture is
+    * one file, so `parquet` opens it from its footer on the driver and
+    * the open costs no Spark job; a table that is a directory
+    * (GenScale's sf1 output) falls back to plain `spark.read.parquet`.
     */
   def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    parquet(s, s"$dir/$name.parquet")
+
+  /** Open a parquet path: a plain parquet relation, so Catalyst
+    * pushdown / pruning apply. When `path` is one regular file with a
+    * visible name, its footer reads on the driver and schema merging
+    * is off, the schema comes from that footer (`FooterSchema.of`) and
+    * is handed to the reader — the same schema Spark infers, without
+    * the one-task job its inference runs. Whatever `FooterSchema.of`
+    * declines (directories, globs, `mergeSchema`, hidden, missing or
+    * corrupt files) is plain `spark.read.parquet`, errors included.
+    */
+  def parquet(s: SparkSession, path: String): DataFrame =
+    FooterSchema.of(s, path)
+      .fold(s.read.parquet(path))(s.read.schema(_).parquet(path))
 
   /** The events table ships with parquet TIMESTAMP(NANOS). How Spark
     * surfaces that column depends on the running version, so dispatch

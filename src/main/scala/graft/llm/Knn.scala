@@ -408,7 +408,7 @@ object Knn extends QueryModule {
     val cells = s.createDataFrame(
       for { i <- 0 until GridBlocks; j <- i until GridBlocks } yield (i, j))
       .toDF("ba", "bb")
-    val b = s.read.parquet(path)
+    val b = T.parquet(s, path)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val left = b.select($"vec_id".as("id_a"), $"v".as("va"),
       pmod($"vec_id", lit(GridBlocks)).cast("int").as("ba"))

@@ -398,7 +398,11 @@ object TextStats extends QueryModule {
       // corrupt pair decoding, so it must not reach training
       .filter(!$"word".contains("_"))
       .groupBy($"word").agg(count(lit(1)).as("cnt"))
-      .select(concat_ws(" ", split($"word", "(?!^)")).as("symbols"), $"cnt")
+      // split at every non-start position also yields a trailing ""
+      // (Spark splits with limit -1): drop it, or its ' ' separator
+      // would hand ngrams a bogus word-final pair such as "e_"
+      .select(concat_ws(" ", array_remove(split($"word", "(?!^)"), ""))
+        .as("symbols"), $"cnt")
       .localCheckpoint()
     val rules = Seq.newBuilder[(Int, String, String, Long)]
     var step = 1

@@ -159,7 +159,7 @@ final class GraftSource extends RelationProvider
     def readBack(): BaseRelation = layout match {
       case "singleCsv" => relationOf(
         spark.read.option("header", "true").schema(data.schema).csv(path))
-      case "single" => relationOf(spark.read.parquet(path))
+      case "single" => relationOf(graft.T.parquet(spark, path))
       case _ => createRelation(ctx, parameters)
     }
 

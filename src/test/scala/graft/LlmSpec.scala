@@ -285,6 +285,16 @@ class LlmSpec extends AnyFunSuite {
       .as[(Long, Long, Long)].collect().toSeq
     // every word collapses to one symbol after full-word merges
     assert(applied == Seq((0L, 2L, 2L), (1L, 1L, 1L)))
+    // vocab {ab, cb, db}: the three real pairs tie at 1 and merge in
+    // pair order — a word-final empty symbol would add a bogus b_ pair
+    // (freq 3) that out-counts all of them
+    val dir2 = T.scratch(SF, "bpe_word_final")
+    Seq((0L, "ab cb db")).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir2/documents.parquet")
+    assert(llm.TextStats.bpeTrainRules(spark, dir2) == Seq(
+      (1, "a_b", "ab", 1L),
+      (2, "c_b", "cb", 1L),
+      (3, "d_b", "db", 1L)))
   }
 
   test("BPE apply never shuffles before the output sort (pure map encode)") {
