@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Fixture scale-replicator: blow an sf directory up N× with
@@ -22,13 +22,8 @@ object GenScale {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, repsStr) = args
     val reps = repsStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = LocalSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -144,3 +144,21 @@ object T {
   def sqlDavg(x: String, scale: Int = 2): String =
     s"${sqlDsum(x, scale)} / COUNT(*)"
 }
+
+/** The one local session every entry point builds (Bench, Verify,
+  * Explain, GenScale, MetaScale and the test suite): the graft
+  * extensions, `local[cpus]` with one shuffle partition per core, UTC,
+  * adaptive execution, the repo warehouse dir and no UI. Each caller
+  * sets its own log level.
+  */
+object LocalSession {
+  def apply(cpus: Int): SparkSession = SparkSession.builder()
+    .withExtensions(new GraftExtensions)
+    .master(s"local[$cpus]")
+    .config("spark.sql.shuffle.partitions", cpus.toString)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.adaptive.enabled", "true")
+    .config("spark.sql.warehouse.dir", "/root/repo/target/warehouse")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+}

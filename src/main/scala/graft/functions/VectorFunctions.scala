@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native cosine similarity over two array<double> columns.
   *
@@ -71,69 +71,27 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 /** Subspace squared distance with EXACT per-element decimal
-  * quantization — the PQ distance kernel. Semantically identical to
+  * quantization — the PQ distance kernel, as its raw unscaled long
+  * (value ×10¹⁵). Semantically identical to
   * `SUM(CAST((a(i)-b(i))*(a(i)-b(i)) AS DECIMAL(30,15)))` over the
-  * zipped elements (the formulation the DuckDB oracle replays), and
-  * returns the same DECIMAL(38,15) type that SUM produced — but the
-  * per-element quantization calls Spark's own `Decimal` conversion
-  * (bit-identical to `Cast`) and the accumulation is one fused loop
-  * over UNSCALED LONGS, so the 2M-row explode + broadcast join +
-  * decimal hash-aggregate the previous shape paid per distance pass
-  * collapses into a map-stage expression (measured 2.1 s → ~0.6 s
-  * per pass at sf0.1). Exactness bounds: each quantized element and
-  * the ≤64-element sum stay far below 2^63 at any realistic
-  * component magnitude; the q15 helper fails loudly past the
-  * DECIMAL(30,15) range instead of wrapping.
-  */
-case class SqDistQ15(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DecimalType(38, 15)
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      val d = x.getDouble(i) - y.getDouble(i)
-      acc += SqDistQ15.q15(d * d)
-      i += 1
-    }
-    org.apache.spark.sql.types.Decimal.createUnsafe(acc, 38, 15)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = $a.getDouble($i) - $b.getDouble($i);
-         |  $acc += graft.functions.SqDistQ15.q15($d * $d);
-         |}
-         |${ev.value} =
-         |  org.apache.spark.sql.types.Decimal.createUnsafe($acc, 38, 15);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** [[SqDistQ15]]'s accumulator WITHOUT the Decimal wrapper: the same
-  * quantized squared distance as its raw unscaled long (value ×10¹⁵).
-  * Orders identically to the DECIMAL(38,15) form (same scale, same
-  * sign) and converts back exactly via MakeDecimal — lets argmin run
-  * as a packed-long `min()` HASH aggregate (mutable long buffer,
-  * map-side partial min) where a decimal-bearing struct would demote
-  * to SortAggregate (measured, round 10 item 9).
+  * zipped elements (the formulation the DuckDB oracle replays):
+  * [[SqDistQ15.decimal_q15]] turns it back into the same
+  * DECIMAL(38,15) value and type that SUM produced. The per-element
+  * quantization calls Spark's own `Decimal` conversion (bit-identical
+  * to `Cast`) and the accumulation is one fused loop over UNSCALED
+  * LONGS, so the 2M-row explode + broadcast join + decimal
+  * hash-aggregate the previous shape paid per distance pass collapses
+  * into a map-stage expression (measured 2.1 s → ~0.6 s per pass at
+  * sf0.1). Exactness bounds: each quantized element and the
+  * ≤64-element sum stay far below 2^63 at any realistic component
+  * magnitude; the q15 helper fails loudly past the DECIMAL(30,15)
+  * range instead of wrapping.
+  *
+  * The long orders identically to the DECIMAL(38,15) form (same
+  * scale, same sign) — lets argmin run as a packed-long `min()` HASH
+  * aggregate (mutable long buffer, map-side partial min) where a
+  * decimal-bearing struct would demote to SortAggregate (measured,
+  * round 10 item 9).
   */
 case class SqDistQ15Long(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -186,21 +144,18 @@ object SqDistQ15 {
   def q15(v: Double): Long = {
     val dec = org.apache.spark.sql.types.Decimal(v)
     require(dec.changePrecision(30, 15),
-      s"sq_dist_q15: $v does not fit DECIMAL(30,15)")
+      s"sq_dist_q15_long: $v does not fit DECIMAL(30,15)")
     dec.toUnscaledLong
   }
-
-  def sq_dist_q15(a: Column, b: Column): Column =
-    Bridge.column(SqDistQ15(
-      Bridge.expression(a), Bridge.expression(b)))
 
   def sq_dist_q15_long(a: Column, b: Column): Column =
     Bridge.column(SqDistQ15Long(
       Bridge.expression(a), Bridge.expression(b)))
 
-  /** Unscaled long (×10¹⁵) → the exact DECIMAL(38,15) [[SqDistQ15]]
-    * returns — Spark's own MakeDecimal, so round-tripping through the
-    * long kernel is value- and type-identical to the decimal kernel.
+  /** Unscaled long (×10¹⁵) → the exact DECIMAL(38,15) that
+    * `SUM(CAST(... AS DECIMAL(30,15)))` returns — Spark's own
+    * MakeDecimal, so round-tripping through the long kernel is value-
+    * and type-identical to the decimal sum.
     */
   def decimal_q15(v: Column): Column =
     Bridge.column(org.apache.spark.sql.catalyst.expressions.MakeDecimal(

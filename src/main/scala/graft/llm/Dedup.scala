@@ -124,32 +124,35 @@ object Dedup extends QueryModule {
 
   /** Exact-Jaccard verification of a candidate pair set via the
     * shingle rows (no array reshaping) — shared by the batch and
-    * streaming candidate generators.
+    * streaming candidate generators. The prune (see [[verifyPairsWith]])
+    * is GATED because it only pays once corpus-wide shuffles
+    * dominate: at sf0.1 (~40 MB of shingles) the extra checkpoint
+    * barrier + semi-join stages measured a net LOSS (ppjoin_stored
+    * 3.2-3.9 s → 4.2-4.7 s solo), while at 100 TB the three
+    * corpus-wide exchanges are the scale-killer the prune removes.
     */
-  private[graft] def devVerifyPairs(s: SparkSession, candidates: DataFrame,
-      shingles: DataFrame): DataFrame = verifyPairs(s, candidates, shingles)
-
   private def verifyPairs(s: SparkSession, candidates: DataFrame,
       shingles: DataFrame): DataFrame = {
-    import s.implicits._
-    // Verification cost must scale with the CANDIDATES, not the
-    // corpus: the plain shape shuffles EVERY shingle row three times
-    // (size aggregate + both join sides) to verify a few hundred
-    // pairs. Past the size gate, the shingle stream is pruned to the
-    // docs that appear in some pair FIRST — a semi-join the planner
-    // runs as a broadcast (the doc set is ≤ 2·|pairs| ids) — so the
-    // exact intersection joins and the size aggregate all run over
-    // the candidates' own shingles; per-doc counts over the pruned
-    // stream are identical because pruning keeps every shingle of a
-    // kept doc. The candidate set is then checkpointed once (it feeds
-    // two plan branches, and its upstream is the expensive part).
-    // GATED because the prune only pays once corpus-wide shuffles
-    // dominate: at sf0.1 (~40 MB of shingles) the extra checkpoint
-    // barrier + semi-join stages measured a net LOSS (ppjoin_stored
-    // 3.2-3.9 s → 4.2-4.7 s solo), while at 100 TB the three
-    // corpus-wide exchanges are the scale-killer the prune removes.
     val shBytes = shingles.queryExecution.optimizedPlan.stats.sizeInBytes
-    val prune = shBytes > BigInt(1L << 30)
+    verifyPairsWith(s, candidates, shingles, prune = shBytes > BigInt(1L << 30))
+  }
+
+  /** [[verifyPairs]] with the branch chosen by the caller.
+    * Verification cost must scale with the CANDIDATES, not the
+    * corpus: the plain shape shuffles EVERY shingle row three times
+    * (size aggregate + both join sides) to verify a few hundred
+    * pairs. With `prune`, the shingle stream is cut to the docs that
+    * appear in some pair FIRST — a semi-join the planner runs as a
+    * broadcast (the doc set is ≤ 2·|pairs| ids) — so the exact
+    * intersection joins and the size aggregate all run over the
+    * candidates' own shingles; per-doc counts over the pruned stream
+    * are identical because pruning keeps every shingle of a kept doc.
+    * The candidate set is then checkpointed once (it feeds two plan
+    * branches, and its upstream is the expensive part).
+    */
+  private[graft] def verifyPairsWith(s: SparkSession, candidates: DataFrame,
+      shingles: DataFrame, prune: Boolean): DataFrame = {
+    import s.implicits._
     val cand = if (prune) candidates.localCheckpoint() else candidates
     val sh = if (prune) {
       val docs = cand

@@ -539,7 +539,7 @@ object Knn extends QueryModule {
   // would have silently computed the wrong geometry (and the oracle,
   // sharing the conflation, would still have matched).
   private val PqSubDim = PqDim / PqM
-  private val PqCodes = 16 // codebook entries per subspace
+  private[graft] val PqCodes = 16 // codebook entries per subspace
 
   /** Product-quantization ANN (Jégou/Douze/Schmid, TPAMI'11): 64-dim
     * vectors split into 8 subspaces of 8 dims; per-subspace codebooks
@@ -687,7 +687,7 @@ object Knn extends QueryModule {
 
   /** Squared distance of every vector's every subvector to every
     * codeword: subvectors ⋈ broadcast codebook, distance as ONE fused
-    * DECIMAL-exact kernel ([[graft.functions.SqDistQ15]] — value- and
+    * DECIMAL-exact kernel ([[graft.functions.SqDistQ15Long]] — value- and
     * type-identical to the former per-component explode + decimal
     * aggregate, which cost a 2M-row join plus a shuffle per pass;
     * this shape is a broadcast-join map stage, no exchange).
@@ -711,12 +711,14 @@ object Knn extends QueryModule {
     * here (≤ PqSubDim · q15(maxΔ²) ≈ 8·4·10¹⁵), c < PqCodes, so
     * dl·PqCodes + c stays far under 2⁶³ and min(packed) IS the
     * lexicographic (dist, c) minimum the former rank-1 window
-    * computed (both non-negative). The aggregate's long buffer gets
+    * computed (both non-negative). A dl above Long.MaxValue / PqCodes
+    * does not wrap: under ANSI mode (Spark's default) the multiply
+    * raises ARITHMETIC_OVERFLOW. The aggregate's long buffer gets
     * map-side partial min + whole-stage codegen, where the window
     * paid a full-width shuffle + sort per pass — and a decimal or
     * struct form would demote to SortAggregate (round-10 item 9).
     */
-  private def pqArgmin(s: SparkSession, dists: DataFrame): DataFrame = {
+  private[graft] def pqArgmin(s: SparkSession, dists: DataFrame): DataFrame = {
     import s.implicits._
     dists.groupBy($"vec_id", $"m")
       .agg(min($"dl" * PqCodes + $"c").as("pk"))

@@ -987,11 +987,52 @@ final case class GraftStorage(
     * (atomic on a real object-store commit protocol's rename/put-if-
     * absent primitive).
     *
-    * Returns the committed version number (0-based).
+    * @param statsCols MANIFEST-LEVEL DATA SKIPPING: the commit also
+    *   records per-file [min,max] for these columns (a `_zonemap`
+    *   table inside the commit dir, referenced by an `S` manifest
+    *   line). `readVersionedPruned` then skips files at PLAN time
+    *   from pushed filters — the Delta/Iceberg stats-in-log design.
+    *   Stats ride the footer fast path (metadata-only build); each
+    *   commit's stats cover its own files, so appends compose and
+    *   files from stats-less commits are simply kept conservatively.
+    * @param bloomCols BLOOM-IN-LOG: additionally builds a per-file
+    *   Bloom sidecar over the commit's own files (a `B` manifest
+    *   line), giving `readVersionedPruned` point-predicate file
+    *   pruning on columns min/max stats cannot serve - the same
+    *   zone-vs-bloom split as the path-level sidecars, now
+    *   snapshot-consistent through the log.
+    * @param sortedBy a DECLARED SORT ORDER: sorts the commit's rows
+    *   within each task (ascending, nulls first) before writing, so
+    *   EVERY data file is internally sorted by those columns, and
+    *   records the claim as an `O` manifest line. The catalog scan
+    *   then reports per-partition ordering (`SupportsReportOrdering`)
+    *   and Spark elides the sort of a sort-merge join or sort-based
+    *   aggregate over it — combined with a co-partitioned layout that
+    *   is the zero-exchange ZERO-SORT fact-fact join. The claim is
+    *   table-wide, so it survives only commits that uphold it: an
+    *   append must re-declare the same `sortedBy` or the `O` line is
+    *   dropped; copy-on-write rewrites drop it (their files are not
+    *   re-sorted — re-compact to restore); compaction and the SQL
+    *   write path re-enforce it.
+    * @param txn a TRANSACTION MARKER: `Some(appId -> batchId)` records
+    *   a `T\tappId\tbatchId` manifest line with the commit, and
+    *   [[txnBatchIds]] answers "which batches has this app already
+    *   committed?" — the idempotence primitive a streaming
+    *   foreachBatch sink needs (Delta's txn/appId design). Version
+    *   numbers CANNOT serve that role: any interleaved maintenance
+    *   commit (compact, ALTER) shifts them, and a batchId==version
+    *   check would silently skip a real batch — data loss. T lines
+    *   ride appends and every maintenance rewrite
+    *   ([[carriedMetaLines]]); an overwrite resets them with the
+    *   table.
+    * @return the committed version number (0-based).
     */
   def writeVersioned(df: DataFrame, path: String,
-      append: Boolean = false): Long =
-    writeVersioned(df, path, append, Seq.empty)
+      append: Boolean = false, statsCols: Seq[String] = Seq.empty,
+      bloomCols: Seq[String] = Seq.empty, sortedBy: Seq[String] = Seq.empty,
+      txn: Option[(String, Long)] = None): Long =
+    commitVersioned(df, path, append, statsCols, bloomCols, sortedBy,
+      txn, Seq.empty, None, None)
 
   /** Stage one append-shaped commit's DATA and sidecars into
     * `commitDir` — the shared core of a main append ([[writeVersioned]])
@@ -1044,70 +1085,8 @@ final case class GraftStorage(
     (freshFiles, stats ++ blooms)
   }
 
-  /** writeVersioned with MANIFEST-LEVEL DATA SKIPPING: `statsCols`
-    * asks the commit to also record per-file [min,max] for those
-    * columns (a `_zonemap` table inside the commit dir, referenced by
-    * an `S` manifest line). `readVersionedPruned` then skips files at
-    * PLAN time from pushed filters — the Delta/Iceberg stats-in-log
-    * design. Stats ride the footer fast path (metadata-only build);
-    * each commit's stats cover its own files, so appends compose and
-    * files from stats-less commits are simply kept conservatively.
-    */
-  def writeVersioned(df: DataFrame, path: String,
-      append: Boolean, statsCols: Seq[String]): Long =
-    writeVersioned(df, path, append, statsCols, Seq.empty)
-
-  /** writeVersioned with BLOOM-IN-LOG: `bloomCols` additionally
-    * builds a per-file Bloom sidecar over the commit's own files (a
-    * `B` manifest line), giving `readVersionedPruned` point-predicate
-    * file pruning on columns min/max stats cannot serve - the same
-    * zone-vs-bloom split as the path-level sidecars, now
-    * snapshot-consistent through the log.
-    */
-  def writeVersioned(df: DataFrame, path: String,
-      append: Boolean, statsCols: Seq[String],
-      bloomCols: Seq[String]): Long =
-    writeVersioned(df, path, append, statsCols, bloomCols, Seq.empty)
-
-  /** writeVersioned with a DECLARED SORT ORDER: `sortedBy` sorts the
-    * commit's rows within each task (ascending, nulls first) before
-    * writing, so EVERY data file is internally sorted by those
-    * columns, and records the claim as an `O` manifest line. The
-    * catalog scan then reports per-partition ordering
-    * (`SupportsReportOrdering`) and Spark elides the sort of a
-    * sort-merge join or sort-based aggregate over it — combined with
-    * a co-partitioned layout that is the zero-exchange ZERO-SORT
-    * fact-fact join. The claim is table-wide, so it survives only
-    * commits that uphold it: an append must re-declare the same
-    * `sortedBy` or the `O` line is dropped; copy-on-write rewrites
-    * drop it (their files are not re-sorted — re-compact to
-    * restore); compaction and the SQL write path re-enforce it.
-    */
-  def writeVersioned(df: DataFrame, path: String,
-      append: Boolean, statsCols: Seq[String],
-      bloomCols: Seq[String], sortedBy: Seq[String]): Long =
-    writeVersioned(df, path, append, statsCols, bloomCols, sortedBy,
-      None)
-
-  /** writeVersioned with a TRANSACTION MARKER: `txn = Some(appId ->
-    * batchId)` records a `T\tappId\tbatchId` manifest line with the
-    * commit, and [[txnBatchIds]] answers "which batches has this app
-    * already committed?" — the idempotence primitive a streaming
-    * foreachBatch sink needs (Delta's txn/appId design). Version
-    * numbers CANNOT serve that role: any interleaved maintenance
-    * commit (compact, ALTER) shifts them, and a batchId==version
-    * check would silently skip a real batch — data loss. T lines ride
-    * appends and every maintenance rewrite ([[carriedMetaLines]]);
-    * an overwrite resets them with the table.
-    */
-  def writeVersioned(df: DataFrame, path: String,
-      append: Boolean, statsCols: Seq[String],
-      bloomCols: Seq[String], sortedBy: Seq[String],
-      txn: Option[(String, Long)]): Long =
-    writeVersioned(df, path, append, statsCols, bloomCols, sortedBy,
-      txn, Seq.empty, None, None)
-
-  def writeVersioned(df: DataFrame, path: String,
+  /** [[writeVersioned]] plus the maintenance-only arguments. */
+  private[sources] def commitVersioned(df: DataFrame, path: String,
       append: Boolean, statsCols: Seq[String],
       bloomCols: Seq[String], sortedBy: Seq[String],
       txn: Option[(String, Long)],
@@ -1252,9 +1231,9 @@ final case class GraftStorage(
       partCols: Seq[String], append: Boolean = false,
       sortedBy: Seq[String] = Seq.empty,
       txn: Option[(String, Long)] = None,
-      /** internal: see [[writeVersioned]]'s carryLines. */
+      /** internal: see [[commitVersioned]]'s carryLines. */
       carryLines: Seq[String] = Seq.empty,
-      /** internal: see [[writeVersioned]]'s requireBase. */
+      /** internal: see [[commitVersioned]]'s requireBase. */
       requireBase: Option[Long] = None): Long = {
     import org.apache.hadoop.fs.Path
     require(partCols.nonEmpty,
@@ -2066,7 +2045,7 @@ final case class GraftStorage(
     // with different ids would otherwise both pass the check and
     // wedge the table with mixed pending ids (neither publishable
     // nor discardable) — the loser must fail loudly instead
-    writeVersioned(df, path, append = true, statsCols, bloomCols,
+    commitVersioned(df, path, append = true, statsCols, bloomCols,
       Seq.empty, None, carryLines = Seq(s"W\t$wapId"),
       requireBase = Some(vs0.last), morKey = None)
   }
@@ -3194,7 +3173,7 @@ final case class GraftStorage(
       val clustered =
         if (sortColsL.isEmpty) cur.coalesce(targetFiles)
         else cur.repartitionByRange(targetFiles, sortColsL.map(col): _*)
-      writeVersioned(clustered, path, append = false, sc, bc, sortColsL,
+      commitVersioned(clustered, path, append = false, sc, bc, sortColsL,
         None, tLines, lastV, None)
     }
     tagMaintenance(path, n, "compact")
@@ -4292,7 +4271,7 @@ final case class GraftStorage(
     // stats/bloom coverage carries: the fresh files index like any
     // append so pruned reads keep skipping after the upsert
     val (sc, bc) = priorSidecarCoverage(path)
-    writeVersioned(updates.select(cols.map(col).toIndexedSeq: _*),
+    commitVersioned(updates.select(cols.map(col).toIndexedSeq: _*),
       path, append = true, sc, bc, Seq.empty, txn, Seq.empty, None,
       morKey = Some(key))
   }
@@ -5407,7 +5386,7 @@ final case class GraftStorage(
     val (sc, bc) = priorSidecarCoverage(path)
     val tLines = base.map(txnLines(path, _)).getOrElse(Seq.empty)
     tagMaintenance(path,
-      writeVersioned(cur.withColumn("__graft_z", z)
+      commitVersioned(cur.withColumn("__graft_z", z)
         .repartitionByRange(targetFiles, col("__graft_z"))
         .sortWithinPartitions(col("__graft_z"))
         .drop("__graft_z"), path,

@@ -157,7 +157,7 @@ final class IncrementalMv private (spark: SparkSession) {
     // marker per source); THIS source's marker is replaced by `txn`
     val carried = mvBase.map(v => st.txnLines(mvPath, v)
       .filterNot(_.startsWith(s"T\t$app\t"))).getOrElse(Seq.empty)
-    st.writeVersioned(canonicalize(fresh), mvPath, append = false,
+    st.commitVersioned(canonicalize(fresh), mvPath, append = false,
       Seq.empty, Seq.empty, Seq.empty, txn = Some(app -> srcV),
       carryLines = carried, requireBase = mvBase, morKey = None)
   }

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * their exact counterparts instead.
   */
 class LlmSpec extends AnyFunSuite {
-  import SparkTestSession.{spark, SF}
+  import SparkTestSession.{spark, SF, SF01}
   import spark.implicits._
 
   private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
@@ -380,5 +380,53 @@ class LlmSpec extends AnyFunSuite {
     // both classes occur — the hashed weights are not degenerate
     assert(a.map(_._3).exists(_ > 0) || a.map(_._3).exists(_ < 0))
     assert(run() == a)
+  }
+
+  test("dedup pair verification: pruned and plain branches give the " +
+    "same rows on sf0.01 candidates") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val sh = llm.Dedup.shingleRows(T.t(spark, SF01, "documents"))
+      .localCheckpoint()
+    val bands = llm.Dedup.bandRows(llm.Dedup.minhashSigs(sh))
+    val candidates = bands.as("a").join(bands.as("b"), Seq("band", "bh"))
+      .filter($"a.doc_id" < $"b.doc_id")
+      .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
+      .distinct()
+    def verify(prune: Boolean) =
+      llm.Dedup.verifyPairsWith(spark, candidates, sh, prune)
+    def semiJoins(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collect {
+        case j: Join if j.joinType == LeftSemi => j
+      }.size
+    val (plain, pruned) = (verify(prune = false), verify(prune = true))
+    assert(semiJoins(plain) == 0)
+    assert(semiJoins(pruned) > 0, pruned.queryExecution.optimizedPlan)
+    val rows = plain.as[(Long, Long, Double)].collect().toSeq
+    assert(rows.nonEmpty)
+    assert(pruned.as[(Long, Long, Double)].collect().toSeq == rows)
+  }
+
+  test("PQ packed argmin raises ARITHMETIC_OVERFLOW past " +
+    "Long.MaxValue / PqCodes instead of wrapping") {
+    import org.apache.spark.SparkThrowable
+    import org.apache.spark.sql.functions.lit
+    val codes = llm.Knn.PqCodes
+    def dists(dl0: Long) = spark.range(2 * codes)
+      .select(($"id" % 2).as("vec_id"), lit(0).as("m"),
+        ($"id" / 2).cast("long").as("c"), (lit(dl0) - $"id").as("dl"))
+    // in range: each vector's argmin is its largest-id row
+    val ok = llm.Knn.pqArgmin(spark, dists(Long.MaxValue / codes))
+      .as[(Long, Int, Long)].collect().sortBy(_._1).toSeq
+    assert(ok == Seq((0L, 0, codes - 1L), (1L, 0, codes - 1L)))
+    val e = intercept[Exception] {
+      llm.Knn.pqArgmin(spark, dists(Long.MaxValue / codes + 2 * codes))
+        .collect()
+    }
+    val conditions = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).collect {
+        case t: SparkThrowable => t.getCondition
+      }.toSeq
+    assert(conditions.contains("ARITHMETIC_OVERFLOW"), e)
   }
 }

@@ -157,7 +157,7 @@ class ManifestLogSpec extends AnyFunSuite {
       (1 to 12).foreach { i =>
         st.writeVersioned(slice(i), out, append = true, Seq.empty,
           Seq.empty, Seq("n_nationkey"),
-          txn = Some("mlog_app" -> i.toLong), Seq.empty, None, None)
+          txn = Some("mlog_app" -> i.toLong))
       }
       val base = st.readVersioned(out, Some(0L)).count()
       // every version readable; counts grow linearly

@@ -7,14 +7,5 @@ object SparkTestSession {
   val SF = "/root/testdata/sf0.001"
   val SF01 = "/root/testdata/sf0.01"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .withExtensions(new GraftExtensions)
-    .master("local[8]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.warehouse.dir", "/root/repo/target/warehouse")
-      .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(8)
 }
