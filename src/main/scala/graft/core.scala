@@ -68,25 +68,34 @@ object Fixtures {
 object T {
 
   /** Load one harness parquet table (TESTDATA.md). Each fixture is
-    * one file, so `parquet` opens it from its footer on the driver and
-    * the open costs no Spark job; a table that is a directory
-    * (GenScale's sf1 output) falls back to plain `spark.read.parquet`.
+    * one file and GenScale's sf1 tables are flat directories; `parquet`
+    * opens both from one footer on the driver, so the open costs no
+    * Spark job.
     */
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     parquet(s, s"$dir/$name.parquet")
 
-  /** Open a parquet path: a plain parquet relation, so Catalyst
-    * pushdown / pruning apply. When `path` is one regular file with a
-    * visible name, its footer reads on the driver and schema merging
-    * is off, the schema comes from that footer (`FooterSchema.of`) and
-    * is handed to the reader — the same schema Spark infers, without
-    * the one-task job its inference runs. Whatever `FooterSchema.of`
-    * declines (directories, globs, `mergeSchema`, hidden, missing or
-    * corrupt files) is plain `spark.read.parquet`, errors included.
-    */
+  /** [[parquet]] for one path with no reader options. */
   def parquet(s: SparkSession, path: String): DataFrame =
-    FooterSchema.of(s, path)
-      .fold(s.read.parquet(path))(s.read.schema(_).parquet(path))
+    parquet(s, Seq(path), Map.empty)
+
+  /** Open parquet paths as a plain parquet relation, so Catalyst
+    * pushdown / pruning apply: `s.read.options(options).parquet(paths)`
+    * with the schema Spark would infer handed to the reader. The
+    * schema comes from the footer of the file Spark's inference would
+    * read (`FooterSchema.of`: one file, a flat directory or a file
+    * list), read on the driver — the same schema without the one-task
+    * job inference runs. Whatever `FooterSchema.of` declines
+    * (partitioned directories, summaries, globs, `mergeSchema`, hidden,
+    * missing or corrupt files) is plain inference, errors included.
+    * `options` reach both the footer read and the relation.
+    */
+  def parquet(s: SparkSession, paths: Seq[String],
+      options: Map[String, String]): DataFrame = {
+    val reader = s.read.options(options)
+    FooterSchema.of(s, paths, options).fold(reader)(reader.schema(_))
+      .parquet(paths: _*)
+  }
 
   /** The events table ships with parquet TIMESTAMP(NANOS). How Spark
     * surfaces that column depends on the running version, so dispatch

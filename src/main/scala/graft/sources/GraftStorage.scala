@@ -84,12 +84,15 @@ final case class GraftStorage(
 
   /** Read a file or directory-of-files as one table
     * (HtsjdkReadsRddStorage.read; directory semantics README.md:85-95).
+    * Like the reference's header read, the schema comes from one
+    * footer on the driver ([[graft.T.parquet]]), so opening costs no
+    * Spark job.
     */
   def read(path: String): DataFrame = {
     splitSize.foreach(b =>
       spark.conf.set("spark.sql.files.maxPartitionBytes", b.toString))
     if (failOnSchemaMismatch) checkUniformSchema(path)
-    val df = spark.read.options(readerOptions).parquet(path)
+    val df = graft.T.parquet(spark, Seq(path), readerOptions)
     if (columns.nonEmpty) df.select(columns.map(col): _*) else df
   }
 
@@ -123,26 +126,17 @@ final case class GraftStorage(
         }
     val files = walk(dir).sortBy(_.getPath.toString)
     if (files.size <= 1) return
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    try {
-      val futs = files.map { f =>
-        pool.submit(new java.util.concurrent.Callable[(String, String)] {
-          override def call(): (String, String) = {
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(conf, f.getPath)
-            try (f.getPath.toString,
-              r.getFooter.getFileMetaData.getSchema.toString)
-            finally r.close()
-          }
-        })
-      }
-      val schemas = futs.map(_.get())
-      val (refFile, refSchema) = schemas.head
-      schemas.find(_._2 != refSchema).foreach { case (badFile, badSchema) =>
-        throw new IllegalArgumentException(
-          s"strictSchema read of $path found incompatible file schemas:\n" +
-            s"  $refFile:\n$refSchema\n  $badFile:\n$badSchema")
-      }
-    } finally pool.shutdown()
+    val schemas = GraftStorage.onDriverPool(files) { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(conf, f.getPath)
+      try (f.getPath.toString, r.getFooter.getFileMetaData.getSchema.toString)
+      finally r.close()
+    }
+    val (refFile, refSchema) = schemas.head
+    schemas.find(_._2 != refSchema).foreach { case (badFile, badSchema) =>
+      throw new IllegalArgumentException(
+        s"strictSchema read of $path found incompatible file schemas:\n" +
+          s"  $refFile:\n$refSchema\n  $badFile:\n$badSchema")
+    }
   }
 
   /** Write a table with a secondary zone-map index — the Spark-native
@@ -192,7 +186,7 @@ final case class GraftStorage(
     */
   def buildZoneMap(path: String, zoneCols: Seq[String]): Boolean = {
     import org.apache.hadoop.fs.Path
-    val dataSchema = spark.read.parquet(path).schema
+    val dataSchema = graft.T.parquet(spark, path).schema
     val fieldType = dataSchema.fields.map(f => f.name -> f.dataType).toMap
     val sidecarSchema = org.apache.spark.sql.types.StructType(
       org.apache.spark.sql.types.StructField("file",
@@ -211,7 +205,7 @@ final case class GraftStorage(
           .write.mode("overwrite").parquet(s"$path/_zonemap")
         true
       case None =>
-        val written = spark.read.parquet(path)
+        val written = graft.T.parquet(spark, path)
         val aggs = zoneCols.flatMap { c =>
           Seq(min(col(c)).as(s"${c}__min"), max(col(c)).as(s"${c}__max"))
         } :+ count(lit(1)).as("cnt")
@@ -257,24 +251,15 @@ final case class GraftStorage(
       walk(dir)
       out.toSeq.sortBy(_.getPath.toUri.getPath)
     }
-    // 8 driver threads, the reference's index-merge parallelism
-    // (IndexFileMerger.java:83)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    try {
-      val futs = files.map { f =>
-        pool.submit(new java.util.concurrent.Callable[Option[Row]] {
-          // a corrupt/foreign footer or transient IO failure on ONE
-          // file must degrade to the distributed-scan fallback, not
-          // abort the whole sidecar build — same contract as
-          // unusable-but-readable stats
-          override def call(): Option[Row] =
-            try fileZoneRow(f.getPath, zoneCols, fieldType, conf)
-            catch { case scala.util.control.NonFatal(_) => None }
-        })
-      }
-      val rows = futs.map(_.get())
-      if (rows.forall(_.isDefined)) Some(rows.map(_.get)) else None
-    } finally pool.shutdown()
+    val rows = GraftStorage.onDriverPool(files) { f =>
+      // a corrupt/foreign footer or transient IO failure on ONE file
+      // must degrade to the distributed-scan fallback, not abort the
+      // whole sidecar build — same contract as unusable-but-readable
+      // stats
+      try fileZoneRow(f.getPath, zoneCols, fieldType, conf)
+      catch { case scala.util.control.NonFatal(_) => None }
+    }
+    if (rows.forall(_.isDefined)) Some(rows.map(_.get)) else None
   }
 
   /** One sidecar row from one file's footer; None if stats unusable. */
@@ -661,13 +646,14 @@ final case class GraftStorage(
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_zonemap")))
       return read(path).filter(residual)
-    val files = spark.read.parquet(s"$path/_zonemap")
+    val files = graft.T.parquet(spark, s"$path/_zonemap")
       .filter(col(s"${zoneCol}__max") >= lit(lo) &&
         col(s"${zoneCol}__min") <= lit(hi))
       .select("file").collect().map(_.getString(0))
     if (files.isEmpty) read(path).filter(residual).limit(0)
     else {
-      val df = spark.read.parquet(files.toIndexedSeq: _*).filter(residual)
+      val df = graft.T.parquet(spark, files.toIndexedSeq, readerOptions)
+        .filter(residual)
       if (columns.nonEmpty) df.select(columns.map(col): _*) else df
     }
   }
@@ -699,15 +685,6 @@ final case class GraftStorage(
     }
   }
 
-  /** Read through the zone-map sidecar with PLAN-TIME pruning — the
-    * lazy upgrade of `readIndexed`: instead of the caller handing the
-    * range to the driver up front, a `ZoneMapFileIndex` prunes files
-    * inside `listFiles` using whatever data filters Catalyst pushed to
-    * the scan. Composes with any later `.filter` / `.select` on the
-    * returned DataFrame, and needs no residual re-statement here — the
-    * user's own predicate is both the pruning key and the row filter,
-    * exactly like parquet row-group stats pruning one level up.
-    */
   /** Lazy column-scoped [[ZoneSidecar]] over `_zonemap` parquet
     * dir(s). The column inventory comes from the sidecar SCHEMA
     * (footers only — no stats rows read); each load projects just
@@ -738,7 +715,7 @@ final case class GraftStorage(
       val conv = new org.apache.spark.sql.execution.datasources.parquet
         .ParquetToSparkSchemaConverter(
           org.apache.spark.sql.internal.SQLConf.get)
-      val thunks = statDirs.flatMap { d =>
+      val parts = statDirs.flatMap { d =>
         val p = new Path(d)
         val fs = p.getFileSystem(hconf)
         def walk(dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
@@ -749,7 +726,11 @@ final case class GraftStorage(
             else Seq.empty
           }
         walk(p)
-      }.map { st => () =>
+      }
+      // footer opens run on a bounded pool, not serially: at 10⁴
+      // stats-bearing commits on an object store a serial walk is
+      // parts × GET-latency of plan-time stall
+      GraftStorage.onDriverPool(parts, threads = 16) { st =>
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile
             .fromStatus(st, hconf))
@@ -758,22 +739,6 @@ final case class GraftStorage(
             .fields.map(f => f.name -> f.dataType).toMap
           finally r.close()
         st.getPath.toUri.getPath -> fields
-      }
-      // footer opens run on a bounded pool, not serially: at 10⁴
-      // stats-bearing commits on an object store a serial walk is
-      // parts × GET-latency of plan-time stall
-      if (thunks.isEmpty) Seq.empty
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, thunks.size))
-        try {
-          import scala.jdk.CollectionConverters._
-          type PF = (String, Map[String, org.apache.spark.sql.types.DataType])
-          pool.invokeAll(thunks.map(t =>
-            new java.util.concurrent.Callable[PF] {
-              override def call(): PF = t()
-            }).asJavaCollection).asScala.map(_.get()).toSeq
-        } finally pool.shutdown()
       }
     }
     lazy val mergedFields: Set[String] =
@@ -876,6 +841,15 @@ final case class GraftStorage(
     .get("spark.graft.zoneSidecar.scopedLoadBytes",
       (64L * 1024 * 1024).toString).toLong
 
+  /** Read through the zone-map sidecar with PLAN-TIME pruning — the
+    * lazy upgrade of `readIndexed`: instead of the caller handing the
+    * range to the driver up front, a `ZoneMapFileIndex` prunes files
+    * inside `listFiles` using whatever data filters Catalyst pushed to
+    * the scan. Composes with any later `.filter` / `.select` on the
+    * returned DataFrame, and needs no residual re-statement here — the
+    * user's own predicate is both the pruning key and the row filter,
+    * exactly like parquet row-group stats pruning one level up.
+    */
   def readPruned(path: String): DataFrame = {
     import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -945,7 +919,7 @@ final case class GraftStorage(
       if (smallSidecar) _ => allBlooms
       else cols => streamBlooms(Some(cols))
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val fullSchema = spark.read.parquet(path).schema
+    val fullSchema = graft.T.parquet(spark, Seq(path), readerOptions).schema
     val index = new ZoneMapFileIndex(classic, Seq(new Path(path)),
       Some(fullSchema), zones, hasBl, bloomMeta, bloomLoader)
     // hive-partitioned layouts: the inferred partition columns must go
@@ -960,20 +934,6 @@ final case class GraftStorage(
     if (columns.nonEmpty) df.select(columns.map(col): _*) else df
   }
 
-  /** K1 literal: one spec-valid CSV FILE via parallel part writes +
-    * driver byte-splice — the reference's single-file sink shape
-    * (BamSink.java:64-139) rather than coalesce(1), which funnels the
-    * whole write through one task. Executors write headerless parts
-    * with full parallelism; the driver then writes the header
-    * (BamSink.java:96-99), splices parts in lexicographic name order
-    * (Merger.java:41-63) skipping hidden/zero-length parts
-    * (HiddenFileFilter.java:31-37, Merger.java:44-48) with the serial
-    * copy fallback of HadoopFileSystemWrapper.concat:155-166, and
-    * deletes the `path + ".parts"` temp dir
-    * (HtsjdkReadsRddStorage.java:224-229). Partition order = part
-    * order, so a range-partitioned, within-partition-sorted input
-    * yields a globally ordered file (README.md:148-161 contract).
-    */
   /** VERSIONED table commits — manifest-based snapshots (the
     * lakehouse contract, engine-minimal): every commit writes its
     * part files into an immutable `data/c<N>/` directory and then
@@ -4482,6 +4442,10 @@ final case class GraftStorage(
         map.find(_._2.equalsIgnoreCase(c)).map(_._1).getOrElse(c)
       case None => c
     }
+    /** A DV key column's type at `to`, from the schema-in-log. */
+    def keyTypeOf(c: String): Option[org.apache.spark.sql.types.DataType] =
+      mergedManifestSchema(path, toVersion)
+        .flatMap(_.find(_.name.equalsIgnoreCase(c))).map(_.dataType)
     if (dvsT.size > dvsF.size && appendShaped &&
         // POSITION DVs have no key column to pre-image by — the
         // range falls to the exact snapshot diff below
@@ -4502,9 +4466,8 @@ final case class GraftStorage(
           // min/max aggregate job per CDC step; an unusable footer
           // falls back to the job.
           val lc = logicalKeyOf(c)
-          val keys = spark.read
-            .parquet(entries.map(_._1._2): _*)
-            .select(col(s"`$c`").as(lc)).distinct()
+          val keys = dvRows(c, keyTypeOf(c), entries.map(_._1._2))
+            .select(col(s"`$c`").as(lc))
           val bounds: Option[(Any, Any)] =
             footerColumnBounds(entries.map(_._1._2), c,
               keys.schema(lc).dataType).getOrElse {
@@ -4524,9 +4487,8 @@ final case class GraftStorage(
           byCol.foldLeft((fromDf.limit(0), fromDf)) {
             case ((acc, remaining), (c, entries)) =>
               val lc = logicalKeyOf(c)
-              val keys = entries.map { case ((_, f), _) =>
-                spark.read.parquet(f).select(col(s"`$c`").as(lc))
-              }.reduce(_ union _).distinct()
+              val keys = dvRows(c, keyTypeOf(c), entries.map(_._1._2))
+                .select(col(s"`$c`").as(lc))
               (acc.unionByName(
                 remaining.join(broadcast(keys), Seq(lc), "left_semi")),
                 remaining.join(broadcast(keys), Seq(lc), "left_anti"))
@@ -5097,11 +5059,36 @@ final case class GraftStorage(
     toLogicalDf(noPos, mappingOfEntries(entries))
   }
 
+  /** The rows of one DV key group's files: the build side of every
+    * DV join. Keyed DVs read `keyCol` at `keyType`, the table's
+    * CURRENT key type (possibly WIDENED since early generations were
+    * written): the same per-file parquet promotion as data files, and
+    * no inference job (footer inference would also pin the first
+    * generation's type and misread wider later ones); None infers,
+    * for legacy tables without schema lines. Position DVs read
+    * (file string, pos long). No `distinct()`: a left-anti or
+    * left-semi join gives the same rows whatever duplicates its build
+    * side holds, so a distinct would only add a shuffle stage.
+    */
+  private[sources] def dvRows(keyCol: String,
+      keyType: Option[org.apache.spark.sql.types.DataType],
+      files: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.types._
+    if (keyCol == GraftStorage.PosDvCol)
+      spark.read.schema(StructType(Seq(StructField("file", StringType),
+        StructField("pos", LongType)))).parquet(files: _*)
+    else keyType
+      .fold(spark.read)(t => spark.read.schema(
+        StructType(Seq(StructField(keyCol, t)))))
+      .parquet(files: _*).select(col(s"`$keyCol`"))
+  }
+
   /** Anti-join `df` against deletion-vector entries, grouped per key
     * column — THE single definition of what a DV removes. Resolved
     * reads ([[readVersioned]]), CDC ([[changesVersioned]]) and
-    * [[applyDeletesVersioned]] all route here, so DV semantics (null
-    * keys survive, per-column broadcast, distinct keys) cannot
+    * [[applyDeletesVersioned]] all route here, and the catalog read
+    * ([[MorReadRule]]) builds the same joins over [[dvRows]], so DV
+    * semantics (null keys survive, per-column broadcast) cannot
     * diverge between surfaces.
     */
   private[sources] def antiJoinDvEntries(df: DataFrame,
@@ -5109,17 +5096,9 @@ final case class GraftStorage(
     val (pos, keyed) = entries.partition(_._1 == GraftStorage.PosDvCol)
     val afterKeys = keyed.groupBy(_._1).toSeq.sortBy(_._1).foldLeft(df) {
       case (d, (keyCol, es)) =>
-        // DV reads request the table's CURRENT key type (possibly
-        // WIDENED since early generations were written): the same
-        // per-file parquet promotion as data files. Footer inference
-        // would pin the first generation's type and misread wider
-        // later ones.
-        val reader = d.schema.find(_.name.equalsIgnoreCase(keyCol))
+        val keyType = d.schema.find(_.name.equalsIgnoreCase(keyCol))
           .map(_.dataType)
-          .fold(spark.read)(t => spark.read.schema(
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField(keyCol, t)))))
-        d.join(broadcast(reader.parquet(es.map(_._2): _*).distinct()),
+        d.join(broadcast(dvRows(keyCol, keyType, es.map(_._2))),
           Seq(keyCol), "left_anti")
     }
     if (pos.isEmpty) afterKeys
@@ -5127,7 +5106,7 @@ final case class GraftStorage(
       // POSITION DVs anti-join on (file, row position): the left side
       // must carry the `__gfile`/`__gpos` metadata columns — readers
       // of pos-DV snapshots materialize them from `_metadata`
-      val dv = spark.read.parquet(pos.map(_._2): _*).distinct()
+      val dv = dvRows(GraftStorage.PosDvCol, None, pos.map(_._2))
       afterKeys.join(broadcast(dv),
         afterKeys(GraftStorage.PosFileCol) === dv("file") &&
           afterKeys(GraftStorage.PosIdxCol) === dv("pos"),
@@ -5181,6 +5160,20 @@ final case class GraftStorage(
     }
   }
 
+  /** K1 literal: one spec-valid CSV FILE via parallel part writes +
+    * driver byte-splice — the reference's single-file sink shape
+    * (BamSink.java:64-139) rather than coalesce(1), which funnels the
+    * whole write through one task. Executors write headerless parts
+    * with full parallelism; the driver then writes the header
+    * (BamSink.java:96-99), splices parts in lexicographic name order
+    * (Merger.java:41-63) skipping hidden/zero-length parts
+    * (HiddenFileFilter.java:31-37, Merger.java:44-48) with the serial
+    * copy fallback of HadoopFileSystemWrapper.concat:155-166, and
+    * deletes the `path + ".parts"` temp dir
+    * (HtsjdkReadsRddStorage.java:224-229). Partition order = part
+    * order, so a range-partitioned, within-partition-sorted input
+    * yields a globally ordered file (README.md:148-161 contract).
+    */
   def writeSingleCsv(df: DataFrame, path: String,
       withHeader: Boolean = true): Unit = {
     import org.apache.hadoop.fs.Path
@@ -5304,7 +5297,7 @@ final case class GraftStorage(
       case Some(v) => spark.conf.set(tsConf, v)
       case None => spark.conf.unset(tsConf)
     }
-    val dataSchema = spark.read.parquet(path).schema
+    val dataSchema = graft.T.parquet(spark, path).schema
     val fieldType = dataSchema.fields.map(f => f.name -> f.dataType).toMap
     val newFiles = fs.listStatus(dir).toSeq
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet") &&
@@ -5518,13 +5511,6 @@ final case class GraftStorage(
     b.result()
   }
 
-  private def restoreConf(m: Map[String, String])
-      : org.apache.hadoop.conf.Configuration = {
-    val c = new org.apache.hadoop.conf.Configuration(false)
-    m.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
-
   /** K7 write half — SPLITTABLE compressed text: one `.bgz` (BGZF,
     * blocked gzip) shard per partition, written executor-parallel.
     * Unlike plain gzip, every ≤64 KiB block decompresses
@@ -5681,9 +5667,14 @@ final case class GraftStorage(
     * reference's block-boundary + record-boundary discovery
     * (BgzfBlockGuesser / BamRecordGuesser) re-expressed Spark-first:
     *
-    *   1. a DISTRIBUTED index pass walks each file's BSIZE chain
-    *      (18-byte header reads + seeks — metadata-rate, the .gzi/SBI
-    *      cost profile) and groups blocks into ~`splitSize` splits;
+    *   1. split planning groups each file's blocks into ~`splitSize`
+    *      splits. A file whose `_bgzi` sidecar records its length
+    *      (everything [[writeBgzfText]] and [[writeSingleBgzf]] write)
+    *      plans on the DRIVER from that KB-scale block index, with no
+    *      Spark job — the reference reads its .sbi/.gzi on the driver
+    *      too. Only files without a valid sidecar (foreign, rewritten
+    *      or torn) walk their BSIZE chain (18-byte header reads +
+    *      seeks) in one distributed pass;
     *   2. each split decompresses ONLY its own blocks and applies the
     *      exactly-once line rules (Bgzf.linesForSplit scaladoc), so a
     *      1000-executor cluster reads one fat shard with 1000-way
@@ -5715,44 +5706,24 @@ final case class GraftStorage(
           spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")))
     val confMap = confSnapshot()
     val sc = spark.sparkContext
-    val splits = sc.parallelize(files, math.max(1, files.size))
-      .flatMap { case (f, len) =>
-        val c = { val x = new org.apache.hadoop.conf.Configuration(false)
-          confMap.foreach { case (k, v) => x.set(k, v) }; x }
+    val indexed = GraftStorage.onDriverPool(files) { case (f, len) =>
+      Bgzf.sidecarBlocks(new Path(f), len, conf)
+    }
+    val unindexed = files.zip(indexed).collect { case (f, None) => f }
+    val walked: Map[String, Seq[Bgzf.Split]] =
+      if (unindexed.isEmpty) Map.empty
+      else sc.parallelize(unindexed, unindexed.size).map { case (f, len) =>
         val p = new Path(f)
-        val pfs = p.getFileSystem(c)
-        // `_bgzi` sidecar first (write-time block index: one KB-scale
-        // read replaces the 18-bytes-per-64KiB chain walk — on an
-        // object store that is the difference between 1 GET and ~16k
-        // ranged GETs per GB). The recorded data-file length gates
-        // staleness: any mismatch (rewritten file, foreign file, torn
-        // sidecar) falls back to the walk — the sidecar can slow
-        // nothing down and can never change results.
-        val si = new Path(new Path(p.getParent, "_bgzi"),
-          p.getName + ".bgzi")
-        val indexed: Option[Seq[(Long, Int)]] =
-          try {
-            if (!pfs.exists(si)) None
-            else {
-              val in = pfs.open(si)
-              try Bgzf.readBgzi(in).collect {
-                case (recLen, blocks) if recLen == len => blocks
-              } finally in.close()
-            }
-          } catch { case _: java.io.IOException => None }
-        val offsets = indexed.getOrElse {
-          val in = pfs.open(p)
-          try Bgzf.blockOffsets(in, len)
-          finally in.close()
-        }
-        Bgzf.splitsOf(f, offsets, len, target)
-      }.collect().toSeq
+        val in = p.getFileSystem(GraftStorage.restoreConfStatic(confMap)).open(p)
+        try f -> Bgzf.splitsOf(f, Bgzf.blockOffsets(in, len), len, target)
+        finally in.close()
+      }.collect().toMap
+    val splits = files.zip(indexed).flatMap {
+      case ((f, len), Some(blocks)) => Bgzf.splitsOf(f, blocks, len, target)
+      case ((f, _), None) => walked(f)
+    }
     val rdd = sc.parallelize(splits, math.max(1, splits.size))
-      .flatMap { s =>
-        val c = { val x = new org.apache.hadoop.conf.Configuration(false)
-          confMap.foreach { case (k, v) => x.set(k, v) }; x }
-        Bgzf.linesForSplit(c, s)
-      }
+      .flatMap(s => Bgzf.linesForSplit(GraftStorage.restoreConfStatic(confMap), s))
     spark.createDataset(rdd)(org.apache.spark.sql.Encoders.STRING)
   }
 
@@ -5923,6 +5894,23 @@ private[sources] final case class VersionedScanParts(
     sortCols: Seq[String] = Seq.empty)
 
 object GraftStorage {
+
+  /** `f` over `items` on a bounded driver thread pool, results in
+    * input order: the driver-side metadata reads (footers, sidecars)
+    * that replace a Spark job. 8 threads by default, the reference's
+    * index-merge parallelism (IndexFileMerger.java:83).
+    */
+  private[sources] def onDriverPool[A, B](items: Seq[A], threads: Int = 8)(
+      f: A => B): Seq[B] =
+    if (items.isEmpty) Seq.empty
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(threads, items.size))
+      try items.map(a => pool.submit(new java.util.concurrent.Callable[B] {
+          override def call(): B = f(a)
+        })).map(_.get())
+      finally pool.shutdown()
+    }
 
   /** Directory-column prefix of partitioned commits: partitionBy runs
     * on `__gp_<col>` COPIES so the data files keep the originals.

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.functions.col
 
 /** Makes merge-on-read snapshots readable through the SQL catalog:
   * an analyzer rule that rewrites every READ of a DV-carrying graft
@@ -217,9 +216,8 @@ class MorReadRule(session: SparkSession) extends Rule[LogicalPlan] {
             .getOrElse(throw new IllegalStateException(
               s"deletion-vector key column '$keyCol' is not in " +
                 s"the schema of $path version $v"))
-          val dvPlan = session.read
-            .parquet(entries.map(_._2): _*)
-            .select(col(keyCol)).distinct()
+          val dvPlan = GraftStorage(session)
+            .dvRows(keyCol, Some(leftKey.dataType), entries.map(_._2))
             .queryExecution.analyzed
           // non-null-safe equality: NULL-keyed rows survive by
           // contract (the MoR write path rejects NULL-keyed

@@ -706,26 +706,28 @@ object StreamOps extends QueryModule {
       batch: org.apache.spark.sql.DataFrame, id: Long,
       txnApp: String): Unit = {
         if (!st.txnCommitted(dst, txnApp, id)) {
-          // Census FIRST, over the RAW batch (one map-side-agg scan of
-          // the CDF batch files): per-type counts + the batch's commit
-          // span. A batch holding exactly ONE commit of exactly ONE
-          // change type needs NO per-key ranking — a keyed feed's
-          // single commit is key-unique, so its rows ARE the net
-          // change. That skips the full-width window+localCheckpoint
-          // for the bootstrap snapshot (the most expensive batch:
-          // ~0.8 s ranking 150k rows at sf0.1 just to keep all of
-          // them) and for pure append / pure delete commits — every
-          // batch of an append-or-delete-only feed, at any scale.
-          // Mixed or multi-commit batches take the exact
-          // rank+checkpoint path unchanged.
+          // Census FIRST, over the RAW batch (one aggregate over the
+          // CDF batch files): per-type row and distinct-key counts +
+          // the batch's commit span. A batch holding exactly ONE
+          // commit of exactly ONE change type with one row per key
+          // needs NO per-key ranking — its rows ARE the net change.
+          // That skips the full-width window+localCheckpoint for the
+          // bootstrap snapshot (the most expensive batch: ~0.8 s
+          // ranking 150k rows at sf0.1 just to keep all of them) and
+          // for pure append / pure delete commits — every batch of an
+          // append-or-delete-only feed, at any scale. A commit that
+          // repeats a key (or holds a NULL key), mixed and
+          // multi-commit batches take the exact rank+checkpoint path.
           val census = batch.groupBy(col("_change_type"))
             .agg(count(lit(1)).as("n"),
               min(col("_commit_version")).as("v0"),
-              max(col("_commit_version")).as("v1"))
+              max(col("_commit_version")).as("v1"),
+              countDistinct(col(keyCol)).as("keys"))
             .collect()
           val counts = census.map(r => r.getString(0) -> r.getLong(1)).toMap
-          val oneCommit = census.nonEmpty &&
-            census.map(_.getLong(2)).min == census.map(_.getLong(3)).max
+          val keyUniqueCommit = census.nonEmpty &&
+            census.map(_.getLong(2)).min == census.map(_.getLong(3)).max &&
+            census.forall(r => r.getLong(4) == r.getLong(1))
           def commitUps(ups: org.apache.spark.sql.DataFrame): Unit = {
             if (st.countVersionedFast(dst).contains(0L))
               st.writeVersioned(ups, dst, append = true, Seq.empty,
@@ -734,9 +736,9 @@ object StreamOps extends QueryModule {
               st.mergeVersionedMor(dst, ups, keyCol,
                 Some(txnApp -> id)): Unit
           }
-          if (oneCommit && counts.size == 1 && counts.contains("insert")) {
+          if (keyUniqueCommit && counts.size == 1 && counts.contains("insert")) {
             commitUps(batch.drop("_change_type", "_commit_version"))
-          } else if (oneCommit && counts.size == 1 &&
+          } else if (keyUniqueCommit && counts.size == 1 &&
               counts.contains("delete")) {
             st.deleteVersionedMorKeys(dst, batch.select(col(keyCol)),
               keyCol, Some(txnApp -> id)): Unit

@@ -11,10 +11,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * whole split, and no trailing newline).
   */
 class BgzfSpec extends AnyFunSuite {
-  import SparkTestSession.{spark, SF}
+  import SparkTestSession.{jobsOf, spark, SF}
   import spark.implicits._
 
   private val storage = sources.GraftStorage(spark)
+
+  /** `readBgzfLines` and the Spark jobs its planning ran. */
+  private def planned(path: String, target: Long)
+      : (org.apache.spark.sql.Dataset[String], Int) = {
+    var ds: org.apache.spark.sql.Dataset[String] = null
+    val jobs = jobsOf { ds = storage.readBgzfLines(path, targetSplitBytes = target) }
+    (ds, jobs)
+  }
 
   test("round trip: lines -> .bgz shards -> split-parallel read, exactly once") {
     val out = T.scratch(SF, "bgzf_roundtrip")
@@ -259,9 +267,11 @@ class BgzfSpec extends AnyFunSuite {
     val sidecars = fs.listStatus(
       new org.apache.hadoop.fs.Path(out, "_bgzi")).toSeq
     assert(sidecars.size == 3, "one _bgzi per shard")
-    // plan-time split discovery must read ONLY the sidecars
+    // plan-time split discovery must read ONLY the sidecars, on the
+    // driver
     CountingFileSystem.reset()
-    val ds = storage.readBgzfLines(out, targetSplitBytes = 2048)
+    val (ds, jobs) = planned(out, 2048)
+    assert(jobs == 0, "sidecar-served planning must run no Spark job")
     assert(CountingFileSystem.opens(".bgz") == 0,
       s"sidecar-served planning must not open data files: " +
         s"${CountingFileSystem.snapshot}")
@@ -277,7 +287,8 @@ class BgzfSpec extends AnyFunSuite {
     val dos = new java.io.DataOutputStream(bogus)
     sources.Bgzf.writeBgzi(dos, dataLen + 999, Seq((0L, 28))); dos.close()
     CountingFileSystem.reset()
-    val ds2 = storage.readBgzfLines(out, targetSplitBytes = 2048)
+    val (ds2, jobs2) = planned(out, 2048)
+    assert(jobs2 == 1, "the stale file's chain walk is one Spark job")
     assert(CountingFileSystem.opens(".bgz") == 1,
       "exactly the stale file re-walks its chain")
     assert(ds2.collect().sorted.toSeq == lines.sorted)
@@ -303,8 +314,10 @@ class BgzfSpec extends AnyFunSuite {
     val tailB = new Array[Byte](sources.Bgzf.EofMarker.length)
     in.seek(len - tailB.length); in.readFully(tailB); in.close()
     assert(java.util.Arrays.equals(tailB, sources.Bgzf.EofMarker))
-    // split-parallel read of ONE file, exactly-once across part seams
-    val back = storage.readBgzfLines(file, targetSplitBytes = 4096)
+    // split-parallel read of ONE file, exactly-once across part seams,
+    // planned on the driver from the merged sidecar
+    val (back, jobs) = planned(file, 4096)
+    assert(jobs == 0, "the merged sidecar must plan without a Spark job")
     assert(back.rdd.getNumPartitions > 4,
       s"single file must fan out, got ${back.rdd.getNumPartitions}")
     assert(back.collect().sorted.toSeq == lines.sorted)

@@ -12,7 +12,7 @@ import graft.sources.{GraftCatalog, GraftStorage}
   * its plan-time pruning.
   */
 class MorReadSpec extends AnyFunSuite {
-  import SparkTestSession.{spark, SF}
+  import SparkTestSession.{jobsOf, spark, SF}
   import spark.implicits._
 
   GraftCatalog.register(spark)
@@ -501,5 +501,52 @@ class MorReadSpec extends AnyFunSuite {
     val df = spark.sql(s"SELECT count(*) AS c FROM graft.`$out`")
     assert(df.head().getLong(0) == live)
     assert(!df.queryExecution.optimizedPlan.toString.contains("LeftAnti"))
+  }
+
+  test("overlapping DVs on one key: rows unchanged on the V1, catalog and " +
+    "CDC reads, no Aggregate under the broadcast, one job fewer") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
+    val out = seed("mor_dv_overlap")
+    val v0 = st.listVersions(out).last
+    val at0 = st.readVersioned(out, Some(v0))
+    // keys 100..199 sit in BOTH DV files
+    st.deleteVersionedMorKeys(out,
+      at0.filter($"o_orderkey" < 200).select("o_orderkey"), "o_orderkey")
+    val v2 = st.deleteVersionedMorKeys(out,
+      at0.filter($"o_orderkey".between(100, 300)).select("o_orderkey"),
+      "o_orderkey")
+    val dvFiles = st.manifestEntries(out, v2)
+      .filter(_.startsWith("D\t")).map(_.split("\t")(2))
+    assert(dvFiles.size == 2)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    def aggsUnderJoins(p: LogicalPlan): Int =
+      p.collect { case j: Join => j.right.collect { case a: Aggregate => a }.size }.sum
+    val deleted = $"o_orderkey" <= 300
+    // the same read with the distinct build side it had before (a def:
+    // a Dataset collected twice reuses its finished adaptive plan)
+    def dvKeys = spark.read.schema(at0.select("o_orderkey").schema)
+      .parquet(dvFiles: _*)
+    def withDistinct = at0.join(broadcast(dvKeys.distinct()),
+      Seq("o_orderkey"), "left_anti")
+    val expected = rows(at0.filter(!deleted))
+    assert(expected.size < rows(at0).size)
+    val v1Read = st.readVersioned(out)
+    val sqlRead = spark.sql(s"SELECT * FROM graft.`$out`")
+    Seq(v1Read, sqlRead).foreach { df =>
+      assert(rows(df) == expected)
+      assert(aggsUnderJoins(df.queryExecution.optimizedPlan) == 0,
+        df.queryExecution.optimizedPlan)
+    }
+    assert(rows(withDistinct) == expected)
+    // CDC across both commits: every deleted row once, as a delete
+    val changes = st.changesVersioned(out, v0, v2)
+    assert(rows(changes.drop("_change_type")) == rows(at0.filter(deleted)))
+    assert(changes.filter($"_change_type" =!= "delete").count() == 0)
+    assert(aggsUnderJoins(changes.queryExecution.optimizedPlan) == 0,
+      changes.queryExecution.optimizedPlan)
+    // one key group: its shuffle stage (one job) is gone
+    assert(jobsOf(st.readVersioned(out).collect()) ==
+      jobsOf(withDistinct.collect()) - 1)
   }
 }

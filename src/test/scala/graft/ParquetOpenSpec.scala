@@ -2,8 +2,6 @@ package graft
 
 import java.io.File
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
-
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
@@ -15,21 +13,21 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.SparkThrowable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `T.parquet` opens a single-file table from its footer on the
-  * driver and hands everything else to `spark.read.parquet`. Both
-  * ways are pinned here: the footer schema equals Spark's inferred
-  * schema (fixtures, a Spark-written nested file, a file with no Spark
-  * metadata, under flipped conversion confs), the footer path runs no
-  * job, and directories, globs, merging and bad files keep Spark's
-  * own path, results and errors.
+/** `T.parquet` opens a single file, a flat directory or a file list
+  * from one footer on the driver and hands everything else to
+  * `spark.read.parquet`. Both ways are pinned here: the footer schema
+  * equals Spark's inferred schema (fixtures, a Spark-written nested
+  * file, a file with no Spark metadata, under flipped conversion
+  * confs, sharded and mixed-schema directories), the footer path runs
+  * no job, and partitioned or summary-bearing directories, globs,
+  * merging and bad files keep Spark's own path, results and errors.
   */
 class ParquetOpenSpec extends AnyFunSuite {
-  import SparkTestSession.{spark, SF, SF01}
+  import SparkTestSession.{jobsOf, spark, SF, SF01}
 
   private val root = T.scratch(SF, "parquet_open")
 
@@ -48,9 +46,7 @@ class ParquetOpenSpec extends AnyFunSuite {
       "map(CAST(id AS STRING), id * 2) AS m",
       "named_struct('a', id, 'b', named_struct('c', CAST(id AS STRING))) AS st")
       .coalesce(1).write.mode("overwrite").parquet(dir)
-    new File(dir).listFiles().map(_.getPath)
-      .filter(p => p.endsWith(".parquet") && !new File(p).getName.startsWith("."))
-      .head
+    partFiles(dir).head
   }
 
   /** A file with no Spark row metadata, so the conversion confs decide
@@ -84,36 +80,22 @@ class ParquetOpenSpec extends AnyFunSuite {
     finally prev.fold(spark.conf.unset(kv._1))(spark.conf.set(kv._1, _))
   }
 
-  /** Spark jobs `body` submits from this thread. The job group tags
-    * them (schema inference runs on the calling thread); a sentinel
-    * job flushes the listener queue, which delivers in order.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"parquet-open-${System.nanoTime()}"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
-          .filter(_ == group)
-          .foreach(_ => seen.add(Option(e.properties
-            .getProperty("spark.job.description")).getOrElse("")))
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "")
-      try {
-        body
-        sc.setJobDescription("sentinel")
-        sc.parallelize(Seq(1), 1).count()
-      } finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!seen.contains("sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains("sentinel"), "listener never saw the sentinel")
-      seen.size - 1
-    } finally sc.removeSparkListener(l)
+  private def freshDir(name: String): String = {
+    val d = new File(s"$root/$name")
+    if (d.exists()) d.listFiles().foreach(_.delete())
+    d.mkdirs()
+    d.getPath
   }
+
+  private def copy(from: String, to: String): Unit =
+    Files.copy(new File(from).toPath, new File(to).toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+
+  /** The visible part files of a Spark-written directory. */
+  private def partFiles(dir: String): Seq[String] =
+    new File(dir).listFiles().map(_.getPath)
+      .filter(p => p.endsWith(".parquet") && !new File(p).getName.startsWith("."))
+      .sorted.toSeq
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
@@ -185,21 +167,34 @@ class ParquetOpenSpec extends AnyFunSuite {
     assert(rows(T.t(spark, SF, "region")) == rows(spark.read.parquet(s"$SF/region.parquet")))
   }
 
+  // the directories here are the ones that decline: a partitioned one
+  // and one carrying a `_common_metadata` summary (flat ones open from
+  // a footer, see the directory tests below)
   test("directories, globs, hidden files and merging keep Spark's path") {
-    val dir = new File(sparkFile).getParent
+    val partitioned = s"$root/partitioned"
+    spark.range(0, 10).selectExpr("id", "id % 2 AS p")
+      .write.mode("overwrite").partitionBy("p").parquet(partitioned)
+    val summarized = freshDir("summarized")
+    copy(s"$SF/region.parquet", s"$summarized/part-00000.parquet")
+    copy(s"$SF/nation.parquet", s"$summarized/_common_metadata")
     val glob = s"$SF/*ation.parquet"
     val hidden = s"$root/_hidden.parquet"
-    Files.copy(new File(s"$SF/nation.parquet").toPath, new File(hidden).toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    Seq(dir, glob, hidden).foreach { p =>
+    copy(s"$SF/nation.parquet", hidden)
+    Seq(partitioned, summarized, glob, hidden).foreach { p =>
       assert(FooterSchema.of(spark, p).isEmpty, p)
       assert(Try(T.parquet(spark, p).schema).toOption ==
         Try(spark.read.parquet(p).schema).toOption, p)
     }
-    Seq(dir, glob).foreach { p =>
+    Seq(partitioned, summarized, glob).foreach { p =>
       assert(jobsOf(T.parquet(spark, p)) == 1, p)
       assert(T.parquet(spark, p).schema == spark.read.parquet(p).schema, p)
       assert(rows(T.parquet(spark, p)) == rows(spark.read.parquet(p)), p)
+    }
+    // reader options that change inference or listing decline too
+    val flat = new File(sparkFile).getParent
+    Seq("mergeSchema" -> "true", "recursiveFileLookup" -> "true").foreach { kv =>
+      assert(FooterSchema.of(spark, Seq(flat), Map(kv)).isEmpty, kv)
+      assert(jobsOf(T.parquet(spark, Seq(flat), Map(kv))) == 1, kv)
     }
     Seq("spark.sql.parquet.mergeSchema", "spark.sql.parquet.ignoreVariantAnnotation")
       .foreach { k =>
@@ -223,5 +218,56 @@ class ParquetOpenSpec extends AnyFunSuite {
       assert(ours.getClass == theirs.getClass, p)
       assert(condition(ours).isDefined && condition(ours) == condition(theirs), p)
     }
+  }
+
+  test("a sharded directory and a file list open from one footer with no job") {
+    val dir = s"$root/sharded"
+    spark.range(0, 200).selectExpr("id", "CAST(id AS STRING) AS s",
+        "CAST(id * 0.5 AS DECIMAL(10,2)) AS d")
+      .repartition(4).write.mode("overwrite").parquet(dir)
+    val files = partFiles(dir)
+    assert(files.size == 4)
+    val buffered = Map("io.file.buffer.size" -> "65536")
+    Seq[(Seq[String], Map[String, String])](
+        Seq(dir) -> Map.empty, Seq(dir) -> buffered,
+        files.reverse -> Map.empty, files.take(2) -> buffered)
+      .foreach { case (ps, opts) =>
+        val theirs = spark.read.options(opts).parquet(ps: _*)
+        assert(FooterSchema.of(spark, ps, opts).isDefined, ps)
+        assert(jobsOf(T.parquet(spark, ps, opts)) == 0, ps)
+        assert(T.parquet(spark, ps, opts).schema == theirs.schema, ps)
+        assert(rows(T.parquet(spark, ps, opts)) == rows(theirs), ps)
+      }
+  }
+
+  test("a mixed-schema flat directory takes the path-sorted first file's schema") {
+    val dir = freshDir("mixed")
+    val src = s"$root/mixed_src"
+    // written b first: the listing order, not the write order, decides
+    Seq("b" -> "CAST(id AS INT) AS x", "a" -> "CAST(id AS STRING) AS y")
+      .foreach { case (name, expr) =>
+        spark.range(0, 3).selectExpr(expr).coalesce(1)
+          .write.mode("overwrite").parquet(s"$src/$name")
+        copy(partFiles(s"$src/$name").head, s"$dir/part-$name.parquet")
+      }
+    val files = Seq(s"$dir/part-b.parquet", s"$dir/part-a.parquet")
+    Seq(Seq(dir), files, files.reverse).foreach { ps =>
+      val theirs = spark.read.parquet(ps: _*).schema
+      assert(theirs.fieldNames.toSeq == Seq("y"), ps)
+      assert(jobsOf(T.parquet(spark, ps, Map.empty)) == 0, ps)
+      assert(T.parquet(spark, ps, Map.empty).schema == theirs, ps)
+      assert(rows(T.parquet(spark, ps, Map.empty)) == rows(spark.read.parquet(ps: _*)), ps)
+    }
+  }
+
+  test("a directory whose first visible file is not parquet fails like Spark") {
+    val dir = freshDir("readme_first")
+    copy(s"$SF/region.parquet", s"$dir/part-00000.parquet")
+    Files.write(new File(s"$dir/README").toPath, "not parquet".getBytes("UTF-8"))
+    assert(FooterSchema.of(spark, dir).isEmpty)
+    val ours = intercept[Exception](T.parquet(spark, dir))
+    val theirs = intercept[Exception](spark.read.parquet(dir))
+    assert(ours.getClass == theirs.getClass)
+    assert(condition(ours).isDefined && condition(ours) == condition(theirs))
   }
 }

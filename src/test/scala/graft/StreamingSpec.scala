@@ -754,4 +754,35 @@ class StreamingSpec extends AnyFunSuite {
     apply(4)
     assert(state() == Set(1L -> "A", 3L -> "C", 4L -> "d"))
   }
+
+  test("cdcApplyBatch: a single commit that repeats a key takes the exact " +
+    "path and leaves one row per key") {
+    val st = sources.GraftStorage(spark)
+    val fs = new org.apache.hadoop.fs.Path(T.scratch(SF, "cdc_dup"))
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // one insert-only commit whose key 2 appears twice
+    val batch = Seq((1L, "a", "insert", 1L), (2L, "b", "insert", 1L),
+      (2L, "b2", "insert", 1L), (3L, "c", "insert", 1L))
+      .toDF("k", "v", "_change_type", "_commit_version")
+    def applied(name: String, b: org.apache.spark.sql.DataFrame)
+        : org.apache.spark.sql.DataFrame = {
+      val dst = T.scratch(SF, name)
+      fs.delete(new org.apache.hadoop.fs.Path(dst), true)
+      st.writeVersioned(Seq.empty[(Long, String)].toDF("k", "v"), dst)
+      streaming.StreamOps.cdcApplyBatch(st, dst, "k", b, 0L, "spec")
+      st.readVersioned(dst)
+    }
+    val dup = applied("cdc_dup", batch)
+    // the same batch spread over two commits never took a fast path
+    val ranked = applied("cdc_dup_ranked",
+      batch.withColumn("_commit_version",
+        when($"v" === "b2", lit(2L)).otherwise($"_commit_version")))
+    def keys(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select($"k").as[Long].collect().toSeq.sorted
+    // an empty replica is the plain-append branch, where the fast
+    // path would have kept both rows of key 2
+    assert(keys(dup) == Seq(1L, 2L, 3L), "one row per key")
+    assert(keys(dup) == keys(ranked))
+    assert(dup.count() == ranked.count())
+  }
 }
