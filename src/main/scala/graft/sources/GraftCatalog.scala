@@ -634,7 +634,7 @@ final class GraftVersionedTable(
     // MIN/MAX from zone stats — zero data files opened (the DV
     // refusal above keeps the counts sound)
     V2Bridge.parquetScanBuilder(spark, parts.files, parts.schema,
-      parts.zones, parts.hasBlooms, parts.bloomMeta, parts.bloomLoader,
+      parts.zones, parts.blooms,
       () => st.countVersionedFast(path, Some(v)),
       Some(GraftFilters.mayMatch),
       if (parts.partCols.isEmpty) None
@@ -1297,14 +1297,14 @@ private[sources] final class GraftCowScanBuilder(
     spark: SparkSession, path: String, op: GraftRowLevelOperation)
   extends ScanBuilder with SupportsPushDownFilters {
 
-  private lazy val zones: ZoneSidecar =
+  private lazy val zones: Sidecar.Zones =
     GraftStorage(spark).versionedScanParts(path, op.version).zones
 
   override def pushFilters(filters: Array[sources.Filter])
       : Array[sources.Filter] = {
     if (filters.nonEmpty && zones.nonEmpty) {
       // scoped load: only the commands' referenced columns' stats
-      val zmap = zones.zonesFor(filters.flatMap(_.references).toSet)
+      val zmap = zones.load(filters.flatMap(_.references).toSet)
       val kept = op.allFiles.filter { f =>
         val stats = zmap.getOrElse(new Path(f).toUri.getPath, Map.empty)
         stats.isEmpty ||

@@ -153,23 +153,31 @@ final case class GraftStorage(
     */
   def writeIndexed(df: DataFrame, path: String,
       clusterBy: String, zoneCols: String*): Unit = {
-    // micros timestamps so footer stats stay readable (INT96 carries
-    // no usable statistics)
-    val tsConf = "spark.sql.parquet.outputTimestampType"
-    val prevTs = spark.conf.getOption(tsConf)
-    spark.conf.set(tsConf, "TIMESTAMP_MICROS")
-    try {
+    withMicrosTimestamps {
       val writer = df.repartitionByRange(df.sparkSession.conf
         .get("spark.sql.shuffle.partitions").toInt, col(clusterBy))
         .sortWithinPartitions(col(clusterBy))
         .write.mode("overwrite")
       rowGroupBytes.foreach(b => writer.option("parquet.block.size", b.toString))
       writer.parquet(path)
-    } finally prevTs match {
-      case Some(v) => spark.conf.set(tsConf, v)
-      case None => spark.conf.unset(tsConf)
     }
     buildZoneMap(path, zoneCols)
+  }
+
+  /** Run `body` with parquet timestamps written as TIMESTAMP_MICROS,
+    * so footer stats stay readable for zone maps (INT96 carries no
+    * usable statistics). The session's previous setting is restored
+    * afterwards, or unset if it had none.
+    */
+  private def withMicrosTimestamps[A](body: => A): A = {
+    val key = "spark.sql.parquet.outputTimestampType"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "TIMESTAMP_MICROS")
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   /** Build the `_zonemap` sidecar for an existing parquet directory.
@@ -266,44 +274,56 @@ final case class GraftStorage(
   private def fileZoneRow(p: org.apache.hadoop.fs.Path, zoneCols: Seq[String],
       fieldType: Map[String, org.apache.spark.sql.types.DataType],
       conf: org.apache.hadoop.conf.Configuration): Option[org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.types._
     import scala.jdk.CollectionConverters._
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(conf, p)
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val cnt = blocks.map(_.getRowCount).sum
-      val perCol: Seq[Option[(Any, Any)]] = zoneCols.map { c =>
-        val dt = fieldType(c)
-        val chunks = blocks.map(_.getColumns.asScala
-          .find(_.getPath.toDotString == c).orNull)
-        if (chunks.exists(_ == null)) None
-        else {
-          // decode each block's (min, max); a block that is all-null
-          // contributes nothing; unusable stats poison the column
-          val decoded = chunks.map { ch =>
-            val st = ch.getStatistics
-            if (st == null || st.isEmpty) null // unusable
-            else if (!st.hasNonNullValue) Some(None) // all-null block
-            else decodeStat(st, ch.getPrimitiveType, dt)
-              .map(mm => Some(Some(mm))).getOrElse(null)
-          }
-          if (decoded.contains(null)) None
-          else {
-            val present = decoded.collect { case Some(Some(mm)) => mm }
-            if (present.isEmpty) Some((null, null)) // whole file null
-            else {
-              implicit val ord: Ordering[Any] = externalOrdering(dt)
-              Some((present.map(_._1).min, present.map(_._2).max))
-            }
-          }
-        }
-      }
-      if (perCol.exists(_.isEmpty)) None
+      val perCol = zoneCols.map(c => footerBounds(blocks, c, fieldType(c)))
+      if (perCol.contains(None)) None
       else Some(org.apache.spark.sql.Row.fromSeq(
-        p.toString +: perCol.flatMap(_.toSeq.flatMap {
-          case (mn, mx) => Seq(mn, mx) }) :+ cnt))
+        p.toString +: perCol.flatMap(_.get match {
+          case Some((mn, mx)) => Seq(mn, mx)
+          case None => Seq(null, null) // whole file null
+        }) :+ blocks.map(_.getRowCount).sum))
     } finally reader.close()
   }
+
+  /** One column's (min, max) over one file's row groups, decoded from
+    * footer stats: `None` when any group's stats are unusable,
+    * `Some(None)` when every group is empty or all-null,
+    * `Some(Some((mn, mx)))` otherwise.
+    */
+  private def footerBounds(
+      blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
+      column: String, dt: org.apache.spark.sql.types.DataType)
+      : Option[Option[(Any, Any)]] = {
+    import scala.jdk.CollectionConverters._
+    mergeBounds(blocks.map { b =>
+      b.getColumns.asScala.find(_.getPath.toDotString == column)
+        .flatMap { ch =>
+          val st = ch.getStatistics
+          if (st == null || st.isEmpty) None // unusable
+          else if (!st.hasNonNullValue) Some(None) // all-null group
+          else decodeStat(st, ch.getPrimitiveType, dt).map(Some(_))
+        }
+    }, dt)
+  }
+
+  /** Merge per-part bounds (row groups of a file, or files of a
+    * table) in `footerBounds`' three-valued shape: unusable poisons
+    * the merge, all-null parts contribute nothing.
+    */
+  private def mergeBounds(parts: Seq[Option[Option[(Any, Any)]]],
+      dt: org.apache.spark.sql.types.DataType): Option[Option[(Any, Any)]] =
+    if (parts.contains(None)) None
+    else {
+      val present = parts.flatten.flatten
+      if (present.isEmpty) Some(None)
+      else {
+        implicit val ord: Ordering[Any] = externalOrdering(dt)
+        Some(Some((present.map(_._1).min, present.map(_._2).max)))
+      }
+    }
 
   /** (min, max) of one row group decoded to Spark EXTERNAL values;
     * None when the physical/logical type combination is unsupported.
@@ -394,46 +414,15 @@ final case class GraftStorage(
       : Option[Option[(Any, Any)]] = {
     import scala.jdk.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
-    val perFile: Seq[Option[Option[(Any, Any)]]] = files.map { f =>
+    mergeBounds(files.map { f =>
       try {
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile
             .fromPath(new org.apache.hadoop.fs.Path(f), conf))
-        try {
-          val blocks = reader.getFooter.getBlocks.asScala.toSeq
-          val decoded = blocks.map { b =>
-            val ch = b.getColumns.asScala
-              .find(_.getPath.toDotString == column).orNull
-            if (ch == null) null
-            else {
-              val st = ch.getStatistics
-              if (st == null || st.isEmpty) null
-              else if (!st.hasNonNullValue) Some(None)
-              else decodeStat(st, ch.getPrimitiveType, dt)
-                .map(mm => Some(Some(mm))).getOrElse(null)
-            }
-          }
-          if (decoded.contains(null)) None
-          else {
-            val present = decoded.collect { case Some(Some(mm)) => mm }
-            if (present.isEmpty) Some(None)
-            else {
-              implicit val ord: Ordering[Any] = externalOrdering(dt)
-              Some(Some((present.map(_._1).min, present.map(_._2).max)))
-            }
-          }
-        } finally reader.close()
+        try footerBounds(reader.getFooter.getBlocks.asScala.toSeq, column, dt)
+        finally reader.close()
       } catch { case _: Exception => None }
-    }
-    if (perFile.contains(None)) None
-    else {
-      val present = perFile.collect { case Some(Some(mm)) => mm }
-      if (present.isEmpty) Some(None)
-      else {
-        implicit val ord: Ordering[Any] = externalOrdering(dt)
-        Some(Some((present.map(_._1).min, present.map(_._2).max)))
-      }
-    }
+    }, dt)
   }
 
   /** Natural ordering for decoded external stat values. */
@@ -685,16 +674,17 @@ final case class GraftStorage(
     }
   }
 
-  /** Lazy column-scoped [[ZoneSidecar]] over `_zonemap` parquet
+  /** Lazy column-scoped zone [[Sidecar]] over `_zonemap` parquet
     * dir(s). The column inventory comes from the sidecar SCHEMA
     * (footers only — no stats rows read); each load projects just
     * `file` plus the requested columns' `__min`/`__max`, so the
     * bytes a load moves scale with files × REQUESTED columns. Past
     * [[zoneScopedThreshold]] on-disk bytes the load streams row-by-
     * row via toLocalIterator instead of one collect, bounding driver
-    * heap the same way the Bloom loader does.
+    * heap the same way [[bloomSidecarFor]] does.
     */
-  private[sources] def zoneSidecarFor(statDirs: Seq[String]): ZoneSidecar = {
+  private[sources] def zoneSidecarFor(statDirs: Seq[String]): Sidecar.Zones = {
+    if (statDirs.isEmpty) return Sidecar.empty
     import org.apache.hadoop.fs.Path
     val hconf = spark.sparkContext.hadoopConfiguration
     // sidecar part-file inventory + per-part root fields (name AND
@@ -784,7 +774,7 @@ final case class GraftStorage(
             f, widestOf(f))))
       spark.read.schema(full).parquet(statDirs: _*)
     }
-    new ZoneSidecar(
+    new Sidecar[(Any, Any)](
       () => allCols,
       cols => {
         val sel = cols.toSeq.sorted.filter(allCols)
@@ -841,6 +831,60 @@ final case class GraftStorage(
     .get("spark.graft.zoneSidecar.scopedLoadBytes",
       (64L * 1024 * 1024).toString).toLong
 
+  /** Lazy Bloom [[Sidecar]] over `_bloom` parquet dir(s) — the one
+    * Bloom loader behind `readPruned`, versioned reads and the V2
+    * runtime probe. Two regimes, gated on the sidecars' on-disk byte
+    * size (`spark.graft.bloomSidecar.scopedLoadBytes`): a small
+    * sidecar loads WHOLE in one job on first use (the column list
+    * falls out of the same load); past the threshold each load is
+    * column-scoped to exactly the filtered columns and streamed via
+    * toLocalIterator — driver memory bounded by files × FILTERED
+    * columns instead of the whole table's metadata — and the column
+    * list costs one `distinct()` job.
+    */
+  private[sources] def bloomSidecarFor(bloomDirs: Seq[String]): Sidecar.Blooms = {
+    if (bloomDirs.isEmpty) return Sidecar.empty
+    import org.apache.hadoop.fs.Path
+    type BF = org.apache.spark.util.sketch.BloomFilter
+    // explicit schema: no footer-inference job, and sidecars
+    // predating the sizing columns read the same way
+    def sidecar: DataFrame = spark.read
+      .schema("file STRING, col STRING, bloom BINARY")
+      .parquet(bloomDirs: _*)
+    def load(scoped: Option[Set[String]]): Map[String, Map[String, BF]] = {
+      import scala.jdk.CollectionConverters._
+      val rows = scoped match {
+        case None => sidecar.collect().iterator
+        case Some(cols) => sidecar.filter(col("col").isin(cols.toSeq: _*))
+          .toLocalIterator().asScala
+      }
+      val out = scala.collection.mutable.Map.empty[String, Map[String, BF]]
+      rows.foreach { r =>
+        val fkey = new Path(r.getString(0)).toUri.getPath
+        val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
+          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](2)))
+        out(fkey) = out.getOrElse(fkey, Map.empty) + (r.getString(1) -> bf)
+      }
+      out.toMap
+    }
+    lazy val small: Boolean = {
+      val fs = new Path(bloomDirs.head)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val threshold = spark.conf.get(
+        "spark.graft.bloomSidecar.scopedLoadBytes",
+        (64L * 1024 * 1024).toString).toLong
+      bloomDirs.iterator.map(d =>
+        fs.getContentSummary(new Path(d)).getLength).sum <= threshold
+    }
+    lazy val all = load(None)
+    new Sidecar[BF](
+      () =>
+        if (small) all.valuesIterator.flatMap(_.keys).toSet
+        else sidecar.select("col").distinct()
+          .collect().map(_.getString(0)).toSet,
+      cols => if (small) all else load(Some(cols)))
+  }
+
   /** Read through the zone-map sidecar with PLAN-TIME pruning — the
     * lazy upgrade of `readIndexed`: instead of the caller handing the
     * range to the driver up front, a `ZoneMapFileIndex` prunes files
@@ -871,57 +915,14 @@ final case class GraftStorage(
     // never the bare file name: a hive partitionBy write reuses the
     // same part-file NAME in every partition directory, so name keys
     // collide across partitions and point lookups would wrongly prune.
-    // Zone rows load LAZILY and COLUMN-SCOPED (same contract as the
-    // blooms below): nothing is read until a query filters, and each
-    // load selects only the referenced columns' __min/__max.
-    val zones: ZoneSidecar =
-      if (!hasZm) ZoneSidecar.empty
-      else zoneSidecarFor(Seq(zmPath.toString))
-    // Bloom sidecar: filters are KB-sized per (file, column), so they
-    // load LAZILY — the FileIndex consults the thunks only when a
-    // query actually filters. Two regimes, gated on the sidecar's
-    // on-disk byte size: a small sidecar loads WHOLE in one pass (one
-    // driver job, the round-2 fast path); past the threshold the load
-    // is column-scoped to exactly the filtered columns, streamed via
-    // toLocalIterator — driver memory bounded by files × FILTERED
-    // columns instead of the whole table's metadata (§8c#7 ceiling).
-    def streamBlooms(scoped: Option[Set[String]])
-        : Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]] = {
-      val base = spark.read.parquet(blPath.toString)
-      val it = scoped.fold(base)(cols =>
-          base.filter(col("col").isin(cols.toSeq: _*)))
-        .select("file", "col", "bloom")
-        .toLocalIterator()
-      val out = scala.collection.mutable.Map
-        .empty[String, Map[String, org.apache.spark.util.sketch.BloomFilter]]
-      while (it.hasNext) {
-        val r = it.next()
-        val fkey = new Path(r.getString(0)).toUri.getPath
-        val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](2)))
-        out(fkey) = out.getOrElse(fkey, Map.empty) + (r.getString(1) -> bf)
-      }
-      out.toMap
-    }
-    val scopedThreshold = spark.conf
-      .get("spark.graft.bloomSidecar.scopedLoadBytes", (64L * 1024 * 1024).toString)
-      .toLong
-    val smallSidecar = hasBl &&
-      fs.getContentSummary(blPath).getLength <= scopedThreshold
-    lazy val allBlooms = streamBlooms(None) // small path: ONE job, cached
-    val bloomMeta: () => Set[String] =
-      if (!hasBl) () => Set.empty
-      else if (smallSidecar) () => allBlooms.valuesIterator.flatMap(_.keys).toSet
-      else () => spark.read.parquet(blPath.toString).select("col").distinct()
-        .collect().map(_.getString(0)).toSet
-    val bloomLoader: Set[String] =>
-        Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]] =
-      if (smallSidecar) _ => allBlooms
-      else cols => streamBlooms(Some(cols))
+    // Both sidecars load LAZILY and COLUMN-SCOPED: nothing is read
+    // until a query filters.
+    val zones = zoneSidecarFor(if (hasZm) Seq(zmPath.toString) else Nil)
+    val blooms = bloomSidecarFor(if (hasBl) Seq(blPath.toString) else Nil)
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val fullSchema = graft.T.parquet(spark, Seq(path), readerOptions).schema
     val index = new ZoneMapFileIndex(classic, Seq(new Path(path)),
-      Some(fullSchema), zones, hasBl, bloomMeta, bloomLoader)
+      Some(fullSchema), zones, blooms)
     // hive-partitioned layouts: the inferred partition columns must go
     // in the relation's PARTITION schema — leaving them in dataSchema
     // with an empty partition schema reads them back as all-NULL
@@ -3303,7 +3304,7 @@ final case class GraftStorage(
                   .GreaterThanOrEqual(c, bounds.get(0)),
                 org.apache.spark.sql.sources
                   .LessThanOrEqual(c, bounds.get(1)))
-            val zmap = zones.zonesFor(Set(c))
+            val zmap = zones.load(Set(c))
             cands0.filter { f =>
               val stats = zmap.getOrElse(key(f), Map.empty)
               stats.isEmpty || GraftFilters.mayMatch(stats, rangeF)
@@ -3395,33 +3396,19 @@ final case class GraftStorage(
     tagMaintenance(path, n, "apply_deletes")
   }
 
-  /** Columns the CURRENT snapshot's stats-in-log / bloom-in-log
-    * sidecars cover — maintenance rewrites (compact, z-order) must
-    * carry this coverage forward, or the op that is advertised to
-    * IMPROVE scans silently turns off file pruning and the
-    * manifest-rate aggregate path from its commit on.
-    */
   /** Columns the version's REAL sidecars (S/B manifest lines) cover —
-    * unlike [[priorSidecarCoverage]] this excludes the path-derived
-    * partition-key zones, so a PARTIAL rewrite restates exactly what
-    * the sidecars stated (sidecar schemas merged: different commits
-    * may cover different column sets).
+    * maintenance rewrites (compact, z-order, DV apply) must carry this
+    * coverage forward, or the op that is advertised to IMPROVE scans
+    * silently turns off file pruning and the manifest-rate aggregate
+    * path from its commit on. Unlike [[priorSidecarCoverage]] this
+    * excludes the path-derived partition-key zones, so a PARTIAL
+    * rewrite restates exactly what the sidecars stated. Answered by
+    * the same providers that serve the reads.
     */
   private def realSidecarCoverage(path: String,
       v: Long): (Seq[String], Seq[String]) = {
-    val sc = manifestStats(path, v) match {
-      case Seq() => Seq.empty[String]
-      case dirs => spark.read.option("mergeSchema", "true")
-        .parquet(dirs: _*).schema.fieldNames.toSeq
-        .filter(_.endsWith("__min")).map(_.stripSuffix("__min"))
-        .distinct.sorted
-    }
-    val bc = manifestBlooms(path, v) match {
-      case Seq() => Seq.empty[String]
-      case dirs => spark.read.parquet(dirs: _*).select("col")
-        .distinct().collect().map(_.getString(0)).toSeq.sorted
-    }
-    (sc, bc)
+    (zoneSidecarFor(manifestStats(path, v)).columns.toSeq.sorted,
+      bloomSidecarFor(manifestBlooms(path, v)).columns.toSeq.sorted)
   }
 
   private[sources] def priorSidecarCoverage(
@@ -3429,14 +3416,10 @@ final case class GraftStorage(
     listVersions(path).lastOption match {
       case None => (Seq.empty, Seq.empty)
       case Some(v) =>
+        // the read providers' column inventories, plus the partition
+        // spec's path-derived zones — no stats rows materialized
         val parts = versionedScanParts(path, v)
-        // metadata-only: the sidecar's column inventory (schema +
-        // partition spec), no stats rows materialized
-        val stats = parts.zones.columns.toSeq.sorted
-        val blooms =
-          if (parts.hasBlooms) parts.bloomMeta().toSeq.sorted
-          else Seq.empty
-        (stats, blooms)
+        (parts.zones.columns.toSeq.sorted, parts.blooms.columns.toSeq.sorted)
     }
 
   /** ZERO-COPY shallow clone (the CLONE TABLE of the lakehouse
@@ -4817,7 +4800,7 @@ final case class GraftStorage(
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val index = new ZoneMapFileIndex(classic,
       parts.files.map(new Path(_)), Some(parts.schema), parts.zones,
-      parts.hasBlooms, parts.bloomMeta, parts.bloomLoader)
+      parts.blooms)
     val rel = HadoopFsRelation(index, StructType(Nil), parts.schema,
       None, new ParquetFileFormat(), readerOptions)(classic)
     // logical projection on top: filters on logical names push
@@ -4829,8 +4812,8 @@ final case class GraftStorage(
   }
 
   /** Everything a pruning scan of one snapshot needs: the manifest's
-    * exact file list, its stats-in-log zone rows, the lazy bloom-in-
-    * log loaders, and the schema-in-log schema. Shared between
+    * exact file list, its stats-in-log zone rows, its bloom-in-log
+    * filters, and the schema-in-log schema. Shared between
     * [[readVersionedPruned]] (V1 relation) and the DSv2 catalog
     * table's ScanBuilder ([[GraftCatalog]]) so both read paths prune
     * through the identical sidecar machinery.
@@ -4845,33 +4828,7 @@ final case class GraftStorage(
     // until a query filters; each load projects just the referenced
     // columns' __min/__max) — plan-time driver bytes scale with the
     // predicate, not files × indexed-cols (the 10⁶-file ceiling)
-    val sidecarZones: ZoneSidecar =
-      if (statDirs.isEmpty) ZoneSidecar.empty
-      else zoneSidecarFor(statDirs)
-    // bloom-in-log (`B` lines): each commit's `_bloom` sidecar serves
-    // point-predicate file pruning; loaded lazily, only when a query
-    // filters on a bloomed column (same contract as readPruned)
-    def loadBlooms(scoped: Option[Set[String]])
-        : Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]] = {
-      val base = spark.read.parquet(bloomDirs: _*)
-      val it = scoped.fold(base)(cols =>
-          base.filter(col("col").isin(cols.toSeq: _*)))
-        .select("file", "col", "bloom").toLocalIterator()
-      val out = scala.collection.mutable.Map
-        .empty[String, Map[String, org.apache.spark.util.sketch.BloomFilter]]
-      while (it.hasNext) {
-        val r = it.next()
-        val fkey = new Path(r.getString(0)).toUri.getPath
-        val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](2)))
-        out(fkey) = out.getOrElse(fkey, Map.empty) + (r.getString(1) -> bf)
-      }
-      out.toMap
-    }
-    val bloomMeta: () => Set[String] =
-      if (bloomDirs.isEmpty) () => Set.empty
-      else () => spark.read.parquet(bloomDirs: _*).select("col")
-        .distinct().collect().map(_.getString(0)).toSet
+    val sidecarZones = zoneSidecarFor(statDirs)
     val fullSchema = mergedManifestSchema(path, v)
       .getOrElse(spark.read.parquet(files: _*).schema)
     // identity-partitioned snapshot: each file's path-derived key IS
@@ -4883,7 +4840,7 @@ final case class GraftStorage(
     val keyFn: String => Option[Seq[Any]] =
       if (partCols.isEmpty) _ => None
       else f => partKeyOf(fullSchema, partFields, f)
-    val zones: ZoneSidecar =
+    val zones =
       if (partCols.isEmpty) sidecarZones
       else {
         // identity-partitioned snapshot: each file's path-derived key
@@ -4922,13 +4879,15 @@ final case class GraftStorage(
               case None => z
             }
           }
-        new ZoneSidecar(
+        new Sidecar[(Any, Any)](
           () => sidecarZones.columns ++ identityCols ++ temporalCols,
-          cols => overlay(sidecarZones.zonesFor(cols)))
+          cols => overlay(sidecarZones.load(cols)))
       }
-    VersionedScanParts(files, zones, bloomDirs.nonEmpty, bloomMeta,
-      cols => loadBlooms(Some(cols)), fullSchema, partCols, keyFn,
-      sortSpec(path, v))
+    // bloom-in-log (`B` lines): each commit's `_bloom` sidecar serves
+    // point-predicate file pruning through the same lazy provider as
+    // readPruned
+    VersionedScanParts(files, zones, bloomSidecarFor(bloomDirs),
+      fullSchema, partCols, keyFn, sortSpec(path, v))
   }
 
   /** Raw manifest-file read honoring the snapshot's schema-in-log
@@ -5241,20 +5200,14 @@ final case class GraftStorage(
       if (!hadBloom) (100000L, 0.01)
       else bloomSizing(spark.read.parquet(s"$path/_bloom"))
     val df = spark.read.parquet(path)
-    val tsConf = "spark.sql.parquet.outputTimestampType"
-    val prevTs = spark.conf.getOption(tsConf)
-    spark.conf.set(tsConf, "TIMESTAMP_MICROS")
     val tmp = new Path(path + ".compact")
-    try {
+    withMicrosTimestamps {
       val rewritten = clusterBy match {
         case Some(c) =>
           df.repartitionByRange(n, col(c)).sortWithinPartitions(col(c))
         case None => df.coalesce(n)
       }
       rewritten.write.mode("overwrite").parquet(tmp.toString)
-    } finally prevTs match {
-      case Some(v) => spark.conf.set(tsConf, v)
-      case None => spark.conf.unset(tsConf)
     }
     fs.delete(dir, true)
     fs.rename(tmp, dir)
@@ -5283,19 +5236,13 @@ final case class GraftStorage(
       s"appendIndexed requires an existing indexed table at $path")
     val existing = spark.read.parquet(zmPath.toString)
     val known = existing.select("file").collect().map(_.getString(0)).toSet
-    val tsConf = "spark.sql.parquet.outputTimestampType"
-    val prevTs = spark.conf.getOption(tsConf)
-    spark.conf.set(tsConf, "TIMESTAMP_MICROS")
-    try {
+    withMicrosTimestamps {
       val writer = df.repartitionByRange(df.sparkSession.conf
         .get("spark.sql.shuffle.partitions").toInt, col(clusterBy))
         .sortWithinPartitions(col(clusterBy))
         .write.mode("append")
       rowGroupBytes.foreach(b => writer.option("parquet.block.size", b.toString))
       writer.parquet(path)
-    } finally prevTs match {
-      case Some(v) => spark.conf.set(tsConf, v)
-      case None => spark.conf.unset(tsConf)
     }
     val dataSchema = graft.T.parquet(spark, path).schema
     val fieldType = dataSchema.fields.map(f => f.name -> f.dataType).toMap
@@ -5409,10 +5356,7 @@ final case class GraftStorage(
   def writeZOrdered(df: DataFrame, path: String, zcols: Seq[String]): Unit = {
     require(zcols.nonEmpty, "writeZOrdered needs at least one column")
     val zExpr = zValueColumn(df, zcols)
-    val tsConf = "spark.sql.parquet.outputTimestampType"
-    val prevTs = spark.conf.getOption(tsConf)
-    spark.conf.set(tsConf, "TIMESTAMP_MICROS")
-    try {
+    withMicrosTimestamps {
       val writer = df.withColumn("__graft_z", zExpr)
         .repartitionByRange(df.sparkSession.conf
           .get("spark.sql.shuffle.partitions").toInt, col("__graft_z"))
@@ -5421,9 +5365,6 @@ final case class GraftStorage(
         .write.mode("overwrite")
       rowGroupBytes.foreach(b => writer.option("parquet.block.size", b.toString))
       writer.parquet(path)
-    } finally prevTs match {
-      case Some(v) => spark.conf.set(tsConf, v)
-      case None => spark.conf.unset(tsConf)
     }
     buildZoneMap(path, zcols)
   }
@@ -5498,19 +5439,6 @@ final case class GraftStorage(
     read(dst)
   }
 
-  /** Hadoop conf snapshot that survives task serialization: the
-    * Configuration class itself is not Serializable and Spark's
-    * wrapper is private — a plain Map restore covers every custom
-    * scheme/key the session registered (graftfs, etc.).
-    */
-  private def confSnapshot(): Map[String, String] = {
-    val c = spark.sparkContext.hadoopConfiguration
-    val it = c.iterator()
-    val b = Map.newBuilder[String, String]
-    while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-    b.result()
-  }
-
   /** K7 write half — SPLITTABLE compressed text: one `.bgz` (BGZF,
     * blocked gzip) shard per partition, written executor-parallel.
     * Unlike plain gzip, every ≤64 KiB block decompresses
@@ -5525,40 +5453,12 @@ final case class GraftStorage(
     require(df.schema.fields.length == 1 &&
       df.schema.fields(0).dataType == StringType,
       s"writeBgzfText wants one string column, got ${df.schema.simpleString}")
-    val confMap = confSnapshot()
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs0 = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs0.delete(dir, true)
     fs0.mkdirs(dir)
-    val out = path
-    val bi = blockInput
-    // ATTEMPT ISOLATION: each task attempt writes a uuid-unique shard
-    // (+ its `_bgzi` sidecar, named after it — the write-time block
-    // index, the reference's .sbi/.gzi shape,
-    // HeaderlessBamOutputFormat.java:111-130) and returns the name;
-    // the DRIVER keeps exactly the successful attempts' files and
-    // deletes the rest, so a zombie/speculative attempt can never
-    // tear a shard another attempt already finished. The sidecar is
-    // written AFTER its data file: a crash leaves at most a missing
-    // sidecar (reader falls back to the chain walk).
-    val winners = df.rdd.mapPartitionsWithIndex { (i, rows) =>
-      if (rows.isEmpty) Iterator.empty
-      else {
-        val conf = GraftStorage.restoreConfStatic(confMap)
-        val name =
-          f"part-$i%05d-${java.util.UUID.randomUUID.toString.take(8)}.bgz"
-        val p = new org.apache.hadoop.fs.Path(out, name)
-        val fs = p.getFileSystem(conf)
-        val w = new Bgzf.BlockWriter(fs.create(p, true), bi)
-        rows.foreach(r => w.write((r.getString(0) + "\n").getBytes("UTF-8")))
-        w.close()
-        val si = new java.io.DataOutputStream(fs.create(
-          new org.apache.hadoop.fs.Path(out, s"_bgzi/$name.bgzi"), true))
-        try Bgzf.writeBgzi(si, w.bytesWritten, w.blockIndex)
-        finally si.close()
-        Iterator.single(name)
-      }
-    }.collect().toSet
+    val winners = writeBgzfParts(df, path, blockInput, writeEof = true)
+    // keep exactly the successful attempts' shards, drop the rest
     fs0.listStatus(dir).toSeq
       .filter(f => f.isFile && f.getPath.getName.endsWith(".bgz") &&
         !winners(f.getPath.getName))
@@ -5567,6 +5467,41 @@ final case class GraftStorage(
         fs0.delete(new org.apache.hadoop.fs.Path(dir,
           s"_bgzi/${stray.getPath.getName}.bgzi"), false)
       }
+  }
+
+  /** ATTEMPT-ISOLATED BGZF part writer behind both BGZF sinks: each
+    * task attempt writes a uuid-unique `.bgz` part under `dir` (+ its
+    * `_bgzi/<name>.bgzi` sidecar — the write-time block index, the
+    * reference's .sbi/.gzi shape, HeaderlessBamOutputFormat.java:
+    * 111-130) and returns the name, so the DRIVER acts on exactly the
+    * successful attempts' parts and a zombie/speculative attempt can
+    * never tear a part another attempt already finished. The sidecar
+    * is written AFTER its data file: a crash leaves at most a missing
+    * sidecar (readers fall back to the chain walk). `writeEof = false`
+    * leaves the part terminator-less, for splicing.
+    */
+  private def writeBgzfParts(df: DataFrame, dir: String, blockInput: Int,
+      writeEof: Boolean): Set[String] = {
+    import org.apache.hadoop.fs.Path
+    val confMap = GraftStorage.confSnapshotStatic(
+      spark.sparkContext.hadoopConfiguration)
+    df.rdd.mapPartitionsWithIndex { (i, rows) =>
+      if (rows.isEmpty) Iterator.empty
+      else {
+        val name =
+          f"part-$i%05d-${java.util.UUID.randomUUID.toString.take(8)}.bgz"
+        val p = new Path(dir, name)
+        val fs = p.getFileSystem(GraftStorage.restoreConfStatic(confMap))
+        val w = new Bgzf.BlockWriter(fs.create(p, true), blockInput)
+        rows.foreach(r => w.write((r.getString(0) + "\n").getBytes("UTF-8")))
+        w.close(writeEof)
+        val si = new java.io.DataOutputStream(
+          fs.create(new Path(dir, s"_bgzi/$name.bgzi"), true))
+        try Bgzf.writeBgzi(si, w.bytesWritten, w.blockIndex)
+        finally si.close()
+        Iterator.single(name)
+      }
+    }.collect().toSet
   }
 
   /** K1 single-FILE BGZF sink — the reference's flagship sink shape
@@ -5590,35 +5525,16 @@ final case class GraftStorage(
     require(df.schema.fields.length == 1 &&
       df.schema.fields(0).dataType == StringType,
       s"writeSingleBgzf wants one string column, got ${df.schema.simpleString}")
-    val confMap = confSnapshot()
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val partsDir = new Path(path + ".parts")
     fs.delete(partsDir, true)
     fs.mkdirs(partsDir)
-    val outDir = partsDir.toString
-    val bi = blockInput
-    // attempt-isolated parts (same discipline as writeBgzfText): the
-    // driver splices ONLY the names the successful attempts returned,
-    // in partition order — a zombie attempt's torn part is never read
-    val winners = df.rdd.mapPartitionsWithIndex { (i, rows) =>
-      if (rows.isEmpty) Iterator.empty
-      else {
-        val c = GraftStorage.restoreConfStatic(confMap)
-        val name =
-          f"part-$i%05d-${java.util.UUID.randomUUID.toString.take(8)}"
-        val p = new Path(outDir, name)
-        val pfs = p.getFileSystem(c)
-        val w = new Bgzf.BlockWriter(pfs.create(p, true), bi)
-        rows.foreach(r => w.write((r.getString(0) + "\n").getBytes("UTF-8")))
-        w.close(writeEof = false) // terminator-less part
-        val si = new java.io.DataOutputStream(
-          pfs.create(new Path(outDir, s"$name.bgzi"), true))
-        try Bgzf.writeBgzi(si, w.bytesWritten, w.blockIndex)
-        finally si.close()
-        Iterator.single(name)
-      }
-    }.collect().toSet
+    // the driver splices ONLY the names the successful attempts
+    // returned, in partition order — a zombie attempt's torn part is
+    // never read
+    val winners = writeBgzfParts(df, partsDir.toString, blockInput,
+      writeEof = false)
     // driver splice: the winning parts in partition order + EOF marker
     val parts = fs.listStatus(partsDir).toSeq
       .filter(f => f.isFile && winners(f.getPath.getName))
@@ -5639,7 +5555,7 @@ final case class GraftStorage(
     // it. Two passes over the KB-scale part indexes so driver memory
     // is bounded by ONE part's index, never the whole file's.
     def partIndex(p: org.apache.hadoop.fs.FileStatus): Seq[(Long, Int)] = {
-      val in = fs.open(new Path(p.getPath.toString + ".bgzi"))
+      val in = fs.open(new Path(partsDir, s"_bgzi/${p.getPath.getName}.bgzi"))
       val idx = try Bgzf.readBgzi(in) finally in.close()
       idx.getOrElse(throw new IllegalStateException(
         s"missing part index for ${p.getPath}"))._2
@@ -5692,19 +5608,10 @@ final case class GraftStorage(
     // a directory of shards or ONE file (the single-file sink's
     // output) — both resolve to the same split machinery
     val st0 = fs.getFileStatus(dir)
-    val files =
-      (if (st0.isFile) Seq(st0)
-       else fs.listStatus(dir).toSeq)
-      .filter(f => f.isFile && f.getLen > 0 &&
-        f.getPath.getName.endsWith(".bgz") &&
-        !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-      .sortBy(_.getPath.toString)
-      .map(f => (f.getPath.toString, f.getLen))
-    val target = if (targetSplitBytes > 0) targetSplitBytes
-      else splitSize.getOrElse(
-        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-          spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")))
-    val confMap = confSnapshot()
+    val files = shardFiles(
+      if (st0.isFile) Seq(st0) else fs.listStatus(dir).toSeq, ".bgz")
+    val target = splitTarget(targetSplitBytes)
+    val confMap = GraftStorage.confSnapshotStatic(conf)
     val sc = spark.sparkContext
     val indexed = GraftStorage.onDriverPool(files) { case (f, len) =>
       Bgzf.sidecarBlocks(new Path(f), len, conf)
@@ -5722,10 +5629,34 @@ final case class GraftStorage(
       case ((f, len), Some(blocks)) => Bgzf.splitsOf(f, blocks, len, target)
       case ((f, _), None) => walked(f)
     }
-    val rdd = sc.parallelize(splits, math.max(1, splits.size))
-      .flatMap(s => Bgzf.linesForSplit(GraftStorage.restoreConfStatic(confMap), s))
-    spark.createDataset(rdd)(org.apache.spark.sql.Encoders.STRING)
+    spark.createDataset(sc.parallelize(splits, math.max(1, splits.size))
+      .flatMap(s => Bgzf.linesForSplit(GraftStorage.restoreConfStatic(confMap), s)))(
+      Encoders.STRING)
   }
+
+  /** Visible, non-empty files among `statuses` ending in one of
+    * `suffixes`, as (path, length) in path order — the shard set both
+    * BGZF readers plan over.
+    */
+  private def shardFiles(statuses: Seq[org.apache.hadoop.fs.FileStatus],
+      suffixes: String*): Seq[(String, Long)] =
+    statuses
+      .filter { f =>
+        val name = f.getPath.getName
+        f.isFile && f.getLen > 0 && suffixes.exists(name.endsWith) &&
+          !name.startsWith("_") && !name.startsWith(".")
+      }
+      .sortBy(_.getPath.toString)
+      .map(f => (f.getPath.toString, f.getLen))
+
+  /** Split size for the BGZF readers: the caller's target, else the
+    * facade's `splitSize`, else `spark.sql.files.maxPartitionBytes`.
+    */
+  private def splitTarget(targetSplitBytes: Long): Long =
+    if (targetSplitBytes > 0) targetSplitBytes
+    else splitSize.getOrElse(
+      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")))
 
   /** S7 sniffing complement — foreign `.gz` directories, the case the
     * decompress-once recipe (`ingestGzipText`) does not cover on FIRST
@@ -5751,20 +5682,11 @@ final case class GraftStorage(
       targetSplitBytes: Long = 0L): org.apache.spark.sql.Dataset[String] = {
     import org.apache.hadoop.fs.Path
     val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(dir).toSeq
-      .filter(f => f.isFile && f.getLen > 0 &&
-        (f.getPath.getName.endsWith(".gz") ||
-          f.getPath.getName.endsWith(".gzip") ||
-          f.getPath.getName.endsWith(".bgz")) &&
-        !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-      .sortBy(_.getPath.toString)
-      .map(f => (f.getPath.toString, f.getLen))
-    val target = if (targetSplitBytes > 0) targetSplitBytes
-      else splitSize.getOrElse(
-        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-          spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")))
-    val confMap = confSnapshot()
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val files = shardFiles(dir.getFileSystem(hconf).listStatus(dir).toSeq,
+      ".gz", ".gzip", ".bgz")
+    val target = splitTarget(targetSplitBytes)
+    val confMap = GraftStorage.confSnapshotStatic(hconf)
     val sc = spark.sparkContext
     // One distributed pass sniffs AND (for BGZF) walks the block
     // chain — header reads + seeks, metadata-rate; the collect is
@@ -5875,19 +5797,16 @@ private[graft] final class BloomStringAgg(expected: Long, fpp: Double)
 }
 
 /** Everything a pruning scan of one snapshot needs: the manifest's
-  * exact file list, its stats-in-log zone rows, the lazy bloom-in-log
-  * loaders, and the schema-in-log schema. Shared between
+  * exact file list, its stats-in-log zone rows, its bloom-in-log
+  * filters, and the schema-in-log schema. Shared between
   * `readVersionedPruned` (V1 relation) and the DSv2 catalog table's
   * ScanBuilder ([[GraftCatalog]]) so both read paths prune through
   * the identical sidecar machinery.
   */
 private[sources] final case class VersionedScanParts(
     files: Seq[String],
-    zones: ZoneSidecar,
-    hasBlooms: Boolean,
-    bloomMeta: () => Set[String],
-    bloomLoader: Set[String] =>
-      Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]],
+    zones: Sidecar.Zones,
+    blooms: Sidecar.Blooms,
     schema: org.apache.spark.sql.types.StructType,
     partCols: Seq[String] = Seq.empty,
     partKey: String => Option[Seq[Any]] = _ => None,

@@ -99,14 +99,14 @@ object MetaScale {
       .repartition(4).write.mode("overwrite").parquet(zdir)
     // warm-up load (datasource init, codegen, footer cache) so the
     // two timed loads compare column scoping, not first-call JIT
-    st.zoneSidecarFor(Seq(zdir)).zonesFor(Set("c0"))
+    st.zoneSidecarFor(Seq(zdir)).load(Set("c0"))
     val zsScoped = st.zoneSidecarFor(Seq(zdir))
     zsScoped.columns // resolve inventory outside the timed region
-    val (za, scopedMs) = timeMs(zsScoped.zonesFor(Set("c3")))
+    val (za, scopedMs) = timeMs(zsScoped.load(Set("c3")))
     require(za.size == n && za.values.forall(_.keySet == Set("c3")))
     val zsFull = st.zoneSidecarFor(Seq(zdir))
     zsFull.columns
-    val (zb, fullMs) = timeMs(zsFull.zonesFor(cols8.toSet))
+    val (zb, fullMs) = timeMs(zsFull.load(cols8.toSet))
     require(zb.size == n)
 
     println(

@@ -20,18 +20,16 @@ import org.apache.spark.sql.types.StructType
   * [min,max], and drops files no predicate can match — so pruning
   * composes with ANY later `.filter` on the DataFrame, exactly like
   * the reference's getSplits pruning responds to whatever traversal
-  * intervals the query carries. The zone sidecar is loaded once,
-  * driver-side (it is metadata, same as loading a .sbi/.tbi on the
-  * driver); at 100 TB it stays tiny — one row per data file.
+  * intervals the query carries. The sidecars are metadata read
+  * driver-side, same as loading a .sbi/.tbi on the driver.
   *
-  * Bloom sidecar rows are NOT loaded up front: filters are KB-sized
-  * per (file, column), so a 100k-file table with several indexed
-  * columns would pin GBs of driver memory for columns the query never
-  * touches. Instead `bloomLoader` is consulted LAZILY inside
-  * `listFiles`, scoped to exactly the columns the pushed data filters
-  * reference, and cached per column — driver memory is bounded by
-  * (files × FILTERED columns), and a query that filters no
-  * Bloom-indexed column never reads the sidecar at all.
+  * Both sidecars load LAZILY through one [[Sidecar]] provider: Bloom
+  * filters are KB-sized per (file, column), so a 100k-file table with
+  * several indexed columns would pin GBs of driver memory for columns
+  * the query never touches. Each load is scoped to exactly the
+  * columns the pushed data filters reference and cached per column —
+  * driver memory is bounded by (files × FILTERED columns), and a
+  * query that filters no indexed column never reads a sidecar at all.
   *
   * Filter evaluation is three-valued-conservative: a file is kept
   * unless the predicate PROVABLY matches no row, the same contract as
@@ -45,80 +43,35 @@ final class ZoneMapFileIndex(
       */
     roots: Seq[Path],
     dataSchema: Option[StructType],
-    /** lazy column-scoped zone-stats provider (normalized file path →
-      * zone column → (min, max) as EXTERNAL row values) — consulted
-      * only for the columns a pushed filter references, so plan-time
-      * driver bytes scale with the PREDICATE, not the table's full
-      * indexed-column inventory.
+    /** zone stats: normalized file path → zone column → (min, max) as
+      * EXTERNAL row values.
       */
-    zones: ZoneSidecar,
-    /** whether a `_bloom` sidecar exists, the lazy column-list thunk,
-      * and the lazy per-column loader: cols → normalized file path →
-      * col → Bloom filter (point-lookup pruning on columns the
-      * clustering order can't serve — no false negatives, so dropping
-      * a non-matching file is always sound). Both thunks fire only
-      * when a query actually filters — an unfiltered read touches the
-      * sidecar zero times.
+    zones: Sidecar.Zones,
+    /** Bloom filters: normalized file path → column → filter (point-
+      * lookup pruning on columns the clustering order can't serve —
+      * no false negatives, so dropping a non-matching file is always
+      * sound).
       */
-    hasBlooms: Boolean = false,
-    bloomMeta: () => Set[String] = () => Set.empty,
-    bloomLoader: Set[String] =>
-      Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]] =
-      _ => Map.empty)
+    blooms: Sidecar.Blooms)
   extends InMemoryFileIndex(session, roots, Map.empty, dataSchema) {
 
-  /** Test hook: the zone provider this index consults. */
-  private[graft] def zoneSidecarForTests: ZoneSidecar = zones
-
-  /** Indexed columns, resolved on first filtered consult. */
-  private lazy val bloomCols: Set[String] = bloomMeta()
-
-  /** Bloom rows materialized so far (column-scoped; grows only when a
-    * query filters a not-yet-loaded indexed column). Volatile: planner
-    * threads race benignly — a stale read only skips pruning for one
-    * plan (files kept conservatively), never prunes wrongly.
-    */
-  @volatile private var loadedBloomCols: Set[String] = Set.empty
-  @volatile private var blooms: Map[String, Blooms] = Map.empty
-
-  /** Test hook: which Bloom columns have been materialized so far. */
-  private[graft] def loadedBloomColumns: Set[String] = loadedBloomCols
-
-  private def bloomsFor(dataFilters: Seq[Expression]): Map[String, Blooms] = {
-    // a filtered column may be indexed as plain values, as tokenized
-    // text (`tokens:<col>` sidecar entries), or both — load whichever
-    // flavors exist for the referenced columns
-    val wanted = dataFilters.flatMap(_.references.map(_.name)).toSet
-      .flatMap((n: String) => Seq(n, GraftStorage.TokenBloomPrefix + n))
-      .intersect(bloomCols)
-    if (wanted.diff(loadedBloomCols).nonEmpty) synchronized {
-      // recompute under the lock (double-checked): two concurrently
-      // planned queries must not each run the sidecar-load job for
-      // the same columns
-      val missing = wanted.diff(loadedBloomCols)
-      if (missing.nonEmpty) {
-        val fresh = bloomLoader(missing)
-        blooms = (blooms.keySet ++ fresh.keySet).map { f =>
-          f -> (blooms.getOrElse(f, Map.empty) ++
-            fresh.getOrElse(f, Map.empty))
-        }.toMap
-        loadedBloomCols ++= missing
-      }
-    }
-    blooms
-  }
+  /** Test hooks: the sidecar providers this index consults. */
+  private[graft] def zoneSidecarForTests: Sidecar.Zones = zones
+  private[graft] def bloomSidecarForTests: Sidecar.Blooms = blooms
 
   override def listFiles(
       partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val base = super.listFiles(partitionFilters, dataFilters)
-    if (dataFilters.isEmpty || (zones.isEmpty && !hasBlooms)) base
+    if (dataFilters.isEmpty || (zones.isEmpty && blooms.isEmpty)) base
     else {
-      val bloomed = bloomsFor(dataFilters)
-      // zone rows load scoped to the referenced columns (an already-
-      // loaded superset serves from the provider's cache)
-      val zoneStats = zones.zonesFor(
-        dataFilters.flatMap(_.references.map(_.name)).toSet)
+      val refs = dataFilters.flatMap(_.references.map(_.name)).toSet
+      // a filtered column may be indexed as plain values, as tokenized
+      // text (`tokens:<col>` sidecar entries), or both — request
+      // whichever flavors exist for the referenced columns
+      val bloomed = blooms.load(
+        refs.flatMap(n => Seq(n, GraftStorage.TokenBloomPrefix + n)))
+      val zoneStats = zones.load(refs)
       base.map { pd =>
         PartitionDirectory(pd.values, pd.files.filter { f =>
           // sidecar maps key by the normalized FULL path — bare names
@@ -357,44 +310,45 @@ final class ZoneMapFileIndex(
     }
 }
 
-/** Lazy, column-scoped, caching zone-map provider — the zone half of
-  * the sidecar-loading contract the Bloom half has had since round 6:
-  * nothing is read until a query actually filters, and each load is
-  * scoped to exactly the requested columns, so plan-time driver bytes
-  * are bounded by files × FILTERED columns instead of the table's
-  * whole stats inventory (a 10⁶-file table with a dozen indexed
-  * columns must not pay an O(files × indexed-cols) driver
-  * materialization before reading a byte).
+/** Lazy, column-scoped, caching sidecar provider — ONE implementation
+  * behind both file-pruning sidecars: zone stats (`V = (min, max)` as
+  * external values) and Bloom filters (`V = BloomFilter`). Nothing is
+  * read until a query actually filters, and each load is scoped to
+  * exactly the requested columns, so plan-time driver bytes are
+  * bounded by files × FILTERED columns instead of the table's whole
+  * sidecar inventory (a 10⁶-file table with a dozen indexed columns
+  * must not pay an O(files × indexed-cols) driver materialization
+  * before reading a byte).
   *
-  * `meta` answers "which columns have zone stats" from metadata only
-  * (sidecar schema + partition spec — no stats rows read); `loader`
-  * materializes rows for a column subset. Loads accumulate: volatile
-  * double-checked like the Bloom cache — racing planner threads may
-  * redundantly keep files for one plan, never prune wrongly.
+  * `meta` answers "which columns does the sidecar cover"; `loader`
+  * materializes normalized file path → column → value for a column
+  * subset (it may return MORE columns than asked — a small Bloom
+  * sidecar loads whole in one job). Loads accumulate: volatile
+  * double-checked — racing planner threads may redundantly keep
+  * files for one plan, never prune wrongly.
   */
-final class ZoneSidecar(
+final class Sidecar[V](
     meta: () => Set[String],
-    loader: Set[String] => Map[String, Map[String, (Any, Any)]]) {
+    loader: Set[String] => Map[String, Map[String, V]]) {
 
-  /** Columns with zone stats (metadata-only; memoized). */
+  /** Columns the sidecar covers (memoized). */
   lazy val columns: Set[String] = meta()
 
   def isEmpty: Boolean = columns.isEmpty
   def nonEmpty: Boolean = !isEmpty
 
   @volatile private var loadedCols: Set[String] = Set.empty
-  @volatile private var cache: Map[String, Map[String, (Any, Any)]] =
-    Map.empty
+  @volatile private var cache: Map[String, Map[String, V]] = Map.empty
 
-  /** Test hook: which zone columns have been materialized so far. */
-  private[graft] def loadedZoneColumns: Set[String] = loadedCols
+  /** Test hook: which columns have been materialized so far. */
+  private[graft] def loadedColumns: Set[String] = loadedCols
 
-  /** Zone rows covering (at least) `cols ∩ columns` — loads only the
-    * not-yet-cached subset; a query referencing no indexed column
+  /** Rows covering (at least) `cols ∩ columns` — loads only the
+    * not-yet-cached subset; a query referencing no covered column
     * reads the sidecar zero times.
     */
-  def zonesFor(cols: Set[String]): Map[String, Map[String, (Any, Any)]] = {
-    val wanted = cols.intersect(columns)
+  def load(cols: Set[String]): Map[String, Map[String, V]] = {
+    val wanted = if (cols.isEmpty) cols else cols.intersect(columns)
     if (wanted.diff(loadedCols).nonEmpty) synchronized {
       // recompute under the lock (double-checked): two concurrently
       // planned queries must not each run the load job for the same
@@ -413,14 +367,10 @@ final class ZoneSidecar(
   }
 }
 
-object ZoneSidecar {
-  /** No zone stats at all (unindexed, unpartitioned table). */
-  val empty: ZoneSidecar =
-    new ZoneSidecar(() => Set.empty, _ => Map.empty)
+object Sidecar {
+  type Zones = Sidecar[(Any, Any)]
+  type Blooms = Sidecar[org.apache.spark.util.sketch.BloomFilter]
 
-  /** Wrap an already-materialized map (tests, synthetic fixtures). */
-  def eager(zones: Map[String, Map[String, (Any, Any)]]): ZoneSidecar =
-    new ZoneSidecar(
-      () => zones.valuesIterator.flatMap(_.keysIterator).toSet,
-      _ => zones)
+  /** No sidecar at all (unindexed table). */
+  def empty[V]: Sidecar[V] = new Sidecar[V](() => Set.empty, _ => Map.empty)
 }

@@ -129,7 +129,7 @@ final class ParquetTaskWriters(
 final class MetaAggScanBuilder(
     inner: ParquetScanBuilder,
     rowCount: () => Option[Long],
-    zones: graft.sources.ZoneSidecar,
+    zones: graft.sources.Sidecar.Zones,
     files: Seq[String],
     mayMatch: Option[(Map[String, (Any, Any)],
       Filter) => Boolean] = None,
@@ -265,7 +265,7 @@ final class MetaAggScanBuilder(
     // every file must carry usable bounds for the column ((null,null)
     // = a provably all-null file, which contributes nothing); the
     // sidecar load is scoped to exactly the aggregated column
-    val zmap = zones.zonesFor(Set(col))
+    val zmap = zones.load(Set(col))
     val perFile: Seq[Option[(Any, Any)]] = fileKeys.map(k =>
       zmap.get(k).flatMap(_.get(col)))
     if (perFile.exists(_.isEmpty)) return None
@@ -325,7 +325,7 @@ final class MetaAggScanBuilder(
 final class RuntimeFilteredParquetScan(
     val initial: ParquetScan,
     val files: Seq[String],
-    zones: graft.sources.ZoneSidecar,
+    zones: graft.sources.Sidecar.Zones,
     indexSchema: StructType,
     mayMatch: (Map[String, (Any, Any)], Filter) => Boolean,
     indexFactory: Option[Seq[String] =>
@@ -429,7 +429,7 @@ final class RuntimeFilteredParquetScan(
       // Bloom rejects per-key — loaded once, only for filtered columns
       val bloomed = blooms.map(_.load(v1)).getOrElse(Map.empty)
       // zone rows load scoped to the runtime predicate's columns
-      val zmap = zones.zonesFor(v1.flatMap(_.references).toSet)
+      val zmap = zones.load(v1.flatMap(_.references).toSet)
       val kept = files.filter { f =>
         val key = new org.apache.hadoop.fs.Path(f).toUri.getPath
         val stats = zmap.getOrElse(key, Map.empty)
@@ -454,17 +454,14 @@ final class RuntimeFilteredParquetScan(
   }
 }
 
-/** Bloom-in-log probing for RUNTIME predicates: `load` fetches the
-  * sidecar filters once for the columns the runtime filter touches
-  * (file → col → Bloom); `mayContain` rejects a file when a point
-  * predicate's key provably misses its Bloom. Conservative
-  * everywhere else — range predicates, unbloomeed columns, and
-  * unsupported types keep the file.
+/** Bloom-in-log probing for RUNTIME predicates: `load` reads the
+  * filters for the columns the runtime filter touches (file → col →
+  * Bloom) from the same sidecar cache plan-time pruning fills;
+  * `mayContain` rejects a file when a point predicate's key provably
+  * misses its Bloom. Conservative everywhere else — range predicates,
+  * unbloomed columns, and unsupported types keep the file.
   */
-final class RuntimeBloomProbe(
-    bloomMeta: () => Set[String],
-    bloomLoader: Set[String] =>
-      Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]]) {
+final class RuntimeBloomProbe(blooms: graft.sources.Sidecar.Blooms) {
 
   private def pointCols(f: Filter): Set[String] = f match {
     case org.apache.spark.sql.sources.And(l, r) =>
@@ -477,14 +474,8 @@ final class RuntimeBloomProbe(
   }
 
   def load(filters: Seq[Filter])
-      : Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]] = {
-    val want = filters.flatMap(pointCols).toSet
-    if (want.isEmpty) Map.empty
-    else {
-      val covered = want.intersect(bloomMeta())
-      if (covered.isEmpty) Map.empty else bloomLoader(covered)
-    }
-  }
+      : Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]] =
+    blooms.load(filters.flatMap(pointCols).toSet)
 
   private def probe(
       bl: Map[String, org.apache.spark.util.sketch.BloomFilter],
@@ -600,7 +591,7 @@ final class KeyGroupedParquetScan(
     val partCols: Seq[PartFieldInfo],
     keySchema: StructType,
     keyOf: String => Option[Seq[Any]],
-    zones: graft.sources.ZoneSidecar = graft.sources.ZoneSidecar.empty,
+    zones: graft.sources.Sidecar.Zones = graft.sources.Sidecar.empty,
     mayMatch: Option[(Map[String, (Any, Any)], Filter) => Boolean] = None,
     sortCols: Seq[String] = Seq.empty)
   extends Scan with org.apache.spark.sql.connector.read.Batch
@@ -737,7 +728,7 @@ final class KeyGroupedParquetScan(
       val mm = mayMatch.get
       // scoped load: the join keys' columns only (identity keys are
       // path-synthesized — zero sidecar bytes for a pure SPJ elision)
-      val zmap = zones.zonesFor(v1.flatMap(_.references).toSet)
+      val zmap = zones.load(v1.flatMap(_.references).toSet)
       keptFiles = groups.iterator.flatMap(_.fp.files).map(pathOf)
         .filter { f =>
           val stats = zmap.getOrElse(f, Map.empty)
@@ -807,11 +798,8 @@ object V2Bridge {
       spark: SparkSession,
       files: Seq[String],
       schema: StructType,
-      zones: graft.sources.ZoneSidecar,
-      hasBlooms: Boolean,
-      bloomMeta: () => Set[String],
-      bloomLoader: Set[String] =>
-        Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]],
+      zones: graft.sources.Sidecar.Zones,
+      blooms: graft.sources.Sidecar.Blooms,
       rowCount: () => Option[Long] = () => None,
       mayMatch: Option[(Map[String, (Any, Any)],
         Filter) => Boolean] = None,
@@ -821,15 +809,14 @@ object V2Bridge {
     def mkIndex(fs: Seq[String]): graft.sources.ZoneMapFileIndex =
       new graft.sources.ZoneMapFileIndex(classic(spark),
         fs.map(new org.apache.hadoop.fs.Path(_)), Some(schema), zones,
-        hasBlooms, bloomMeta, bloomLoader)
+        blooms)
     val index = mkIndex(files)
     new MetaAggScanBuilder(
       ParquetScanBuilder(classic(spark), index, schema, schema,
         CaseInsensitiveStringMap.empty()),
       rowCount, zones, files, mayMatch,
       Some(mkIndex(_)),
-      Some(new RuntimeBloomProbe(
-        if (hasBlooms) bloomMeta else () => Set.empty, bloomLoader)),
+      Some(new RuntimeBloomProbe(blooms)),
       partSpec, sortCols)
   }
 

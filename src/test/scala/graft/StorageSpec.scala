@@ -882,13 +882,13 @@ class StorageSpec extends AnyFunSuite {
     // no filter → the sidecar's filters are never materialized
     val plain = storage.readPruned(out)
     assert(plain.count() == li.count())
-    assert(indexOf(plain).loadedBloomColumns.isEmpty,
+    assert(indexOf(plain).bloomSidecarForTests.loadedColumns.isEmpty,
       "an unfiltered read must not load any bloom rows")
     // filter on ONE column → exactly that column's rows load
     val onekey = storage.readPruned(out).filter($"l_partkey" === 100)
     assert(onekey.count() == li.filter($"l_partkey" === 100).count())
-    assert(indexOf(onekey).loadedBloomColumns == Set("l_partkey"),
-      s"got ${indexOf(onekey).loadedBloomColumns}")
+    assert(indexOf(onekey).bloomSidecarForTests.loadedColumns == Set("l_partkey"),
+      s"got ${indexOf(onekey).bloomSidecarForTests.loadedColumns}")
     // pruning is live at 1k files: the point lookup scans few files
     onekey.collect()
     val scan = onekey.queryExecution.executedPlan.collectLeaves()
@@ -1828,6 +1828,26 @@ class StorageSpec extends AnyFunSuite {
     // must reject (nearly) all of the first commit's 6
     assert(scanned(st.readVersionedPruned(out)
       .filter($"o_custkey" === 7L)) < total)
+    // the Bloom size gate both ways: the small sidecar loads whole,
+    // a forced column-scoped load streams only the filtered column —
+    // same rows, same pruning
+    val wantRows = st.readVersioned(out).filter($"o_custkey" === 7L)
+      .collect().toSet
+    assert(st.readVersionedPruned(out).filter($"o_custkey" === 7L)
+      .collect().toSet == wantRows)
+    spark.conf.set("spark.graft.bloomSidecar.scopedLoadBytes", "0")
+    try {
+      assert(st.readVersionedPruned(out).filter($"o_custkey" === 7L)
+        .collect().toSet == wantRows)
+      assert(scanned(st.readVersionedPruned(out)
+        .filter($"o_custkey" === 7L)) < total)
+    } finally spark.conf.unset("spark.graft.bloomSidecar.scopedLoadBytes")
+    // small sidecar: the point lookup runs ONE sidecar load job (the
+    // column list falls out of it) plus the scan — no separate
+    // distinct() job for the column list, no schema-inference job
+    val lookupJobs = SparkTestSession.jobsOf(
+      st.readVersionedPruned(out).filter($"o_custkey" === 7L).collect())
+    assert(lookupJobs == 2, s"expected 1 Bloom load + 1 scan job, got $lookupJobs")
     // zone maps still prune the clustered column alongside
     assert(scanned(st.readVersionedPruned(out)
       .filter($"o_orderkey" < 100)) < total)

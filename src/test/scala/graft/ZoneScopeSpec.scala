@@ -100,26 +100,26 @@ class ZoneScopeSpec extends AnyFunSuite {
     // materializes zero zone rows
     val zs = st.zoneSidecarFor(Seq(dir))
     assert(zs.columns == Set("a", "b", "c", "d"))
-    assert(zs.loadedZoneColumns.isEmpty,
+    assert(zs.loadedColumns.isEmpty,
       "reading the column inventory must not load zone rows")
 
     // (b) a one-column consult loads exactly that column, for every
     // file
-    val za = zs.zonesFor(Set("a"))
-    assert(zs.loadedZoneColumns == Set("a"))
+    val za = zs.load(Set("a"))
+    assert(zs.loadedColumns == Set("a"))
     assert(za.size == 10000)
     assert(za.values.forall(_.keySet == Set("a")),
       "a scoped load must not materialize unrequested columns")
     assert(za("/synth/part-7.parquet")("a")._1.toString.startsWith("a7x"))
 
     // (c) consulting an unindexed column loads nothing new
-    zs.zonesFor(Set("nope"))
-    assert(zs.loadedZoneColumns == Set("a"))
+    zs.load(Set("nope"))
+    assert(zs.loadedColumns == Set("a"))
 
     // (d) widening to a second column loads only the delta; already-
     // loaded columns serve from cache
-    val zab = zs.zonesFor(Set("a", "b"))
-    assert(zs.loadedZoneColumns == Set("a", "b"))
+    val zab = zs.load(Set("a", "b"))
+    assert(zs.loadedColumns == Set("a", "b"))
     assert(zab.values.forall(_.keySet == Set("a", "b")))
 
     // (e) THE SCALE CLAIM: the load job's parquet scan materializes
@@ -129,7 +129,7 @@ class ZoneScopeSpec extends AnyFunSuite {
     // load's data bytes: 10⁶ files × a dozen indexed columns cannot
     // be dragged to the driver for a single-column predicate.
     val p1 = st.zoneSidecarFor(Seq(dir)); p1.columns
-    val (_, schemas) = scanSchemas(p1.zonesFor(Set("a")))
+    val (_, schemas) = scanSchemas(p1.load(Set("a")))
     val loadScans = schemas.filter(_.contains("file"))
     assert(loadScans.nonEmpty, s"no load scan captured: $schemas")
     assert(loadScans.forall(_ == Set("file", "a__min", "a__max")),
@@ -139,7 +139,7 @@ class ZoneScopeSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.zoneSidecar.scopedLoadBytes", "0")
     try {
       val ps = st.zoneSidecarFor(Seq(dir))
-      assert(ps.zonesFor(Set("a")) == za)
+      assert(ps.load(Set("a")) == za)
     } finally
       spark.conf.unset("spark.graft.zoneSidecar.scopedLoadBytes")
   }
@@ -166,14 +166,14 @@ class ZoneScopeSpec extends AnyFunSuite {
     // unfiltered read: zero zone rows materialized
     val plain = st.readPruned(out)
     assert(plain.count() == li.count())
-    assert(indexOf(plain).zoneSidecarForTests.loadedZoneColumns.isEmpty,
+    assert(indexOf(plain).zoneSidecarForTests.loadedColumns.isEmpty,
       "an unfiltered read must not load any zone rows")
 
     // a one-column range predicate loads exactly that column — and
     // still prunes files (the table is range-clustered on it)
     val q = st.readPruned(out).filter($"l_orderkey" < 1000)
     assert(q.count() == li.filter($"l_orderkey" < 1000).count())
-    assert(indexOf(q).zoneSidecarForTests.loadedZoneColumns ==
+    assert(indexOf(q).zoneSidecarForTests.loadedColumns ==
       Set("l_orderkey"))
     q.collect()
     val scan = q.queryExecution.executedPlan.collectLeaves()
@@ -227,7 +227,7 @@ class ZoneScopeSpec extends AnyFunSuite {
       append = false, statsCols = Seq("o_orderkey", "o_custkey"))
     val parts = st.versionedScanParts(out, 0L)
     assert(parts.zones.columns == Set("o_orderkey", "o_custkey"))
-    assert(parts.zones.loadedZoneColumns.isEmpty,
+    assert(parts.zones.loadedColumns.isEmpty,
       "versionedScanParts itself must not materialize stats rows")
     val q = st.readVersionedPruned(out).filter($"o_orderkey" < 500)
     assert(q.count() == o.filter($"o_orderkey" < 500).count())
