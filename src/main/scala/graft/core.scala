@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, TimestampType}
@@ -170,4 +170,35 @@ object LocalSession {
     .config("spark.sql.warehouse.dir", "/root/repo/target/warehouse")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+}
+
+/** The one driver for iterative algorithms (graph rounds, component
+  * labelling): state → `step` → observed `localCheckpoint` → `stop`.
+  * Each round checkpoints `step(state).observe(obs, metrics…)`
+  * eagerly, so lineage stays one round deep; `stop` then reads the
+  * round's metrics (`obs.get`, keyed by alias), which arrive with the
+  * checkpoint's own job — a stop test runs no job of its own. With no
+  * `metrics`, rounds run to `maxRounds` and `stop` is never called.
+  *
+  * Stop metrics must be duplicate-insensitive — a zero/non-zero count
+  * or a max: a recomputed stage can count a row twice, and only such
+  * a metric still gives the right answer.
+  */
+object Iterate {
+  /** The last state, the rounds run, and whether `stop` fired. */
+  final case class Result(state: DataFrame, rounds: Int, stopped: Boolean)
+
+  def apply(init: DataFrame, maxRounds: Int, metrics: Column*)(
+      step: DataFrame => DataFrame)(
+      stop: Map[String, Any] => Boolean): Result = {
+    var res = Result(init, 0, stopped = false)
+    while (res.rounds < maxRounds && !res.stopped) {
+      val obs = Observation()
+      val next = if (metrics.isEmpty) step(res.state)
+        else step(res.state).observe(obs, metrics.head, metrics.tail: _*)
+      res = Result(next.localCheckpoint(), res.rounds + 1,
+        metrics.nonEmpty && stop(obs.get))
+    }
+    res
+  }
 }

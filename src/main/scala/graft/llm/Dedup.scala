@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{QueryModule, T}
+import graft.{Iterate, QueryModule, T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -747,31 +747,29 @@ object Dedup extends QueryModule {
       .union(pairs.select($"doc_b".as("doc_a"), $"doc_a".as("doc_b")))
       .toDF("src", "dst")
       .localCheckpoint()
-    var labels = edges.select($"src".as("doc_id")).distinct()
+    val init = edges.select($"src".as("doc_id")).distinct()
       .withColumn("lbl", $"doc_id")
-      .localCheckpoint()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
+    // the node's own label row carries it as `prev`, so the round
+    // itself counts the labels that changed: the fixpoint test rides
+    // the round's checkpoint
+    def hop(labels: DataFrame): DataFrame = {
       val viaEdges = edges.join(labels, $"src" === $"doc_id")
         .select($"dst".as("doc_id"), $"lbl")
       val viaJump = labels.as("a")
         .join(labels.as("b"), $"a.lbl" === $"b.doc_id")
         .select($"a.doc_id", $"b.lbl".as("lbl"))
-      val next = labels.union(viaEdges).union(viaJump)
+      labels.select($"doc_id", $"lbl", $"lbl".as("prev"))
+        .union(viaEdges.union(viaJump)
+          .withColumn("prev", lit(null).cast("long")))
         .groupBy($"doc_id")
-        .agg(min($"lbl").as("lbl"))
-        .localCheckpoint()
-      converged = next.as("n")
-        .join(labels.as("o"), $"n.doc_id" === $"o.doc_id")
-        .filter($"n.lbl" =!= $"o.lbl")
-        .isEmpty
-      labels = next
-      iter += 1
+        .agg(min($"lbl").as("lbl"), max($"prev").as("prev"))
     }
-    if (!converged) throw new IllegalStateException(
+    val res = Iterate(init, maxIters,
+      count(when($"lbl" =!= $"prev", 1)).as("changed"))(hop)(
+      _("changed") == 0L)
+    if (!res.stopped) throw new IllegalStateException(
       s"dedup clustering did not converge in $maxIters rounds")
-    labels.select($"doc_id", $"lbl".as("cluster_id"))
+    res.state.select($"doc_id", $"lbl".as("cluster_id"))
       .orderBy($"doc_id")
   }
 

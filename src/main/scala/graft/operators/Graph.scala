@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryModule, T}
+import graft.{Iterate, QueryModule, T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * graph derived from the warehouse tables.
   *
   * Scale shape: the edge list is built ONCE (one distinct shuffle) and
-  * checkpointed; every iteration is exactly one join (edges ⋈ ranks,
+  * cached; every iteration is exactly one join (edges ⋈ ranks,
   * both keyed by src — at scale both pre-partitioned on the same key
   * so iterations reuse the partitioning) plus one aggregation on dst.
   * Ranks live in PPB (parts-per-billion) BIGINTs and every step is
@@ -26,11 +26,6 @@ object Graph extends QueryModule {
   private val Iters = 5
   private val Scale = 1000000000L // rank unit: parts-per-billion
 
-  /** Power iteration over (src, dst) BIGINT edges. Returns
-    * (node, rank_ppb) for every node appearing as a source or target.
-    * rank' = base + 0.85·(inflow + dangling/N), all in integer ppb:
-    * base = 0.15·Scale div N, per-edge contribution = rank div outdeg.
-    */
   /** Shuffle-partition count for the edge-set layout (matches the
     * session's shuffle.partitions so co-partitioned joins line up).
     */
@@ -55,26 +50,37 @@ object Graph extends QueryModule {
   private def graphParts(s: SparkSession, edgeEstimate: Long): Int =
     math.max(8, math.min(20000L, edgeEstimate / 1000000L).toInt)
 
-  private[graft] def pagerankEdges(s: SparkSession, edgesIn: DataFrame,
-      iters: Int = Iters): DataFrame =
-    pagerankEdges(s, edgesIn, iters, 0L)
+  /** The supplier↔part supply graph the graph queries run on: both
+    * directions of every lineitem supplier-part pair, node ids
+    * disambiguated by parity. Returns the edges and the iteration
+    * layout width, sized from a metadata-rate lineitem row count (see
+    * [[graphParts]]; the edge set is ≤ 2 pairs per lineitem row).
+    */
+  private def supplyGraph(s: SparkSession, dir: String): (DataFrame, Int) = {
+    import s.implicits._
+    val liRows = T.t(s, dir, "lineitem").count()
+    val li = T.t(s, dir, "lineitem")
+      .select(($"l_suppkey" * 2).as("s"), ($"l_partkey" * 2 + 1).as("p"))
+    (li.select($"s".as("src"), $"p".as("dst"))
+      .union(li.select($"p".as("src"), $"s".as("dst"))),
+      graphParts(s, liRows * 2))
+  }
 
-  /** `tolPpb` > 0 adds a CONVERGENCE STOP: after each round, one
-    * |V|-row join computes max|rank − prev| and the loop ends early
+  /** Power iteration over (src, dst) BIGINT edges. Returns
+    * (node, rank_ppb) for every node appearing as a source or target.
+    * rank' = base + 0.85·(inflow + dangling/N), all in integer ppb:
+    * base = 0.15·Scale div N, per-edge contribution = rank div outdeg.
+    *
+    * `tolPpb` > 0 adds a CONVERGENCE STOP: each round also joins the
+    * previous ranks and observes max|rank − prev|, and the loop ends
     * once it drops to the tolerance — power iteration's natural exit
     * for exploratory runs (the oracled query keeps tolPpb = 0: a
-    * fixed, engine-replayable iteration count). Every round ends in
-    * `localCheckpoint`, so lineage stays one round deep no matter
-    * how many rounds run — iteration k plans against materialized
-    * blocks, not k stacked joins (the lineage-truncation discipline;
-    * without it Catalyst re-analyzes a plan that doubles per round).
+    * fixed, engine-replayable iteration count). `parts` is the width
+    * of the cached edge and node layouts.
     */
   private[graft] def pagerankEdges(s: SparkSession, edgesIn: DataFrame,
-      iters: Int, tolPpb: Long): DataFrame =
-    pagerankEdges(s, edgesIn, iters, tolPpb, np(s))
-
-  private[graft] def pagerankEdges(s: SparkSession, edgesIn: DataFrame,
-      iters: Int, tolPpb: Long, parts: Int): DataFrame = {
+      iters: Int = Iters, tolPpb: Long = 0L,
+      parts: Int = np(SparkSession.active)): DataFrame = {
     import s.implicits._
     // Edges are partitioned ON THE JOIN KEY once and cached: an
     // InMemoryRelation advertises its outputPartitioning (a
@@ -86,9 +92,7 @@ object Graph extends QueryModule {
     val edges = edgesIn.select($"src", $"dst").distinct()
       .repartition(parts, $"src").cache()
     val nodes = edges.select($"src".as("node"))
-      .union(edges.select($"dst".as("node"))).distinct().localCheckpoint()
-    val n = nodes.count() // driver scalar: graph order, sets the base
-    val base = (Scale * 15 / 100) / n
+      .union(edges.select($"dst".as("node"))).distinct()
     val deg = edges.groupBy($"src".as("node")).agg(count(lit(1)).as("deg"))
     // The rank state CARRIES out-degree (null = dangling): the
     // per-iteration ranks⋈deg join and the dangling anti-join of the
@@ -100,56 +104,46 @@ object Graph extends QueryModule {
     // join is exchange-free on both sides.
     val nd = nodes.join(deg, Seq("node"), "left_outer")
       .repartition(parts, $"node").cache()
-    var state = nd.select($"node", lit(Scale / n).as("rank"), $"deg")
-      .localCheckpoint()
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
-      it += 1
+    // graph order N: a one-row aggregate, cross-joined (no driver count)
+    val init = nd.crossJoin(nd.agg(count(lit(1)).as("n")))
+      .select($"node", expr(s"$Scale div n").as("rank"), $"deg")
+    def round(state: DataFrame): DataFrame = {
       val contrib = edges
         .join(state.filter($"deg".isNotNull)
           .select($"node".as("src"), $"rank", $"deg"), "src")
         .select($"dst".as("node"), expr("rank div deg").as("c"))
         .groupBy($"node").agg(sum($"c").as("inflow"))
       // dangling nodes hold rank with nowhere to go: redistribute
-      // uniformly (one-row aggregate, cross-joined — no collect)
-      val dang = state.filter($"deg".isNull)
-        .agg(coalesce(sum($"rank"), lit(0L)).as("dsum"))
+      // uniformly. Every node is a state row, so N rides the same
+      // one-row aggregate (cross-joined — no collect)
+      val dang = state.agg(
+        coalesce(sum(when($"deg".isNull, $"rank")), lit(0L)).as("dsum"),
+        count(lit(1)).as("n"))
       val next = nd
         .join(contrib, Seq("node"), "left_outer")
         .crossJoin(dang)
-        .select($"node",
-          (lit(base) + expr(
-            s"(850 * (coalesce(inflow, 0L) + (dsum div $n))) div 1000"))
-            .as("rank"), $"deg")
-        .localCheckpoint()
-      if (tolPpb > 0) {
-        // one |V|-row join, driver receives ONE scalar
-        val delta = next.join(
-            state.select($"node", $"rank".as("prev")), "node")
-          .agg(max(abs($"rank" - $"prev"))).head().getLong(0)
-        converged = delta <= tolPpb
-      }
-      state = next
+        .select($"node", expr(s"${Scale * 15 / 100} div n + " +
+          "(850 * (coalesce(inflow, 0L) + (dsum div n))) div 1000")
+          .as("rank"), $"deg")
+      if (tolPpb > 0)
+        next.join(state.select($"node", $"rank".as("prev")), "node")
+      else next
     }
-    state.select($"node", $"rank".as("rank_ppb"))
+    val delta =
+      if (tolPpb > 0) Seq(max(abs($"rank" - $"prev")).as("delta")) else Nil
+    Iterate(init, iters, delta: _*)(round)(
+      _("delta").asInstanceOf[Long] <= tolPpb)
+      .state.select($"node", $"rank".as("rank_ppb"))
   }
 
-  /** PageRank over the supplier↔part supply graph (both directions of
-    * every lineitem supplier-part pair; node ids disambiguated by
-    * parity). Top-100 authority ranking — the "which sources matter"
-    * query a domain-mix curation step starts from.
+  /** PageRank over the supplier↔part supply graph. Top-100 authority
+    * ranking — the "which sources matter" query a domain-mix curation
+    * step starts from.
     */
   def pagerank(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // metadata-rate row count sizes the iteration layout (see
-    // graphParts); the edge set is ≤ 2 pairs per lineitem row
-    val liRows = T.t(s, dir, "lineitem").count()
-    val li = T.t(s, dir, "lineitem")
-      .select(($"l_suppkey" * 2).as("s"), ($"l_partkey" * 2 + 1).as("p"))
-    val edges = li.select($"s".as("src"), $"p".as("dst"))
-      .union(li.select($"p".as("src"), $"s".as("dst")))
-    pagerankEdges(s, edges, Iters, 0L, graphParts(s, liRows * 2))
+    val (edges, parts) = supplyGraph(s, dir)
+    pagerankEdges(s, edges, Iters, 0L, parts)
       .orderBy($"rank_ppb".desc, $"node")
       .limit(100)
   }
@@ -223,9 +217,9 @@ object Graph extends QueryModule {
   /** Multi-level BFS from one source over the supplier–part bipartite
     * graph: level-synchronous frontier expansion — each level is ONE
     * equi-join (frontier ⋈ edges) + an anti-join against the visited
-    * set, localCheckpoint'd so lineage stays flat across levels (the
-    * PageRank iteration discipline). The driver holds only the
-    * frontier-empty test (a count), never node data; levels run until
+    * set (the union of the checkpointed levels), one [[Iterate]] round
+    * per level. The driver holds only the frontier-empty test (the
+    * level's observed row count), never node data; levels run until
     * exhaustion, so distances are exact with no depth guess. The
     * oracle replays it as a DuckDB recursive CTE bounded at depth 10
     * with MIN(dist) per node — UNION-dedup keeps (node, dist) pairs
@@ -234,34 +228,24 @@ object Graph extends QueryModule {
     */
   def bfs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // metadata-rate row count sizes the level layout (see graphParts)
-    val liRows = T.t(s, dir, "lineitem").count()
-    val li = T.t(s, dir, "lineitem")
-      .select(($"l_suppkey" * 2).as("s"), ($"l_partkey" * 2 + 1).as("p"))
+    val (pairs, parts) = supplyGraph(s, dir)
     // src-partitioned cached edges: every level's frontier expansion
     // joins against the edge blocks in place; only the frontier
     // (≤|V| rows) shuffles per level
-    val edges = li.select($"s".as("src"), $"p".as("dst"))
-      .union(li.select($"p".as("src"), $"s".as("dst")))
-      .distinct().repartition(graphParts(s, liRows * 2), $"src").cache()
-    var visited = Seq((2L, 0)).toDF("node", "dist").localCheckpoint()
-    var frontier = visited
-    var level = 0
-    var done = false
-    while (!done) {
-      level += 1
-      val next = frontier.join(edges, $"node" === $"src")
+    val edges = pairs.distinct().repartition(parts, $"src").cache()
+    // the levels reached so far, newest first: the visited set is
+    // their union, so each level is checkpointed once, by its round
+    var levels = List.empty[DataFrame]
+    def expand(frontier: DataFrame): DataFrame = {
+      levels ::= frontier
+      frontier.join(edges, $"node" === $"src")
         .select($"dst".as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
-        .withColumn("dist", lit(level))
-        .localCheckpoint()
-      if (next.isEmpty) done = true
-      else {
-        visited = visited.unionByName(next).localCheckpoint()
-        frontier = next
-      }
+        .join(levels.reduce(_ unionByName _), Seq("node"), "left_anti")
+        .withColumn("dist", lit(levels.size))
     }
-    visited.groupBy($"dist")
+    Iterate(Seq((2L, 0)).toDF("node", "dist"), Int.MaxValue,
+      count(lit(1)).as("n"))(expand)(_("n") == 0L)
+    levels.reduce(_ unionByName _).groupBy($"dist")
       .agg(count(lit(1)).as("cnt"), min($"node").as("min_node"),
         max($"node").as("max_node"))
       .orderBy($"dist")
@@ -284,14 +268,8 @@ object Graph extends QueryModule {
     */
   def labelProp(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // metadata-rate row count sizes the voting layout (see graphParts)
-    val liRows = T.t(s, dir, "lineitem").count()
-    val li = T.t(s, dir, "lineitem")
-      .select(($"l_suppkey" * 2).as("s"), ($"l_partkey" * 2 + 1).as("p"))
-    val edges = li.select($"s".as("src"), $"p".as("dst"))
-      .union(li.select($"p".as("src"), $"s".as("dst")))
-    labelPropEdges(s, edges, LpIters, stopWhenStable = false,
-      graphParts(s, liRows * 2))
+    val (edges, parts) = supplyGraph(s, dir)
+    labelPropEdges(s, edges, LpIters, stopWhenStable = false, parts)
       .groupBy($"label")
       .agg(count(lit(1)).as("size"),
         min($"node").as("min_node"), max($"node").as("max_node"))
@@ -300,30 +278,23 @@ object Graph extends QueryModule {
 
   /** The voting loop behind [[labelProp]]: (node, label) after up to
     * `iters` synchronous rounds. `stopWhenStable` adds a CONVERGENCE
-    * STOP — after each round one |V|-row join counts changed labels
-    * and the loop exits at zero (exploratory runs; the oracled query
-    * keeps the fixed round count so DuckDB replays it exactly).
-    * Rounds end in `localCheckpoint`: lineage stays one round deep
-    * (the pagerank discipline).
+    * STOP — each round also joins the previous labels, observes the
+    * count of changed ones and the loop exits at zero (exploratory
+    * runs; the oracled query keeps the fixed round count so DuckDB
+    * replays it exactly).
     */
   private[graft] def labelPropEdges(s: SparkSession, edgesIn: DataFrame,
-      iters: Int, stopWhenStable: Boolean): DataFrame =
-    labelPropEdges(s, edgesIn, iters, stopWhenStable, np(s))
-
-  private[graft] def labelPropEdges(s: SparkSession, edgesIn: DataFrame,
-      iters: Int, stopWhenStable: Boolean, parts: Int): DataFrame = {
+      iters: Int, stopWhenStable: Boolean,
+      parts: Int = np(SparkSession.active)): DataFrame = {
     import s.implicits._
     // dst-partitioned cached edges: each voting round's label join
     // reads the edge blocks in place (the pagerank discipline — only
     // the |V|-row label side shuffles per round)
     val edges = edgesIn.select($"src", $"dst")
       .distinct().repartition(parts, $"dst").cache()
-    var labels = edges.select($"src".as("node")).distinct()
-      .select($"node", $"node".as("label")).localCheckpoint()
-    var it = 0
-    var stable = false
-    while (it < iters && !stable) {
-      it += 1
+    val init = edges.select($"src".as("node")).distinct()
+      .select($"node", $"node".as("label"))
+    def vote(labels: DataFrame): DataFrame = {
       // argmax via max(struct(c, -label)): (votes desc, label asc) as
       // TWO map-side-combined hash aggregates — a row_number window
       // would SORT every src partition per round (measured 1.5× the
@@ -334,17 +305,27 @@ object Graph extends QueryModule {
         .groupBy($"src")
         .agg(max(struct($"c", (-$"label").as("nl"))).as("w"))
         .select($"src".as("node"), (-$"w.nl").as("label"))
-        .localCheckpoint()
-      if (stopWhenStable) {
-        val changed = next.join(
-            labels.select($"node", $"label".as("prev")), "node")
-          .filter($"label" =!= $"prev").limit(1).count()
-        stable = changed == 0
-      }
-      labels = next
+      if (stopWhenStable) next.join(
+        labels.select($"node", $"label".as("prev")), Seq("node"), "left")
+      else next
     }
-    labels
+    val changed = if (stopWhenStable)
+      Seq(count(when($"label" =!= $"prev", 1)).as("changed")) else Nil
+    Iterate(init, iters, changed: _*)(vote)(_("changed") == 0L)
+      .state.select($"node", $"label")
   }
+
+  /** The DuckDB mirror of [[supplyGraph]]'s edges, deduplicated: the
+    * `pairs` and `e` CTEs every graph oracle but triangles starts from.
+    */
+  private val supplySql =
+    """pairs AS (
+      |  SELECT l_suppkey * 2 AS s, l_partkey * 2 + 1 AS p FROM lineitem),
+      |e AS (
+      |  SELECT DISTINCT src, dst FROM (
+      |    SELECT s AS src, p AS dst FROM pairs
+      |    UNION ALL
+      |    SELECT p AS src, s AS dst FROM pairs))""".stripMargin
 
   /** One unrolled LP voting round in DuckDB SQL. */
   private def lpIterSql(k: Int): String =
@@ -393,26 +374,14 @@ object Graph extends QueryModule {
 
   override def oracleSql: Map[String, String] = Map(
     "graph_labelprop" ->
-      s"""WITH pairs AS (
-         |  SELECT l_suppkey * 2 AS s, l_partkey * 2 + 1 AS p FROM lineitem),
-         |e AS (
-         |  SELECT DISTINCT src, dst FROM (
-         |    SELECT s AS src, p AS dst FROM pairs
-         |    UNION ALL
-         |    SELECT p AS src, s AS dst FROM pairs)),
+      s"""WITH $supplySql,
          |l0 AS (SELECT DISTINCT src AS node, src AS label FROM e),
          |${(1 to LpIters).map(lpIterSql).mkString(",\n")}
          |SELECT label, COUNT(*) AS size,
          |  MIN(node) AS min_node, MAX(node) AS max_node
          |FROM l$LpIters GROUP BY label ORDER BY label""".stripMargin,
     "graph_bfs" ->
-      """WITH RECURSIVE pairs AS (
-        |  SELECT l_suppkey * 2 AS s, l_partkey * 2 + 1 AS p FROM lineitem),
-        |e AS (
-        |  SELECT DISTINCT src, dst FROM (
-        |    SELECT s AS src, p AS dst FROM pairs
-        |    UNION ALL
-        |    SELECT p AS src, s AS dst FROM pairs)),
+      s"""WITH RECURSIVE $supplySql,
         |walk(node, dist) AS (
         |  SELECT CAST(2 AS BIGINT) AS node, 0 AS dist
         |  UNION
@@ -434,14 +403,7 @@ object Graph extends QueryModule {
         |JOIN e e2 ON e1.v = e2.u
         |JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v""".stripMargin,
     "graph_pagerank" ->
-      (s"""WITH pairs AS (
-          |  SELECT l_suppkey * 2 AS s, l_partkey * 2 + 1 AS p
-          |  FROM lineitem),
-          |e AS (
-          |  SELECT DISTINCT src, dst FROM (
-          |    SELECT s AS src, p AS dst FROM pairs
-          |    UNION ALL
-          |    SELECT p AS src, s AS dst FROM pairs)),
+      (s"""WITH $supplySql,
           |nodes AS (
           |  SELECT DISTINCT node FROM (
           |    SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),

@@ -4723,10 +4723,6 @@ final case class GraftStorage(
     n
   }
 
-  /** Time-travel read: the file set of `version` (default: latest).
-    * Resolves ONLY the manifest — later commits never perturb the
-    * snapshot.
-    */
   /** Resolve `AS OF <timestamp>` to a version: the newest manifest
     * whose publish time (the atomic rename's mtime — the commit
     * instant) is at or before `tsMillis`. Metadata-rate: one status
@@ -4915,6 +4911,10 @@ final case class GraftStorage(
     reader.parquet(files: _*)
   }
 
+  /** Time-travel read: the file set of `version` (default: latest).
+    * Resolves ONLY the manifest — later commits never perturb the
+    * snapshot.
+    */
   def readVersioned(path: String, version: Option[Long] = None,
       mergeSchema: Boolean = false): DataFrame = {
     val vs = listVersions(path)

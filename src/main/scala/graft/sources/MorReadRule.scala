@@ -15,7 +15,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   *
   * into
   *
-  *   `relation LEFT ANTI JOIN broadcast(distinct DV keys)`
+  *   `relation LEFT ANTI JOIN broadcast(DV key rows)`
   *
   * — one anti join per deletion-vector key column, the exact plan
   * shape `GraftStorage.readVersioned` produces on the V1 path, but

@@ -125,6 +125,25 @@ class DedupScaleSpec extends AnyFunSuite {
     assert(viaDist == viaDriver)
   }
 
+  test("distributed clustering: each round is one observed checkpoint " +
+      "and the fixpoint stops in the same round") {
+    import SparkTestSession.jobsAndActionsOf
+    // 30 chains of 20 edges: diameter 20
+    val pairs = spark.range(30L * 20L).select(
+      (($"id" / 20L).cast("long") * 1000L + ($"id" % 20L)).as("doc_a"),
+      (($"id" / 20L).cast("long") * 1000L + ($"id" % 20L) + 1L).as("doc_b"))
+    def run(maxIters: Int) =
+      llm.Dedup.dedupClustersDistributed(spark, pairs, maxIters).collect()
+    run(20)
+    val (jobs, actions) = jobsAndActionsOf(run(20))
+    // the edge checkpoint + 7 rounds + the collect; the 7th round is
+    // the one that changes no label, so a 6-round cap throws
+    assert(actions == 1 + 7 + 1)
+    assert(jobs <= 44, s"$jobs jobs (71 with a stop job per round)")
+    run(7)
+    intercept[IllegalStateException](run(6))
+  }
+
   test("lm_score absorbs a planted Zipfian hot bigram via AQE skew-split") {
     // SURVEY §8c#8's claim, now gated: 300k docs all sharing ONE hot
     // bigram skew the bigram⋈counts shuffle join onto a single key;

@@ -1,12 +1,58 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Iterative graph operators: integer-ppb PageRank fixpoint algebra. */
+/** Iterative graph operators: integer-ppb PageRank fixpoint algebra,
+  * and the one iteration driver they run on.
+  */
 class GraphSpec extends AnyFunSuite {
-  import SparkTestSession.{spark, SF}
+  import SparkTestSession.{jobsAndActionsOf, jobsOf, spark, SF}
   import spark.implicits._
+
+  test("Iterate: a round is one observed checkpoint, the stop test " +
+      "runs no job of its own") {
+    // {0,1,2} → {0,1} → {0} → {}: the third round is empty
+    val shrink = (df: DataFrame) =>
+      df.filter($"id" > 0).select(($"id" - 1).as("id"))
+    var res: Iterate.Result = null
+    val jobs = jobsOf {
+      res = Iterate(spark.range(3).toDF(), 10, count(lit(1)).as("n"))(
+        shrink)(_("n") == 0L)
+    }
+    assert(res.rounds == 3 && res.stopped)
+    assert(jobs == 3, "one checkpoint job per round and no stop job")
+    // with no metrics only the cap ends the loop
+    val capped = Iterate(spark.range(3).toDF(), 2)(shrink)(_ => true)
+    assert(capped.rounds == 2 && !capped.stopped)
+    assert(capped.state.as[Long].collect().toSeq == Seq(0L))
+  }
+
+  test("graph queries: every round is one observed checkpoint — pinned " +
+      "actions and fewer jobs") {
+    // warm: the cached edge layouts outlive a run, so the first run
+    // also pays their build; the pins are warm-run counts
+    def pins(q: => DataFrame): (Int, Int) = {
+      q.collect()
+      jobsAndActionsOf(q.collect())
+    }
+    val g = operators.Graph
+    // actions = the lineitem row count + one per round + the collect.
+    // bfs: levels 0..3, so the 4th round is the empty one that stops
+    val (bfsJobs, bfsActions) = pins(g.bfs(spark, SF))
+    assert(g.bfs(spark, SF).count() == 4)
+    assert(bfsActions == 1 + 4 + 1)
+    assert(bfsJobs <= 23, s"bfs: $bfsJobs jobs (31 with a stop job)")
+    // pagerank: 5 fixed rounds, N from a cross-joined aggregate
+    val (prJobs, prActions) = pins(g.pagerank(spark, SF))
+    assert(prActions == 1 + 5 + 1)
+    assert(prJobs <= 37, s"pagerank: $prJobs jobs (41 with a nodes count)")
+    // labelprop: 3 fixed rounds
+    val (lpJobs, lpActions) = pins(g.labelProp(spark, SF))
+    assert(lpActions == 1 + 3 + 1)
+    assert(lpJobs <= 18, s"labelprop: $lpJobs jobs (20 with a state seed)")
+  }
 
   test("pagerank: closed-form one-step trajectory incl. dangling " +
       "redistribution") {

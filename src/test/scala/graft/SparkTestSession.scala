@@ -1,6 +1,9 @@
 package graft
 
+import java.util.Properties
 import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -17,16 +20,24 @@ object SparkTestSession {
     * calling thread); a sentinel job flushes the listener queue, which
     * delivers in order.
     */
-  def jobsOf(body: => Unit): Int = {
+  def jobsOf(body: => Unit): Int = jobsAndActionsOf(body)._1
+
+  /** [[jobsOf]] and the Dataset actions behind those jobs: the
+    * distinct SQL executions they ran under, so one action (a collect,
+    * a count, a localCheckpoint) counts once with every AQE stage or
+    * broadcast job it submits.
+    */
+  def jobsAndActionsOf(body: => Unit): (Int, Int) = {
     val sc = spark.sparkContext
     val group = s"jobs-of-${System.nanoTime()}"
-    val seen = new ConcurrentLinkedQueue[String]()
+    val seen = new ConcurrentLinkedQueue[Properties]()
+    def isSentinel(p: Properties) =
+      p.getProperty("spark.job.description") == "sentinel"
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
-          .filter(_ == group)
-          .foreach(_ => seen.add(Option(e.properties
-            .getProperty("spark.job.description")).getOrElse("")))
+        Option(e.properties)
+          .filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(seen.add)
     }
     sc.addSparkListener(l)
     try {
@@ -37,10 +48,13 @@ object SparkTestSession {
         sc.parallelize(Seq(1), 1).count()
       } finally sc.clearJobGroup()
       val deadline = System.nanoTime() + 30e9.toLong
-      while (!seen.contains("sentinel") && System.nanoTime() < deadline)
+      while (!seen.asScala.exists(isSentinel) && System.nanoTime() < deadline)
         Thread.sleep(10)
-      assert(seen.contains("sentinel"), "listener never saw the sentinel")
-      seen.size - 1
+      assert(seen.asScala.exists(isSentinel),
+        "listener never saw the sentinel")
+      val jobs = seen.asScala.filterNot(isSentinel)
+      (jobs.size, jobs.flatMap(p =>
+        Option(p.getProperty("spark.sql.execution.id"))).toSet.size)
     } finally sc.removeSparkListener(l)
   }
 }
