@@ -70,16 +70,11 @@ object Graph extends QueryModule {
     * (node, rank_ppb) for every node appearing as a source or target.
     * rank' = base + 0.85·(inflow + dangling/N), all in integer ppb:
     * base = 0.15·Scale div N, per-edge contribution = rank div outdeg.
-    *
-    * `tolPpb` > 0 adds a CONVERGENCE STOP: each round also joins the
-    * previous ranks and observes max|rank − prev|, and the loop ends
-    * once it drops to the tolerance — power iteration's natural exit
-    * for exploratory runs (the oracled query keeps tolPpb = 0: a
-    * fixed, engine-replayable iteration count). `parts` is the width
-    * of the cached edge and node layouts.
+    * `iters` fixed rounds (an engine-replayable trajectory); `parts`
+    * is the width of the cached edge and node layouts.
     */
   private[graft] def pagerankEdges(s: SparkSession, edgesIn: DataFrame,
-      iters: Int = Iters, tolPpb: Long = 0L,
+      iters: Int = Iters,
       parts: Int = np(SparkSession.active)): DataFrame = {
     import s.implicits._
     // Edges are partitioned ON THE JOIN KEY once and cached: an
@@ -119,20 +114,13 @@ object Graph extends QueryModule {
       val dang = state.agg(
         coalesce(sum(when($"deg".isNull, $"rank")), lit(0L)).as("dsum"),
         count(lit(1)).as("n"))
-      val next = nd
-        .join(contrib, Seq("node"), "left_outer")
+      nd.join(contrib, Seq("node"), "left_outer")
         .crossJoin(dang)
         .select($"node", expr(s"${Scale * 15 / 100} div n + " +
           "(850 * (coalesce(inflow, 0L) + (dsum div n))) div 1000")
           .as("rank"), $"deg")
-      if (tolPpb > 0)
-        next.join(state.select($"node", $"rank".as("prev")), "node")
-      else next
     }
-    val delta =
-      if (tolPpb > 0) Seq(max(abs($"rank" - $"prev")).as("delta")) else Nil
-    Iterate(init, iters, delta: _*)(round)(
-      _("delta").asInstanceOf[Long] <= tolPpb)
+    Iterate(init, iters)(round)(_ => false)
       .state.select($"node", $"rank".as("rank_ppb"))
   }
 
@@ -143,7 +131,7 @@ object Graph extends QueryModule {
   def pagerank(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (edges, parts) = supplyGraph(s, dir)
-    pagerankEdges(s, edges, Iters, 0L, parts)
+    pagerankEdges(s, edges, Iters, parts)
       .orderBy($"rank_ppb".desc, $"node")
       .limit(100)
   }
@@ -269,23 +257,19 @@ object Graph extends QueryModule {
   def labelProp(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (edges, parts) = supplyGraph(s, dir)
-    labelPropEdges(s, edges, LpIters, stopWhenStable = false, parts)
+    labelPropEdges(s, edges, LpIters, parts)
       .groupBy($"label")
       .agg(count(lit(1)).as("size"),
         min($"node").as("min_node"), max($"node").as("max_node"))
       .orderBy($"label")
   }
 
-  /** The voting loop behind [[labelProp]]: (node, label) after up to
-    * `iters` synchronous rounds. `stopWhenStable` adds a CONVERGENCE
-    * STOP — each round also joins the previous labels, observes the
-    * count of changed ones and the loop exits at zero (exploratory
-    * runs; the oracled query keeps the fixed round count so DuckDB
-    * replays it exactly).
+  /** The voting loop behind [[labelProp]]: (node, label) after
+    * `iters` synchronous rounds — a fixed count, so DuckDB replays it
+    * exactly.
     */
   private[graft] def labelPropEdges(s: SparkSession, edgesIn: DataFrame,
-      iters: Int, stopWhenStable: Boolean,
-      parts: Int = np(SparkSession.active)): DataFrame = {
+      iters: Int, parts: Int = np(SparkSession.active)): DataFrame = {
     import s.implicits._
     // dst-partitioned cached edges: each voting round's label join
     // reads the edge blocks in place (the pagerank discipline — only
@@ -299,19 +283,14 @@ object Graph extends QueryModule {
       // TWO map-side-combined hash aggregates — a row_number window
       // would SORT every src partition per round (measured 1.5× the
       // whole query's cost at sf0.1)
-      val next = edges
+      edges
         .join(labels.select($"node".as("dst"), $"label"), "dst")
         .groupBy($"src", $"label").agg(count(lit(1)).as("c"))
         .groupBy($"src")
         .agg(max(struct($"c", (-$"label").as("nl"))).as("w"))
         .select($"src".as("node"), (-$"w.nl").as("label"))
-      if (stopWhenStable) next.join(
-        labels.select($"node", $"label".as("prev")), Seq("node"), "left")
-      else next
     }
-    val changed = if (stopWhenStable)
-      Seq(count(when($"label" =!= $"prev", 1)).as("changed")) else Nil
-    Iterate(init, iters, changed: _*)(vote)(_("changed") == 0L)
+    Iterate(init, iters)(vote)(_ => false)
       .state.select($"node", $"label")
   }
 

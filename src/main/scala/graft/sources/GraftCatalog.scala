@@ -922,10 +922,9 @@ private[sources] final class GraftBatchWrite(
     }
     // schema drift gate on append (same check as writeVersioned)
     if (mode == GraftCommitMode.Append && baseVersion.nonEmpty)
-      GraftStorage.mergeSchemaJsons(
-        store.manifestEntries(path, baseVersion.get).collect {
-          case e if e.startsWith("H\t") => e.drop(2)
-        } :+ physicalSchema.json)
+      GraftStorage.requireSchemaMerges(
+        store.manifestEntries(path, baseVersion.get) :+
+          s"H\t${physicalSchema.json}")
     val tallies = messages.collect { case m: GraftCommitMessage => m }
       .toSeq.flatMap(_.files)
     val fresh = tallies.map(t => new Path(t._1).toUri.getPath)

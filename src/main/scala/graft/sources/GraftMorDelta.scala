@@ -188,9 +188,6 @@ private[sources] final class GraftMorDeltaBatchWrite(
   @transient private val st = GraftStorage(spark)
   private val commitDir: Path =
     st.newCommitDir(new Path(op.path), op.version + 1)
-  private val maxDvBytes: Long =
-    spark.conf.getOption("spark.graft.mor.maxDvBytes")
-      .map(_.toLong).getOrElse(64L << 20)
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DeltaWriterFactory =
@@ -200,7 +197,7 @@ private[sources] final class GraftMorDeltaBatchWrite(
         new ParquetTaskWriters(spark, rowSchema, commitDir.toString),
         rowSchema.length,
         GraftWrites.writeKeysFor(op.partCols, rowSchema)),
-      rowIdSchema.head.dataType, op.key, maxDvBytes)
+      rowIdSchema.head.dataType, op.key, st.maxDvBytes)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val s = SparkSession.active
@@ -232,22 +229,8 @@ private[sources] final class GraftMorDeltaBatchWrite(
         val (sc, bc) = store.priorSidecarCoverage(op.path)
         def isCol(c: String) =
           rowSchema.fieldNames.exists(_.equalsIgnoreCase(c))
-        val scK = sc.filter(isCol)
-        val bcK = bc.filter(c =>
-          isCol(c.stripPrefix(GraftStorage.TokenBloomPrefix)))
-        val sLine =
-          if (scK.isEmpty) Seq.empty
-          else {
-            store.buildZoneMap(commitDir.toString, scK)
-            Seq(s"S\t${new Path(commitDir, "_zonemap").toUri.getPath}")
-          }
-        val bLine =
-          if (bcK.isEmpty) Seq.empty
-          else {
-            store.buildBloomIndex(commitDir.toString, bcK)
-            Seq(s"B\t${new Path(commitDir, "_bloom").toUri.getPath}")
-          }
-        sLine ++ bLine
+        store.sidecarLines(commitDir, sc.filter(isCol), bc.filter(c =>
+          isCol(c.stripPrefix(GraftStorage.TokenBloomPrefix))))
       } catch { case e: Throwable => fs.delete(commitDir, true); throw e }
     val dvLines: Seq[String] =
       if (keys.isEmpty) Seq.empty
@@ -258,13 +241,9 @@ private[sources] final class GraftMorDeltaBatchWrite(
         val w = new ParquetTaskWriters(s, dvSchema, dvDir.toString)
           .session(0, 0).open("")
         try { keys.forEach(k => w.write(k)) } finally w.close()
-        val dvStatus = fs.listStatus(dvDir).toSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        store.requireDvSmall(dvStatus.map(_.getLen).sum,
-          { fs.delete(commitDir, true); () },
+        store.dvLines(fs, commitDir, dvDir, op.key,
           "row-level SQL (merge-on-read)",
           "REORG/compactVersioned + a copy-on-write table mode")
-        dvStatus.map(f => s"D\t${op.key}\t${f.getPath.toUri.getPath}")
       }
     // D lines FIRST, fresh file lines after — the sequence rule makes
     // this commit delete the keys' old copies and keep its own rows.
@@ -282,45 +261,11 @@ private[sources] final class GraftMorDeltaBatchWrite(
       (if (fresh.nonEmpty) Seq(s"H\t${rowSchema.json}") else Seq.empty)
     val removals =
       if (fresh.nonEmpty && op.sortCols.isEmpty) Seq("O\t") else Seq.empty
-    // OPTIMISTIC REBASE-AND-RETRY: a table that advanced past the
-    // pinned snapshot does NOT abort outright — if every interleaved
-    // commit is a DISJOINT append (no removed files, no DV drift, no
-    // appended row carrying a key this command deletes), the delta
-    // commit replays verbatim on the new head: the DV still targets
-    // exactly the same old copies (sequence rule — interleaved files
-    // land BEFORE our D lines, so the key-overlap check is what makes
-    // this sound) and the fresh files are new either way. True
-    // conflicts (interleaved DML/compaction, or an append re-using a
-    // deleted key) still abort loudly — the Delta/Iceberg
-    // serializable-isolation validation for row-level commits.
-    // NO cleanup handle rides the publish: a lost put-if-absent race
-    // must leave the staged files intact for the rebase retry —
-    // passing commitDir there would delete the data the retried
-    // manifest lines reference (cleanup happens on terminal failure
-    // only). Validation is the shared row-level disjointness check
-    // ([[GraftStorage.validateDisjointRebase]] — the DV delete hooks
-    // run the identical one).
-    var attempt = 0
-    while (true) {
-      val head = store.listVersions(op.path).last
-      if (head != op.version)
-        try store.validateDisjointRebase(op.path, op.version, head,
-          if (keys.isEmpty) None
-          else Some(op.key -> dvLines.map(_.split('\t')(2))),
-          "this row-level command")
-        catch { case e: Throwable => fs.delete(commitDir, true); throw e }
-      try {
-        store.publishManifestDelta(fs, new Path(op.path), head + 1,
-          removals, additions, None)
-        return
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > 5) { fs.delete(commitDir, true); throw e }
-        case scala.util.control.NonFatal(e) =>
-          fs.delete(commitDir, true); throw e
-      }
-    }
+    // a table that advanced past the pinned snapshot rebases when the
+    // interleaved commits are disjoint appends (the Delta/Iceberg
+    // serializable-isolation validation for row-level commits)
+    store.publishRebasing(fs, op.path, commitDir, op.version, removals,
+      additions, "this row-level command"): Unit
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

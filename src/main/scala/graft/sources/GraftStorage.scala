@@ -1012,38 +1012,42 @@ final case class GraftStorage(
       mapping: Option[(Map[String, String], Seq[String])],
       statsCols: Seq[String], bloomCols: Seq[String],
       checkMorKey: Boolean): (Seq[String], Seq[String]) = {
-    import org.apache.hadoop.fs.Path
-    // v2 committer — same safety argument as writeCommitData: the
-    // version-private dir only becomes visible via the manifest
-    toWrite.write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .parquet(commitDir.toString)
-    validateCommitDir(path, commitDir, fs)
+    val freshFiles = writeCommitData(toWrite, commitDir, Nil, fs)
+    validateCommitFiles(path, Seq(commitDir.toString), commitDir, fs)
     if (checkMorKey)
       requireMorKeyNonNull(path, toWrite.schema, commitDir, fs)
-    val statsColsP = statsCols.map(physicalNameOf(_, mapping))
     val bloomColsP = bloomCols.map { c =>
       if (c.startsWith(GraftStorage.TokenBloomPrefix))
         GraftStorage.TokenBloomPrefix + physicalNameOf(
           c.stripPrefix(GraftStorage.TokenBloomPrefix), mapping)
       else physicalNameOf(c, mapping)
     }
-    val stats: Seq[String] =
-      if (statsColsP.isEmpty) Seq.empty
+    (freshFiles, sidecarLines(commitDir,
+      statsCols.map(physicalNameOf(_, mapping)), bloomColsP))
+  }
+
+  /** The `S`/`B` lines of a commit's own sidecars: builds the zone map
+    * over `statsCols` and the Bloom index over `bloomCols` (physical
+    * names; either may be empty, and then its line is absent) under
+    * `commitDir`. Every commit that indexes its fresh files — appends,
+    * maintenance rewrites, the SQL delta write — forms them here.
+    */
+  private[sources] def sidecarLines(commitDir: org.apache.hadoop.fs.Path,
+      statsCols: Seq[String], bloomCols: Seq[String]): Seq[String] = {
+    import org.apache.hadoop.fs.Path
+    val stats =
+      if (statsCols.isEmpty) Seq.empty
       else {
-        buildZoneMap(commitDir.toString, statsColsP)
+        buildZoneMap(commitDir.toString, statsCols)
         Seq(s"S\t${new Path(commitDir, "_zonemap").toUri.getPath}")
       }
-    val blooms: Seq[String] =
-      if (bloomColsP.isEmpty) Seq.empty
+    val blooms =
+      if (bloomCols.isEmpty) Seq.empty
       else {
-        buildBloomIndex(commitDir.toString, bloomColsP)
+        buildBloomIndex(commitDir.toString, bloomCols)
         Seq(s"B\t${new Path(commitDir, "_bloom").toUri.getPath}")
       }
-    val freshFiles = fs.listStatus(commitDir).toSeq
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toUri.getPath)
-    (freshFiles, stats ++ blooms)
+    stats ++ blooms
   }
 
   /** [[writeVersioned]] plus the maintenance-only arguments. */
@@ -1077,9 +1081,7 @@ final case class GraftStorage(
     val dir = new Path(path)
     val fs = dir.getFileSystem(conf)
     val vs = listVersions(path)
-    requireBase.foreach(b => require(vs.lastOption.contains(b),
-      s"concurrent commit advanced $path past version $b while a " +
-        "maintenance rewrite was reading it — re-run the rewrite"))
+    requireAtBase(path, vs, requireBase)
     require(!append || vs.nonEmpty,
       s"append to $path requires an existing version")
     // mapped table (RENAME/DROP history): logical→physical BEFORE
@@ -1096,10 +1098,8 @@ final case class GraftStorage(
     // H lines alone, and it must not poison the log (readers would
     // die on every subsequent resolve)
     if (append)
-      GraftStorage.mergeSchemaJsons(
-        manifestEntries(path, vs.last).collect {
-          case e if e.startsWith("H\t") => e.drop(2)
-        } :+ dfP.schema.json)
+      GraftStorage.requireSchemaMerges(
+        manifestEntries(path, vs.last) :+ s"H\t${dfP.schema.json}")
     GraftStorage.requireSortCols(dfP.schema, sortedByP)
     val n: Long = vs.lastOption.map(_ + 1).getOrElse(0L)
     val commitDir = newCommitDir(dir, n)
@@ -1109,12 +1109,12 @@ final case class GraftStorage(
     // appends AND overwrites enforce the identifier contract (the
     // mergeVersionedMor path checks its own input row-by-row —
     // morKey nonEmpty skips the re-read)
-    val (freshFiles, sidecarLines) = stageAppendData(toWrite, path,
+    val (freshFiles, sidecars) = stageAppendData(toWrite, path,
       commitDir, fs, mapping, statsCols, bloomCols,
       checkMorKey = morKey.isEmpty)
     // MoR upsert: the commit's own keys become a DV over everything
     // OLDER (D lines precede the fresh file lines — sequence rule)
-    val dvLines: Seq[String] = morKeyP match {
+    val dv: Seq[String] = morKeyP match {
       case Some(k) =>
         val dvDir = new Path(commitDir, "_dv")
         // keys re-read from the COMMITTED files, not the input plan:
@@ -1131,12 +1131,8 @@ final case class GraftStorage(
               "key-based deletion vector cannot delete the old copy; " +
               "route NULL-keyed rows through mergeVersioned")
         }
-        val dvStatus = fs.listStatus(dvDir).toSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        requireDvSmall(dvStatus.map(_.getLen).sum,
-          { fs.delete(commitDir, true); () },
+        dvLines(fs, commitDir, dvDir, k,
           "mergeVersionedMor", "mergeVersioned (copy-on-write)")
-        dvStatus.map(f => s"D\t$k\t${f.getPath.toUri.getPath}")
       case None => Seq.empty
     }
     val order = GraftStorage.oLine(sortedByP, append,
@@ -1145,7 +1141,7 @@ final case class GraftStorage(
     // readers merge H lines by name instead of opening footers. The
     // json is one line for any schema our writers produce (Spark's
     // DataType.json emits no newlines).
-    val fresh = dvLines ++ freshFiles ++ sidecarLines ++ order ++
+    val fresh = dv ++ freshFiles ++ sidecars ++ order ++
       txn.map(t => s"T\t${t._1}\t${t._2}").toSeq ++ carryLines ++
       rowCountLines(freshFiles) ++ Seq(s"H\t${dfP.schema.json}")
     // append inherits the RAW prior entries via a LOG-STRUCTURED
@@ -1164,6 +1160,16 @@ final case class GraftStorage(
     else publishManifest(fs, dir, n, fresh, Some(commitDir))
     n
   }
+
+  /** The maintenance-rewrite base gate ([[commitVersioned]]'s
+    * `requireBase`): fail LOUDLY when the log's head `vs` moved past
+    * the version the rewrite read.
+    */
+  private def requireAtBase(path: String, vs: Seq[Long],
+      base: Option[Long]): Unit =
+    base.foreach(b => require(vs.lastOption.contains(b),
+      s"concurrent commit advanced $path past version $b while a " +
+        "maintenance rewrite was reading it — re-run the rewrite"))
 
   /** PARTITIONED versioned write — the storage-partitioned-join
     * foundation (Iceberg-style IDENTITY partitioning): rows land in
@@ -1206,9 +1212,7 @@ final case class GraftStorage(
     val dir = new Path(path)
     val fs = dir.getFileSystem(conf)
     val vs = listVersions(path)
-    requireBase.foreach(b => require(vs.lastOption.contains(b),
-      s"concurrent commit advanced $path past version $b while a " +
-        "maintenance rewrite was reading it — re-run the rewrite"))
+    requireAtBase(path, vs, requireBase)
     require(!append || vs.nonEmpty,
       s"append to $path requires an existing version")
     if (append) {
@@ -1219,10 +1223,8 @@ final case class GraftStorage(
           partCols.map(GraftStorage.parsePartField),
         s"append partitioned by $partCols but the table is " +
           s"partitioned by $prior")
-      GraftStorage.mergeSchemaJsons(
-        manifestEntries(path, vs.last).collect {
-          case e if e.startsWith("H\t") => e.drop(2)
-        } :+ df.schema.json)
+      GraftStorage.requireSchemaMerges(
+        manifestEntries(path, vs.last) :+ s"H\t${df.schema.json}")
     }
     val n: Long = vs.lastOption.map(_ + 1).getOrElse(0L)
     val commitDir = newCommitDir(dir, n)
@@ -1239,10 +1241,7 @@ final case class GraftStorage(
     // Skew caveat (documented Iceberg hash-mode property): one giant
     // day funnels into one write task — pre-split such layouts with
     // an extra bucket(n, col) partition field.
-    val keyCols = partCols.map { sp =>
-      val f = GraftStorage.parsePartField(sp)
-      f.keyExpr(df.schema(f.col).dataType)
-    }
+    val keyCols = GraftStorage.partKeys(partCols, df.schema)
     val distributed = df.repartition(writeTasks(df), keyCols: _*)
     // sort by (layout keys, sortedBy) within each task: rows of one
     // partition dir are then contiguous AND internally ordered, so
@@ -1402,8 +1401,8 @@ final case class GraftStorage(
   /** Write one commit's data files honoring the table's partition
     * layout — identity `__gp_` dirs when `partCols` is non-empty,
     * flat otherwise — and return the normalized fresh file list.
-    * EVERY Scala-API commit surface that rewrites data (partitioned
-    * create/append, copy-on-write DELETE/UPDATE, MERGE) goes through
+    * EVERY Scala-API commit surface that writes data (appends,
+    * partitioned create/append, the partial rewrites) goes through
     * here, so a partitioned table's replacement files stay key-pure
     * and the storage-partitioned join survives maintenance and DML.
     */
@@ -1803,15 +1802,13 @@ final case class GraftStorage(
     val dfP = toPhysicalDf(df, mapping, s"branch append to $path")
     // fail fast on type-conflicting evolution against the BRANCH
     // state (same gate as a main append)
-    GraftStorage.mergeSchemaJsons(state.collect {
-      case e if e.startsWith("H\t") => e.drop(2)
-    } :+ dfP.schema.json)
+    GraftStorage.requireSchemaMerges(state :+ s"H\t${dfP.schema.json}")
     val commitDir = newCommitDir(dir, listVersions(path).last + 1)
     // same staging core as a main append — the publish's
     // "byte-identical to serial appends" contract depends on it
-    val (freshFiles, sidecarLines) = stageAppendData(dfP, path,
+    val (freshFiles, sidecars) = stageAppendData(dfP, path,
       commitDir, fs, mapping, statsCols, bloomCols, checkMorKey = true)
-    val additions = freshFiles ++ sidecarLines ++
+    val additions = freshFiles ++ sidecars ++
       rowCountLines(freshFiles) ++ Seq(s"H\t${dfP.schema.json}")
     // an unsorted append drops a prior sort-order claim, on a branch
     // exactly as on main (the claim is table-wide)
@@ -1878,11 +1875,8 @@ final case class GraftStorage(
         // before this delta replays on the new head, or a conflicting
         // merge would poison the log (the exact failure the gate
         // exists to prevent)
-        GraftStorage.mergeSchemaJsons(
-          manifestEntries(path, head).collect {
-            case e if e.startsWith("H\t") => e.drop(2)
-          } ++ additions.collect {
-            case e if e.startsWith("H\t") => e.drop(2) })
+        GraftStorage.requireSchemaMerges(
+          manifestEntries(path, head) ++ additions)
         try {
           publishManifestDelta(fs, dir, head + 1, removals, additions)
           published = true
@@ -2298,32 +2292,6 @@ final case class GraftStorage(
             s"$n (${constraints(n)}): $c rows" }.mkString("; "))
   }
 
-  /** Commit-gate validation: read back the freshly written commit dir
-    * (new files only, constraint columns only) and, on violation,
-    * remove it so the aborted commit leaves no trace.
-    */
-  private[sources] def validateCommitDir(path: String,
-      commitDir: org.apache.hadoop.fs.Path,
-      fs: org.apache.hadoop.fs.FileSystem): Unit =
-    validateCommitFiles(path, Seq(commitDir.toString), commitDir, fs)
-
-  /** Constraint validation over an EXPLICIT file list — the V2
-    * commit's form: only the files the successful write attempts
-    * reported are validated (and later manifested), so a torn orphan
-    * from a crashed attempt in the same dir can neither fail the
-    * commit nor sneak rows into validation.
-    */
-  /** Identifier-field contract of `delete_mode=merge-on-read` tables
-    * (Iceberg's rule, enforced on EVERY write path): the `mor_key`
-    * column must be present and non-null in each appended row. The
-    * SQL surface already enforces it through the catalog's
-    * non-nullable declared schema; this is the same gate for Scala
-    * writers — a NULL key could never ride a key-based deletion
-    * vector, and worse, a non-null declared column holding a stored
-    * NULL reads back as GARBAGE under codegen (null checks elided).
-    * Costs one O(delta) pass over the commit's own files, and only on
-    * tables that opted into MoR.
-    */
   /** Write a deletion-vector DataFrame as parquet while counting its
     * NULL keys IN THE SAME JOB (`Dataset.observe` rides the write
     * action): the NULL-key safety gate every key-based DV commit
@@ -2349,6 +2317,17 @@ final case class GraftStorage(
     }
   }
 
+  /** Identifier-field contract of `delete_mode=merge-on-read` tables
+    * (Iceberg's rule, enforced on EVERY write path): the `mor_key`
+    * column must be present and non-null in each appended row. The
+    * SQL surface already enforces it through the catalog's
+    * non-nullable declared schema; this is the same gate for Scala
+    * writers — a NULL key could never ride a key-based deletion
+    * vector, and worse, a non-null declared column holding a stored
+    * NULL reads back as GARBAGE under codegen (null checks elided).
+    * Costs one O(delta) pass over the commit's own files, and only on
+    * tables that opted into MoR.
+    */
   private[sources] def requireMorKeyNonNull(path: String,
       writeSchema: org.apache.spark.sql.types.StructType,
       commitDir: org.apache.hadoop.fs.Path,
@@ -2382,6 +2361,14 @@ final case class GraftStorage(
     }
   }
 
+  /** Constraint validation over an EXPLICIT file list — the V2
+    * commit's form: only the files the successful write attempts
+    * reported are validated (and later manifested), so a torn orphan
+    * from a crashed attempt in the same dir can neither fail the
+    * commit nor sneak rows into validation. Reads back the files
+    * (constraint columns only) and, on violation, removes the commit
+    * dir so the aborted commit leaves no trace.
+    */
   private[sources] def validateCommitFiles(path: String,
       files: Seq[String], commitDir: org.apache.hadoop.fs.Path,
       fs: org.apache.hadoop.fs.FileSystem): Unit = {
@@ -3102,10 +3089,7 @@ final case class GraftStorage(
       val cur = readVersioned(path, lastV)
       writeVersionedPartitioned(
         cur.repartition(targetFiles,
-          spec.map { s =>
-            val f = GraftStorage.parsePartField(s)
-            f.keyExpr(cur.schema(f.col).dataType)
-          }: _*),
+          GraftStorage.partKeys(spec, cur.schema): _*),
         path, spec, append = false, sortedBy = sortCols,
         txn = None, carryLines = tLines, requireBase = lastV)
     } else {
@@ -3156,73 +3140,28 @@ final case class GraftStorage(
     */
   def compactVersionedWhere(path: String, predicate: Column,
       targetFiles: Int = 1): Long = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
-    require(listVersions(path).nonEmpty,
-      s"no versions committed under $path")
-    materializeIfMor(path)
-    val vs = listVersions(path)
-    val files = manifestFiles(path, vs.last)
-    def key(p: String): String = new Path(p).toUri.getPath
+    val v = materializedHead(path)
     // O(scope), not O(table): discovery runs over the PRUNED reader,
     // so manifest zones (sidecar stats AND path-derived partition /
     // temporal keys) drop provably non-matching files before any data
     // byte is read — a one-day predicate on a 10k-day table opens one
     // day, which is the whole point of this surface
-    val affectedKeys = readVersionedPruned(path).filter(predicate)
-      .select(input_file_name()).distinct()
-      .collect().map(r => key(r.getString(0))).toSet
-    val (affected, untouched) = files.partition(f => affectedKeys(key(f)))
-    if (affected.isEmpty) return vs.last
-    val spec = partitionSpec(path, vs.last)
-    val sortCols = sortSpec(path, vs.last)
-    // fresh files must not LOSE sidecar coverage the snapshot had
-    // (the priorSidecarCoverage invariant of every maintenance
-    // rewrite). Coverage is taken from the REAL sidecars (S/B
-    // lines), not priorSidecarCoverage — that helper folds in the
-    // path-derived partition zones, which fresh files restate by
-    // re-keying anyway; a partitioned table carrying pre-evolution
-    // S sidecars on OTHER columns still restates those.
-    val (sc, bc) = realSidecarCoverage(path, vs.last)
-    val rows0 = readRawFiles(path, vs.last, affected)
-    val specKeys = spec.map { s =>
-      val f = GraftStorage.parsePartField(s)
-      f.keyExpr(rows0.schema(f.col).dataType)
-    }
+    val (affected, untouched) = splitAffected(manifestFiles(path, v),
+      readVersionedPruned(path).filter(predicate))
+    if (affected.isEmpty) return v
+    val spec = partitionSpec(path, v)
+    val sortCols = sortSpec(path, v)
+    val rows = readRawFiles(path, v, affected)
     val clustered =
-      if (spec.nonEmpty) rows0.repartition(targetFiles, specKeys: _*)
+      if (spec.nonEmpty)
+        rows.repartition(targetFiles,
+          GraftStorage.partKeys(spec, rows.schema): _*)
       else if (sortCols.nonEmpty)
-        rows0.repartitionByRange(targetFiles, sortCols.map(col): _*)
-      else rows0.coalesce(targetFiles)
-    val relaid =
-      if (sortCols.isEmpty) clustered
-      else clustered.sortWithinPartitions(
-        (specKeys ++ sortCols.map(col)): _*)
-    val n = vs.last + 1
-    val commitDir = newCommitDir(dir, n)
-    val fresh = writeCommitData(relaid, commitDir, spec, fs,
-      columnMapping(path, vs.last))
-    validateCommitFiles(path, fresh, commitDir, fs)
-    val stats: Seq[String] =
-      if (sc.isEmpty) Seq.empty
-      else {
-        buildZoneMap(commitDir.toString, sc)
-        Seq(s"S\t${new Path(commitDir, "_zonemap").toUri.getPath}")
-      }
-    val blooms: Seq[String] =
-      if (bc.isEmpty) Seq.empty
-      else {
-        buildBloomIndex(commitDir.toString, bc)
-        Seq(s"B\t${new Path(commitDir, "_bloom").toUri.getPath}")
-      }
-    val meta = carriedMetaLines(path, vs.last, untouched) ++
-      rowCountLines(fresh) ++ stats ++ blooms ++
-      GraftStorage.oLine(sortCols, append = false, Seq.empty)
-    publishManifest(fs, dir, n, untouched ++ fresh ++ meta,
-      Some(commitDir))
-    tagMaintenance(path, n, "compact_where")
+        rows.repartitionByRange(targetFiles, sortCols.map(col): _*)
+      else rows.coalesce(targetFiles)
+    rewriteCommit(path, v, untouched, Some(clustered),
+      columnMapping(path, v), realSidecarCoverage(path, v), sortCols,
+      Some("compact_where"))
   }
 
   /** REORG APPLY DELETES at O(affected files) — the scoped MoR
@@ -3337,10 +3276,8 @@ final case class GraftStorage(
       return tagMaintenance(path, n, "apply_deletes")
     }
 
-    // ---- 2. rewrite exactly the affected files, per sequence group
-    val spec = partitionSpec(path, v)
-    val sortCols = sortSpec(path, v)
-    val (sc, bc) = realSidecarCoverage(path, v)
+    // ---- 2. rewrite exactly the affected files, per sequence group;
+    // 3. publish: no D line survives, untouched files carry
     // PHYSICAL space end-to-end: D lines, sidecars and the carried
     // files all store physical names — the fresh files must match
     // (no logical round-trip, so writeCommitData gets no mapping)
@@ -3361,39 +3298,10 @@ final case class GraftStorage(
       if (hasPosDvs) survivors0.drop(GraftStorage.PosFileCol,
         GraftStorage.PosIdxCol)
       else survivors0
-    val specKeys = spec.map { s =>
-      val f = GraftStorage.parsePartField(s)
-      f.keyExpr(survivors.schema(f.col).dataType)
-    }
-    val relaid =
-      if (sortCols.isEmpty) survivors
-      else survivors.sortWithinPartitions(
-        (specKeys ++ sortCols.map(col)): _*)
-    val commitDir = newCommitDir(dir, n)
-    val fresh = writeCommitData(relaid, commitDir, spec, fs)
-    validateCommitFiles(path, fresh, commitDir, fs)
-    val stats: Seq[String] =
-      if (sc.isEmpty || fresh.isEmpty) Seq.empty
-      else {
-        buildZoneMap(commitDir.toString, sc)
-        Seq(s"S\t${new Path(commitDir, "_zonemap").toUri.getPath}")
-      }
-    val blooms: Seq[String] =
-      if (bc.isEmpty || fresh.isEmpty) Seq.empty
-      else {
-        buildBloomIndex(commitDir.toString, bc)
-        Seq(s"B\t${new Path(commitDir, "_bloom").toUri.getPath}")
-      }
-
-    // ---- 3. publish: no D line survives; untouched files carry
-    val untouched = orderedFiles.map(_._1)
-      .filterNot(f => affected(key(f)))
-    val meta = carriedMetaLines(path, v, untouched) ++
-      rowCountLines(fresh) ++ stats ++ blooms ++
-      GraftStorage.oLine(sortCols, append = false, Seq.empty)
-    publishManifest(fs, dir, n, untouched ++ fresh ++ meta,
-      Some(commitDir))
-    tagMaintenance(path, n, "apply_deletes")
+    rewriteCommit(path, v,
+      orderedFiles.map(_._1).filterNot(f => affected(key(f))),
+      Some(survivors), None, realSidecarCoverage(path, v),
+      sortSpec(path, v), Some("apply_deletes"))
   }
 
   /** Columns the version's REAL sidecars (S/B manifest lines) cover —
@@ -3927,15 +3835,9 @@ final case class GraftStorage(
         * txn markers).
         */
       txn: Option[(String, Long)] = None): Long = {
-    import org.apache.hadoop.fs.Path
     GraftStorage.requireTxn(txn)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
     val vs = listVersions(path)
     require(vs.nonEmpty, s"no versions committed under $path")
-    val n: Long = vs.last + 1
-    val commitDir = newCommitDir(dir, n)
     // the DV parquet and its D line live in PHYSICAL names (the
     // space the read-side anti-join runs in, before the mapping
     // projection)
@@ -3943,12 +3845,9 @@ final case class GraftStorage(
     // DV = matching keys of the CURRENT snapshot (existing DVs apply:
     // a key deleted twice is stored once). The NULL-key gate rides
     // the same job as an observed metric (see publishDvOnlyCommit).
-    val nulls = writeDvCountingNulls(
-      readVersioned(path).filter(predicate)
-        .select(col(keyCol).as(keyColP)).distinct(),
-      keyColP, commitDir.toString)
-    publishDvOnlyCommit(dir, fs, commitDir, n, keyColP, txn,
-      "deleteVersionedMor", nullKeys = nulls)
+    publishDvOnlyCommit(path, vs.last, keyColP, txn, "deleteVersionedMor")(
+      writeDvCountingNulls(readVersioned(path).filter(predicate)
+        .select(col(keyCol).as(keyColP)).distinct(), keyColP, _))
   }
 
   /** Keyed MoR DELETE from a KEYS DataFrame — the CDC-apply shape:
@@ -3967,10 +3866,7 @@ final case class GraftStorage(
     */
   def deleteVersionedMorKeys(path: String, keys: DataFrame,
       keyCol: String, txn: Option[(String, Long)] = None): Long = {
-    import org.apache.hadoop.fs.Path
     GraftStorage.requireTxn(txn)
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val vs = listVersions(path)
     require(vs.nonEmpty, s"no versions committed under $path")
     val mapping = columnMapping(path, vs.last)
@@ -3988,14 +3884,10 @@ final case class GraftStorage(
       s"deleteVersionedMorKeys: key type ${keyField.dataType} does " +
         s"not match table column type ${tableField.dataType} — the " +
         "read-side anti-join must compare without casts")
-    val n: Long = vs.last + 1
-    val commitDir = newCommitDir(dir, n)
     val keyColP = physicalNameOf(keyCol, mapping)
-    val nulls = writeDvCountingNulls(
-      keys.select(col(keyCol).as(keyColP)).distinct(),
-      keyColP, commitDir.toString)
-    publishDvOnlyCommit(dir, fs, commitDir, n, keyColP, txn,
-      "deleteVersionedMorKeys", nullKeys = nulls)
+    publishDvOnlyCommit(path, vs.last, keyColP, txn,
+      "deleteVersionedMorKeys")(writeDvCountingNulls(
+        keys.select(col(keyCol).as(keyColP)).distinct(), keyColP, _))
   }
 
   /** Row-level DELETE by POSITION — merge-on-read for KEYLESS tables
@@ -4013,27 +3905,23 @@ final case class GraftStorage(
     */
   def deleteVersionedMorPos(path: String, predicate: Column,
       txn: Option[(String, Long)] = None): Long = {
-    import org.apache.hadoop.fs.Path
     GraftStorage.requireTxn(txn)
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val vs = listVersions(path)
     require(vs.nonEmpty, s"no versions committed under $path")
     val v = vs.last
-    val n: Long = v + 1
-    val commitDir = newCommitDir(dir, n)
-    // resolved snapshot (existing DVs applied) with positions; the
-    // predicate evaluates over logical columns like any DELETE
-    readResolvedEntries(path, manifestEntries(path, v), keepPos = true)
-      .filter(predicate)
-      .select(col(GraftStorage.PosFileCol).as("file"),
-        col(GraftStorage.PosIdxCol).as("pos"))
-      .write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .parquet(commitDir.toString)
-    publishDvOnlyCommit(dir, fs, commitDir, n,
-      GraftStorage.PosDvCol, txn, "deleteVersionedMorPos",
-      nullKeys = 0L)
+    publishDvOnlyCommit(path, v, GraftStorage.PosDvCol, txn,
+        "deleteVersionedMorPos") { commitDir =>
+      // resolved snapshot (existing DVs applied) with positions; the
+      // predicate evaluates over logical columns like any DELETE
+      readResolvedEntries(path, manifestEntries(path, v), keepPos = true)
+        .filter(predicate)
+        .select(col(GraftStorage.PosFileCol).as("file"),
+          col(GraftStorage.PosIdxCol).as("pos"))
+        .write.mode("overwrite")
+        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+        .parquet(commitDir)
+      0L // positions cannot be NULL
+    }
   }
 
   /** Serializable-isolation validation for replaying a DELTA
@@ -4091,60 +3979,75 @@ final case class GraftStorage(
     }
   }
 
-  /** Shared tail of the DV-only delete commits: NULL-key readback
-    * gate, broadcast-ceiling gate, and the pure-delta publish (D
-    * lines + optional txn marker, everything else inherited) — with
-    * the SAME optimistic rebase-and-retry as the SQL delta-DML
-    * commits: a table that advanced past `n - 1` while the DV was
-    * computed re-validates disjointness ([[validateDisjointRebase]])
-    * and replays on the new head instead of aborting outright, so a
-    * concurrent unrelated append never kills a hook DELETE that the
-    * UPDATE path would have rebased. True conflicts still abort
-    * loudly. Returns the PUBLISHED version.
+  /** The DV-only delete commit over version `v`, shared by the three
+    * MoR DELETE surfaces: `writeDv` writes the deletion vector of
+    * `keyCol` into the staged commit dir it is given and returns the
+    * NULL keys it observed ([[writeDvCountingNulls]] — the gate rides
+    * the write job). Then the broadcast-ceiling gate ([[dvLines]])
+    * and the pure-delta publish (D lines + optional txn marker,
+    * everything else inherited) through the SAME optimistic
+    * rebase-and-retry as the SQL delta-DML commits
+    * ([[publishRebasing]]), so a concurrent unrelated append never
+    * kills a hook DELETE that the UPDATE path would have rebased.
+    * Returns the PUBLISHED version.
     */
-  private def publishDvOnlyCommit(dir: org.apache.hadoop.fs.Path,
-      fs: org.apache.hadoop.fs.FileSystem,
-      commitDir: org.apache.hadoop.fs.Path, n: Long, keyCol: String,
-      txn: Option[(String, Long)], what: String,
-      /** NULL keys observed while the DV was WRITTEN
-        * ([[writeDvCountingNulls]] — the gate rides the write job;
-        * the previous shape re-read the DV parquet per commit).
-        * Position DVs pass 0 (positions cannot be NULL).
-        */
-      nullKeys: Long): Long = {
-    if (nullKeys > 0) {
+  private def publishDvOnlyCommit(path: String, v: Long, keyCol: String,
+      txn: Option[(String, Long)], what: String)(
+      writeDv: String => Long): Long = {
+    import org.apache.hadoop.fs.Path
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val commitDir = newCommitDir(dir, v + 1)
+    if (writeDv(commitDir.toString) > 0) {
       fs.delete(commitDir, true)
       throw new IllegalArgumentException(
         s"$what: matching rows carry a NULL '$keyCol' — a " +
           "key-based deletion vector cannot express them; use the " +
           "copy-on-write deleteVersioned for NULL-keyed victims")
     }
-    val dvStatus = fs.listStatus(commitDir).toSeq
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    requireDvSmall(dvStatus.map(_.getLen).sum,
-      { fs.delete(commitDir, true); () },
-      what, "deleteVersioned (copy-on-write)")
-    val dvFiles = dvStatus.map(_.getPath.toUri.getPath)
-    val path = dir.toString
-    val base = n - 1
     // a MoR delete is the purest delta commit: inherit everything,
-    // add only the DV lines — O(deleted keys) metadata AND data.
-    // NO cleanup handle rides the publish: a lost put-if-absent race
-    // must leave the staged DV intact for the rebase retry (cleanup
-    // here happens on terminal failure only).
+    // add only the DV lines — O(deleted keys) metadata AND data
+    publishRebasing(fs, dir.toString, commitDir, v,
+      txn.map(t => s"T\t${t._1}\t").toSeq,
+      dvLines(fs, commitDir, commitDir, keyCol, what,
+        "deleteVersioned (copy-on-write)") ++
+        txn.map(t => s"T\t${t._1}\t${t._2}").toSeq, what)
+  }
+
+  /** OPTIMISTIC REBASE-AND-RETRY publish of a delta row-level commit
+    * staged in `commitDir` against version `base` — the one loop the
+    * DV delete hooks ([[publishDvOnlyCommit]]) and the SQL delta-DML
+    * commit ([[GraftMorDeltaBatchWrite]]) share. A table that advanced
+    * past `base` does NOT abort outright: if every interleaved commit
+    * is a DISJOINT append ([[validateDisjointRebase]] — no removed
+    * files, no DV drift, no appended row carrying a key the keyed `D`
+    * lines among `additions` delete), the delta replays verbatim on
+    * the new head: the DV still targets exactly the same old copies
+    * (interleaved files land BEFORE its D lines, so the key-overlap
+    * check is what makes this sound) and fresh files are new either
+    * way. True conflicts abort loudly, up to 5 lost publish races
+    * retry. NO cleanup handle rides the publish: a lost put-if-absent
+    * race must leave the staged files intact for the retry — passing
+    * `commitDir` there would delete the data the retried manifest
+    * lines reference; it is removed on terminal failure only.
+    * Returns the published version.
+    */
+  private[sources] def publishRebasing(fs: org.apache.hadoop.fs.FileSystem,
+      path: String, commitDir: org.apache.hadoop.fs.Path, base: Long,
+      removals: Seq[String], additions: Seq[String], what: String): Long = {
+    // position DVs bind to explicit base files: appends cannot overlap
+    val keyed = additions.filter(_.startsWith("D\t")).map(_.split('\t'))
+      .filterNot(_(1) == GraftStorage.PosDvCol)
+    val deletedKeys = keyed.headOption.map(d => d(1) -> keyed.map(_(2)))
     var attempt = 0
     while (true) {
       val head = listVersions(path).last
       if (head != base)
-        try validateDisjointRebase(path, base, head,
-          if (keyCol == GraftStorage.PosDvCol) None
-          else Some(keyCol -> dvFiles), what)
+        try validateDisjointRebase(path, base, head, deletedKeys, what)
         catch { case e: Throwable => fs.delete(commitDir, true); throw e }
       try {
-        publishManifestDelta(fs, dir, head + 1,
-          txn.map(t => s"T\t${t._1}\t").toSeq,
-          dvFiles.map(f => s"D\t$keyCol\t$f") ++
-            txn.map(t => s"T\t${t._1}\t${t._2}").toSeq, None)
+        publishManifestDelta(fs, new org.apache.hadoop.fs.Path(path),
+          head + 1, removals, additions, None)
         return head + 1
       } catch {
         case e: java.util.ConcurrentModificationException =>
@@ -4157,26 +4060,37 @@ final case class GraftStorage(
     -1L // unreachable
   }
 
-  /** Guard the 'DVs are broadcast-sized by construction' invariant
-    * every MoR read plan relies on: a deletion vector over the
-    * `spark.graft.mor.maxDvBytes` ceiling (default 64 MB) would make
-    * EVERY subsequent read broadcast it — refuse at write time (the
-    * cleanup thunk removes the staged commit first) and point at the
-    * copy-on-write route, which is the right plan for deletes/upserts
-    * that big anyway.
+  /** The `spark.graft.mor.maxDvBytes` deletion-vector ceiling
+    * (default 64 MB).
     */
-  private[sources] def requireDvSmall(dvBytes: Long, cleanup: => Unit,
-      what: String, alt: String): Unit = {
-    val max = spark.conf.getOption("spark.graft.mor.maxDvBytes")
+  private[sources] def maxDvBytes: Long =
+    spark.conf.getOption("spark.graft.mor.maxDvBytes")
       .map(_.toLong).getOrElse(64L << 20)
-    if (dvBytes > max) {
-      cleanup
-      throw new DvTooLargeException(dvBytes, max,
-        s"$what: the deletion vector is $dvBytes bytes, over the " +
+
+  /** `D\t<keyCol>\t<file>` lines for the deletion-vector parquet
+    * staged under `dvDir` — every DV commit forms them here, behind
+    * the guard of the 'DVs are broadcast-sized by construction'
+    * invariant every MoR read plan relies on: a DV over
+    * [[maxDvBytes]] would make EVERY subsequent read broadcast it, so
+    * it is refused at write time (the staged `commitDir` is removed
+    * first), pointing `what`'s caller at `alt`, the copy-on-write
+    * route that is the right plan for changes that big anyway.
+    */
+  private[sources] def dvLines(fs: org.apache.hadoop.fs.FileSystem,
+      commitDir: org.apache.hadoop.fs.Path, dvDir: org.apache.hadoop.fs.Path,
+      keyCol: String, what: String, alt: String): Seq[String] = {
+    val dv = fs.listStatus(dvDir).toSeq
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+    val (bytes, max) = (dv.map(_.getLen).sum, maxDvBytes)
+    if (bytes > max) {
+      fs.delete(commitDir, true)
+      throw new DvTooLargeException(bytes, max,
+        s"$what: the deletion vector is $bytes bytes, over the " +
           s"spark.graft.mor.maxDvBytes ceiling of $max — every read " +
           s"would broadcast it; use $alt for changes this large " +
           "(or raise the ceiling)")
     }
+    dv.map(f => s"D\t$keyCol\t${f.getPath.toUri.getPath}")
   }
 
   /** MERGE-ON-READ upsert — MERGE at O(delta) write cost: ONE commit
@@ -4277,49 +4191,31 @@ final case class GraftStorage(
     */
   def mergeVersioned(path: String, updates: DataFrame,
       key: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
-    require(listVersions(path).nonEmpty,
-      s"no versions committed under $path")
-    materializeIfMor(path) // file-wise machinery reads raw files
-    val vs = listVersions(path)
-    val files = manifestFiles(path, vs.last)
-    val cur = readRawFiles(path, vs.last, files)
+    val v = materializedHead(path) // file-wise machinery reads raw files
+    val files = manifestFiles(path, v)
+    val cur = readRawFiles(path, v, files)
     require(cur.columns.toSet == updates.columns.toSet,
       s"merge schema mismatch: table ${cur.columns.toSeq} vs " +
         s"updates ${updates.columns.toSeq}")
     val upd = updates.select(cur.columns.map(col).toIndexedSeq: _*)
       .localCheckpoint() // read twice: matched split + insert anti
-    def keyOf(p: String): String = new Path(p).toUri.getPath
-    // files holding matched keys (metadata-scale distinct-file list)
-    val affectedKeys = cur.join(upd.select(col(key)), Seq(key), "left_semi")
-      .select(input_file_name()).distinct()
-      .collect().map(r => keyOf(r.getString(0))).toSet
-    val n: Long = vs.last + 1
-    val commitDir = newCommitDir(dir, n)
-    val (affected, untouched) = files.partition(f => affectedKeys(keyOf(f)))
+    // files holding matched keys
+    val (affected, untouched) = splitAffected(files,
+      cur.join(upd.select(col(key)), Seq(key), "left_semi"))
     // rewritten affected files: updates win on key, others carried;
     // plus the pure inserts (keys unseen anywhere in the snapshot)
     val affectedDf =
       if (affected.isEmpty) cur.limit(0)
-      else readRawFiles(path, vs.last, affected)
+      else readRawFiles(path, v, affected)
     val survivors = affectedDf.join(broadcast(upd.select(col(key))),
       Seq(key), "left_anti")
     val matched = upd.join(cur.select(col(key)), Seq(key), "left_semi")
       .select(cur.columns.map(col).toIndexedSeq: _*)
     val inserts = upd.join(cur.select(col(key)), Seq(key), "left_anti")
       .select(cur.columns.map(col).toIndexedSeq: _*)
-    val fresh = writeCommitData(
-      survivors.unionByName(matched).unionByName(inserts), commitDir,
-      partitionSpec(path, vs.last), fs, columnMapping(path, vs.last))
-    validateCommitFiles(path, fresh, commitDir, fs)
-    val meta = carriedMetaLines(path, vs.last, untouched) ++
-      rowCountLines(fresh)
-    publishManifest(fs, dir, n, untouched ++ fresh ++ meta,
-      Some(commitDir))
-    n
+    rewriteCommit(path, v, untouched,
+      Some(survivors.unionByName(matched).unionByName(inserts)),
+      columnMapping(path, v))
   }
 
   /** CDC — row-level changes between two committed versions, computed
@@ -4674,53 +4570,89 @@ final case class GraftStorage(
     * rewrite only the affected files via `rewrite`; publish a new
     * manifest of untouched ++ fresh files.
     */
-  /** If the latest version carries merge-on-read deletion vectors,
-    * publish a clean copy-on-write commit first (REORG APPLY
-    * DELETES): the file-wise rewrite machinery below reads raw files
-    * and would otherwise resurrect DV-deleted rows.
+  /** The head version of a table the file-wise rewrites read: if the
+    * latest version carries merge-on-read deletion vectors, a clean
+    * copy-on-write commit is published first (REORG APPLY DELETES) —
+    * the machinery reads raw files and would otherwise resurrect
+    * DV-deleted rows.
     */
-  private def materializeIfMor(path: String): Unit = {
-    val last = listVersions(path).last
-    if (manifestDvs(path, last).nonEmpty) {
-      compactVersioned(path,
-        math.max(1, manifestFiles(path, last).size)); ()
-    }
+  private def materializedHead(path: String): Long = {
+    val vs = listVersions(path)
+    require(vs.nonEmpty, s"no versions committed under $path")
+    if (manifestDvs(path, vs.last).nonEmpty)
+      compactVersioned(path, math.max(1, manifestFiles(path, vs.last).size))
+    listVersions(path).last
   }
 
+  /** Copy-on-write DELETE/UPDATE: the files holding a `predicate`
+    * match are rewritten through `rewrite`, the rest carry.
+    */
   private def rewriteVersioned(path: String, predicate: Column,
       rewrite: DataFrame => DataFrame): Long = {
+    val v = materializedHead(path)
+    val files = manifestFiles(path, v)
+    val (affected, untouched) = splitAffected(files,
+      readRawFiles(path, v, files).filter(predicate))
+    rewriteCommit(path, v, untouched,
+      if (affected.isEmpty) None
+      else Some(rewrite(readRawFiles(path, v, affected))),
+      columnMapping(path, v))
+  }
+
+  /** The `files` holding at least one row of `matching` (a read over
+    * them), split from the rest as (affected, untouched) — the
+    * discovery step of every partial rewrite. Metadata-scale: one
+    * distinct `input_file_name` per file holding a match.
+    */
+  private def splitAffected(files: Seq[String],
+      matching: DataFrame): (Seq[String], Seq[String]) = {
     import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
-    val vs0 = listVersions(path)
-    require(vs0.nonEmpty, s"no versions committed under $path")
-    materializeIfMor(path)
-    val vs = listVersions(path)
-    val files = manifestFiles(path, vs.last)
     def key(p: String): String = new Path(p).toUri.getPath
-    val cur = readRawFiles(path, vs.last, files)
-    // metadata-scale: one distinct file name per file holding a match
-    val affectedKeys = cur.filter(predicate)
-      .select(input_file_name()).distinct()
+    val hit = matching.select(input_file_name()).distinct()
       .collect().map(r => key(r.getString(0))).toSet
-    val n: Long = vs.last + 1
+    files.partition(f => hit(key(f)))
+  }
+
+  /** The one PARTIAL-REWRITE commit of version `v + 1` — copy-on-write
+    * DELETE/UPDATE, MERGE, scoped compaction and apply-deletes all
+    * publish here: `rows` (None: nothing to rewrite) land in a fresh
+    * commit dir under the snapshot's partition layout (`mapping`:
+    * the column mapping they are written through), pass the CHECK
+    * gate, and publish next to the `untouched` files and their
+    * carried meta lines. Maintenance rewrites pass the snapshot's
+    * real sidecar `coverage` (restated over the fresh files — they
+    * must not LOSE pruning the snapshot had) and `sortCols`
+    * (re-enforced within each task and re-declared as the `O` line),
+    * and tag the commit with `op`; DML passes neither, so its fresh
+    * files carry no sidecars and the sort claim drops.
+    */
+  private def rewriteCommit(path: String, v: Long, untouched: Seq[String],
+      rows: Option[DataFrame],
+      mapping: Option[(Map[String, String], Seq[String])],
+      coverage: (Seq[String], Seq[String]) = (Nil, Nil),
+      sortCols: Seq[String] = Nil, op: Option[String] = None): Long = {
+    import org.apache.hadoop.fs.Path
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val spec = partitionSpec(path, v)
+    val n = v + 1
     val commitDir = newCommitDir(dir, n)
-    val (affected, untouched) = files.partition(f => affectedKeys(key(f)))
-    val fresh: Seq[String] =
-      if (affected.isEmpty) Seq.empty
-      else {
-        val out = writeCommitData(
-          rewrite(readRawFiles(path, vs.last, affected)), commitDir,
-          partitionSpec(path, vs.last), fs, columnMapping(path, vs.last))
-        validateCommitFiles(path, out, commitDir, fs)
-        out
-      }
-    val meta = carriedMetaLines(path, vs.last, untouched) ++
-      rowCountLines(fresh)
+    val fresh = rows.fold(Seq.empty[String]) { df =>
+      val relaid =
+        if (sortCols.isEmpty) df
+        else df.sortWithinPartitions(
+          (GraftStorage.partKeys(spec, df.schema) ++ sortCols.map(col)): _*)
+      val out = writeCommitData(relaid, commitDir, spec, fs, mapping)
+      validateCommitFiles(path, out, commitDir, fs)
+      out
+    }
+    val (sc, bc) = if (fresh.isEmpty) (Nil, Nil) else coverage
+    val meta = carriedMetaLines(path, v, untouched) ++
+      rowCountLines(fresh) ++ sidecarLines(commitDir, sc, bc) ++
+      GraftStorage.oLine(sortCols, append = false, Seq.empty)
     publishManifest(fs, dir, n, untouched ++ fresh ++ meta,
       Some(commitDir))
-    n
+    op.fold(n)(tagMaintenance(path, n, _))
   }
 
   /** Resolve `AS OF <timestamp>` to a version: the newest manifest
@@ -6077,6 +6009,16 @@ object GraftStorage {
     * (appending unsorted files next to sorted ones would turn the
     * table-wide claim false).
     */
+  /** The layout-key expressions of partition `spec` over `schema`:
+    * the columns a rewrite clusters and sorts by to stay key-pure.
+    */
+  private[sources] def partKeys(spec: Seq[String],
+      schema: org.apache.spark.sql.types.StructType): Seq[Column] =
+    spec.map { s =>
+      val f = parsePartField(s)
+      f.keyExpr(schema(f.col).dataType)
+    }
+
   private[sources] def oLine(sortedBy: Seq[String], append: Boolean,
       priorSort: Seq[String]): Seq[String] =
     if (sortedBy.nonEmpty && (!append || priorSort == sortedBy))
@@ -6412,6 +6354,16 @@ object GraftStorage {
     * schema takes the wider type and every file reads through the
     * parquet reader's per-file promotion.
     */
+  /** The schema-drift gate of every append surface: the `H` lines
+    * among `entries` (the base snapshot's plus the commit's own) must
+    * merge — a type conflict throws BEFORE anything publishes, so it
+    * can never poison the log (readers would die on every resolve).
+    */
+  private[sources] def requireSchemaMerges(entries: Seq[String]): Unit =
+    mergeSchemaJsons(entries.collect {
+      case e if e.startsWith("H\t") => e.drop(2)
+    }): Unit
+
   private[sources] def mergeSchemaJsons(jsons: Seq[String])
       : Option[org.apache.spark.sql.types.StructType] = {
     import org.apache.spark.sql.types.{DataType, StructType}

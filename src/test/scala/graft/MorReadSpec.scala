@@ -549,4 +549,22 @@ class MorReadSpec extends AnyFunSuite {
     assert(jobsOf(st.readVersioned(out).collect()) ==
       jobsOf(withDistinct.collect()) - 1)
   }
+
+  test("the benchmark's versioned cycle: pinned jobs per commit op") {
+    // write, MoR upsert, MoR delete, compact, read — each op's Spark
+    // jobs, so a commit-path change that adds a side job shows here
+    val out = fresh("mor_cycle_jobs")
+    val base = T.t(spark, SF, "orders")
+      .select($"o_orderkey", $"o_custkey", $"o_orderstatus", $"o_totalprice")
+    val updates = base.filter($"o_orderkey" % 10 === 3)
+      .withColumn("o_totalprice", $"o_totalprice" + 1)
+    val jobs = Seq(
+      jobsOf(st.writeVersioned(base, out)),
+      jobsOf(st.mergeVersionedMor(out, updates, "o_orderkey")),
+      jobsOf(st.deleteVersionedMor(out, $"o_orderstatus" === "F",
+        "o_orderkey")),
+      jobsOf(st.compactVersioned(out)),
+      jobsOf(st.readVersioned(out).collect()))
+    assert(jobs == Seq(1, 3, 3, 3, 1))
+  }
 }

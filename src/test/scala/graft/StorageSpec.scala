@@ -2164,4 +2164,67 @@ class StorageSpec extends AnyFunSuite {
       .collect()(0).getLong(0)
     assert(n == 10)
   }
+
+  test("rewrite commits: each op's manifest line kinds and fresh-file " +
+    "sidecar coverage") {
+    import spark.implicits._
+    val st = sources.GraftStorage(spark)
+    val rows = spark.range(0, 400)
+      .select($"id".as("k"), ($"id" % 5).as("g"), ($"id" * 3).as("v"))
+    def table(name: String, partitioned: Boolean): String = {
+      val out = T.scratch(SF, s"rewrite_lines_$name")
+      val fs = new org.apache.hadoop.fs.Path(out)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(new org.apache.hadoop.fs.Path(out), true)
+      if (partitioned)
+        st.writeVersionedPartitioned(rows.repartition(4), out, Seq("g"),
+          sortedBy = Seq("k"), txn = Some(("app", 0L)))
+      else
+        st.writeVersioned(rows.repartition(4), out, statsCols = Seq("k"),
+          bloomCols = Seq("v"), sortedBy = Seq("k"),
+          txn = Some(("app", 0L)))
+      out
+    }
+    val ops: Seq[(String, String => Long)] = Seq(
+      "delete" -> (out => st.deleteVersioned(out, $"k" < 50)),
+      "update" -> (out =>
+        st.updateVersioned(out, $"k" < 50, Map("v" -> lit(-1L)))),
+      "merge" -> (out => st.mergeVersioned(out,
+        rows.filter($"k" < 50 || $"k" >= 390)
+          .select(($"k" + 10).as("k"), $"g", lit(-1L).as("v")), "k")),
+      "compact_where" -> (out =>
+        st.compactVersionedWhere(out, $"k" < 50, 1)),
+      "apply_deletes" -> { out =>
+        st.deleteVersionedMor(out, $"k" < 50, "k")
+        st.applyDeletesVersioned(out)
+      })
+    // (line kinds present, fresh files covered by a new S and B sidecar)
+    def shape(out: String, op: String => Long): (String, Boolean) = {
+      val prior = st.manifestFiles(out, st.listVersions(out).last).toSet
+      val v = op(out)
+      val lines = manifestLines(out, v)
+      val kinds = "SBOTPH".filter(k => lines.exists(_.startsWith(s"$k\t")))
+      val fresh = st.manifestFiles(out, v).filterNot(prior)
+      def covered(k: String) = fresh.forall(f => lines.exists(l =>
+        l.startsWith(s"$k\t") && f.startsWith(
+          new org.apache.hadoop.fs.Path(l.split('\t')(1)).getParent
+            .toUri.getPath + "/")))
+      assert(fresh.nonEmpty, s"$op wrote no fresh file")
+      (kinds, covered("S") && covered("B"))
+    }
+    // copy-on-write DML carries the snapshot's sidecars and drops the
+    // sort claim; maintenance rewrites restate coverage and re-sort
+    val expected = Map(
+      false -> Map("delete" -> ("SBTH", false), "update" -> ("SBTH", false),
+        "merge" -> ("SBTH", false), "compact_where" -> ("SBOTH", true),
+        "apply_deletes" -> ("SBOTH", true)),
+      true -> Map("delete" -> ("TPH", false), "update" -> ("TPH", false),
+        "merge" -> ("TPH", false), "compact_where" -> ("OTPH", false),
+        "apply_deletes" -> ("OTPH", false)))
+    for (partitioned <- Seq(false, true); (name, op) <- ops) {
+      val got = shape(table(s"${name}_$partitioned", partitioned), op)
+      assert(got == expected(partitioned)(name),
+        s"$name (partitioned=$partitioned)")
+    }
+  }
 }
