@@ -84,6 +84,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectResolutionRule(s => new sources.MorReadRule(s))
     e.injectOptimizerRule(_ => FoldSelfCosine)
     e.injectOptimizerRule(_ => plans.BinnedIntervalRule)
+    // a small ORDER BY sorts in place: decided from plan stats here,
+    // and again from measured query-stage sizes when AQE re-optimizes
+    e.injectOptimizerRule(_ => plans.SmallSortRule)
+    e.injectRuntimeOptimizerRule(_ => plans.SmallSortRule)
     e.injectOptimizerRule(_ => plans.MaterializedViewRule)
 
     // SQL time travel over the versioned storage format — the TVF

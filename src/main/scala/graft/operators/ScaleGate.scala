@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Size gates for operators whose EXACT form is a scale-killer.
   *
@@ -17,6 +18,9 @@ import org.apache.spark.sql.functions._
   * report runs on `approx_percentile` cuts — one distributed pass,
   * no global sort, the documented 100 TB semantics
   * (llm_quality_cuts oracles the primitive with error-bound checks).
+  *
+  * The small-sort gate ([[smallSortMaxBytes]]) is a plan-time one: it
+  * reads Spark's own coalescing confs and probes nothing.
   */
 object ScaleGate {
 
@@ -34,6 +38,32 @@ object ScaleGate {
     val t = s.conf.get(ExactNtileMaxRows, "10000000").toLong
     df.limit((t + 1).min(Int.MaxValue).toInt).count() <= t
   }
+
+  /** The small-sort gate ([[graft.plans.SmallSortRule]]): the largest
+    * ORDER BY input, in bytes, that AQE's `CoalesceShufflePartitions`
+    * packs into ONE partition after the range shuffle — so sorting it
+    * in place costs nothing the shuffle would not. Coalescing aims at
+    * max(min(total / minPartitionNum, advisory), minPartitionSize),
+    * so one partition holds everything up to
+    * `coalescePartitions.minPartitionSize` (1 MiB) in the default
+    * `parallelismFirst` mode, and up to `advisoryPartitionSizeInBytes`
+    * when `parallelismFirst` is off and no `minPartitionNum` is set.
+    * None when AQE or its partition coalescing is off: then the
+    * range shuffle keeps its partitions and the gate has no
+    * counterpart to match.
+    */
+  def smallSortMaxBytes(conf: SQLConf): Option[Long] =
+    if (!conf.adaptiveExecutionEnabled ||
+        !conf.getConf(SQLConf.COALESCE_PARTITIONS_ENABLED)) None
+    else {
+      val minSize = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+      val byAdvisory =
+        !conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST) &&
+          conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_NUM).isEmpty
+      Some(if (byAdvisory)
+        minSize max conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      else minSize)
+    }
 
   /** `ntile(n)` over a global ordering of one numeric column —
     * exact (global window, `tiebreak` makes boundaries deterministic)

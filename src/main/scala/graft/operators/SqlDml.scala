@@ -299,7 +299,7 @@ object SqlDml extends QueryModule {
     // narrow-typed old files + wide-typed new files in ONE scan) are
     // unchanged.
     s.sql(
-      s"""SELECT COUNT(*) AS cnt, SUM(k) AS key_sum,
+      s"""SELECT COUNT(*) AS cnt, CAST(SUM(k) AS BIGINT) AS key_sum,
          |  MAX(price) AS max_price,
          |  COUNT(CASE WHEN price > 50000.0 THEN 1 END) AS n_big,
          |  CAST(SUM(tot) AS DECIMAL(38,2)) AS tot_sum,
@@ -958,7 +958,7 @@ object SqlDml extends QueryModule {
          |  FROM orders
          |  UNION ALL SELECT 3000000000, 1.5,
          |    123456789012345678.50, TIMESTAMP '2030-01-01 12:30:00')
-         |SELECT COUNT(*) AS cnt, SUM(k) AS key_sum,
+         |SELECT COUNT(*) AS cnt, CAST(SUM(k) AS BIGINT) AS key_sum,
          |  MAX(price) AS max_price,
          |  COUNT(CASE WHEN price > 50000.0 THEN 1 END) AS n_big,
          |  CAST(SUM(tot) AS DECIMAL(38,2)) AS tot_sum,

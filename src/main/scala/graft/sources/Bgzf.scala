@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.io.{ByteArrayOutputStream, OutputStream}
+import java.nio.charset.StandardCharsets
 import java.util.zip.{CRC32, Deflater, Inflater}
 
 /** BGZF — blocked gzip: a series of standard gzip members, each
@@ -393,27 +394,44 @@ object Bgzf {
     val fs = path.getFileSystem(conf)
     val in = fs.open(path)
     val lines = scala.collection.mutable.ArrayBuffer.empty[String]
+    // a line's head from earlier blocks; lines inside one block decode
+    // straight from their slice
     val pending = new ByteArrayOutputStream(256)
     var skipping = split.start > 0
     var emitted = false // entered emit phase
 
+    def newlineFrom(chunk: Array[Byte], from: Int): Int = {
+      var i = from
+      while (i < chunk.length && chunk(i) != '\n') i += 1
+      if (i < chunk.length) i else -1
+    }
+
     def feed(chunk: Array[Byte], stopAtFirstNewlinePastContent: Boolean): Boolean = {
       // returns true when the caller should stop (extension newline hit)
-      var i = 0
-      while (i < chunk.length) {
-        val b = chunk(i)
-        if (skipping) {
-          if (b == '\n') { skipping = false; emitted = true }
-        } else {
-          emitted = true
-          if (b == '\n') {
-            lines += new String(pending.toByteArray, "UTF-8")
-            pending.reset()
-            if (stopAtFirstNewlinePastContent) return true
-          } else pending.write(b.toInt)
-        }
-        i += 1
+      var from = 0
+      if (skipping) {
+        val nl = newlineFrom(chunk, 0)
+        if (nl < 0) return false
+        skipping = false
+        emitted = true
+        from = nl + 1
       }
+      if (from < chunk.length) emitted = true
+      var nl = newlineFrom(chunk, from)
+      while (nl >= 0) {
+        lines += (if (pending.size() == 0)
+          new String(chunk, from, nl - from, StandardCharsets.UTF_8)
+        else {
+          pending.write(chunk, from, nl - from)
+          val line = pending.toString(StandardCharsets.UTF_8)
+          pending.reset()
+          line
+        })
+        from = nl + 1
+        if (stopAtFirstNewlinePastContent) return true
+        nl = newlineFrom(chunk, from)
+      }
+      pending.write(chunk, from, chunk.length - from)
       false
     }
 
@@ -438,8 +456,7 @@ object Bgzf {
           cpos += bsize
         }
         if (!stop && pending.size() > 0) { // file end, no trailing \n
-          lines += new String(pending.toByteArray, "UTF-8")
-          pending.reset()
+          lines += pending.toString(StandardCharsets.UTF_8)
         }
       }
     } finally in.close()

@@ -4120,7 +4120,11 @@ final case class GraftStorage(
       s"mergeVersionedMor on $path: the table is partitioned — " +
         "fresh rows would land outside the identity layout; use " +
         "mergeVersioned (copy-on-write) instead")
-    val cols = readVersioned(path, Some(vs.last)).columns
+    // columns from the log (schema lines + column mapping); only
+    // legacy tables without H lines open the snapshot for them
+    val cols = mergedManifestSchema(path, vs.last)
+      .map(logicalSchemaOf(_, columnMapping(path, vs.last)).fieldNames)
+      .getOrElse(readVersioned(path, Some(vs.last)).columns)
     require(cols.toSet == updates.columns.toSet,
       s"merge schema mismatch: table ${cols.toSeq} vs " +
         s"updates ${updates.columns.toSeq}")
@@ -4891,7 +4895,9 @@ final case class GraftStorage(
       case None                  => spark.read
     }
     val reader = reader0.options(readerOptions)
-    val base =
+    // opened only where it is the plan, or where no H line gives the
+    // mixed-generation branch its schema
+    lazy val base =
       if (files.isEmpty) schemaOpt match {
         // schema-in-log: an empty snapshot still knows its shape
         case Some(schema) => spark.createDataFrame(
