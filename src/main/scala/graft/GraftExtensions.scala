@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{DataFrame, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, IsNotNull, Literal}
 import org.apache.spark.sql.catalyst.expressions.{If, And}
@@ -35,6 +35,8 @@ object FoldSelfCosine extends Rule[LogicalPlan] {
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  import GraftExtensions.{literalLong, literalString}
+
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectFunction((
       new FunctionIdentifier("cosine_sim"),
@@ -42,8 +44,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
     e.injectFunction((
       new FunctionIdentifier("ngrams"),
-      new ExpressionInfo(
-        classOf[graft.functions.NgramsExpr].getName, "ngrams"),
+      new ExpressionInfo(classOf[graft.functions.NgramsExpr].getName, "ngrams"),
       (exprs: Seq[Expression]) => graft.functions.NgramsExpr(exprs(0),
         exprs(1) match {
           case Literal(n: Int, _) => n
@@ -55,8 +56,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // per group per partition; see functions.TopKAgg).
     e.injectFunction((
       new FunctionIdentifier("top_k_rows"),
-      new ExpressionInfo(
-        classOf[graft.functions.TopKAgg].getName, "top_k_rows"),
+      new ExpressionInfo(classOf[graft.functions.TopKAgg].getName, "top_k_rows"),
       (exprs: Seq[Expression]) => {
         if (exprs.length < 2 || exprs.length > 3)
           throw new IllegalArgumentException(
@@ -84,11 +84,20 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectResolutionRule(s => new sources.MorReadRule(s))
     e.injectOptimizerRule(_ => FoldSelfCosine)
     e.injectOptimizerRule(_ => plans.BinnedIntervalRule)
-    // a small ORDER BY sorts in place: decided from plan stats here,
-    // and again from measured query-stage sizes when AQE re-optimizes
-    e.injectOptimizerRule(_ => plans.SmallSortRule)
-    e.injectRuntimeOptimizerRule(_ => plans.SmallSortRule)
     e.injectOptimizerRule(_ => plans.MaterializedViewRule)
+    // a small plan runs as one stage: decided from plan stats here,
+    // and again from measured query-stage sizes when AQE re-optimizes;
+    // after the MV rewrite, which matches aggregates over bare scans
+    e.injectOptimizerRule(_ => plans.OnePartitionRule)
+    e.injectRuntimeOptimizerRule(_ => plans.OnePartitionRule)
+
+    // a storage table function resolves, at analysis, to `f`'s plan
+    def tvf(name: String)(
+        f: (Seq[Expression], sources.GraftStorage) => DataFrame): Unit =
+      e.injectTableFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name),
+        (exprs: Seq[Expression]) => f(exprs, sources.GraftStorage(
+          org.apache.spark.sql.SparkSession.active)).queryExecution.analyzed))
 
     // SQL time travel over the versioned storage format — the TVF
     // surface of the lakehouse engines (`SELECT ... FROM
@@ -96,135 +105,90 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // manifest-pinned snapshot relation. Omitting the version reads
     // latest. The path/version must be literals: the manifest resolve
     // happens during analysis, there is no row context to evaluate in.
-    e.injectTableFunction((
-      new FunctionIdentifier("graft_versioned"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_versioned"),
-      (exprs: Seq[Expression]) => {
-        val path = GraftExtensions.literalString(exprs.head, "graft_versioned")
-        val version = exprs.lift(1).map(e =>
-          GraftExtensions.literalLong(e, "graft_versioned"))
-        // pruned resolve: stats-in-log file skipping when the
-        // manifest records stats; falls back to the plain snapshot
-        // read (incl. the DV anti-join form) otherwise
-        sources.GraftStorage(org.apache.spark.sql.SparkSession.active)
-          .readVersionedPruned(path, version).queryExecution.analyzed
-      }))
+    tvf("graft_versioned") { (exprs, st) =>
+      val path = literalString(exprs.head, "graft_versioned")
+      val version = exprs.lift(1).map(literalLong(_, "graft_versioned"))
+      // pruned resolve: stats-in-log file skipping when the
+      // manifest records stats; falls back to the plain snapshot
+      // read (incl. the DV anti-join form) otherwise
+      st.readVersionedPruned(path, version)
+    }
     // Timestamp time travel: `FROM graft_versioned_at('/t',
     // '2026-08-14 07:00:00')` — the newest snapshot committed at or
     // before the instant (commit instant = the manifest publish).
     // The timestamp is a UTC literal string, parsed at analysis.
-    e.injectTableFunction((
-      new FunctionIdentifier("graft_versioned_at"),
-      new ExpressionInfo(classOf[GraftExtensions].getName,
-        "graft_versioned_at"),
-      (exprs: Seq[Expression]) => {
-        val path =
-          GraftExtensions.literalString(exprs(0), "graft_versioned_at")
-        val ts =
-          GraftExtensions.literalString(exprs(1), "graft_versioned_at")
-        val millis = java.time.LocalDateTime
-          .parse(ts.replace(' ', 'T'))
-          .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-        sources.GraftStorage(org.apache.spark.sql.SparkSession.active)
-          .readVersionedAsOf(path, millis).queryExecution.analyzed
-      }))
+    tvf("graft_versioned_at") { (exprs, st) =>
+      val path = literalString(exprs(0), "graft_versioned_at")
+      val ts = literalString(exprs(1), "graft_versioned_at")
+      val millis = java.time.LocalDateTime
+        .parse(ts.replace(' ', 'T'))
+        .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
+      st.readVersionedAsOf(path, millis)
+    }
     // Ref read TVF: `FROM graft_ref('/t', 'rel-1')` — snapshot read
     // through a named tag or branch (the `_refs/` pointers); pruned
     // like any pinned-version read.
-    e.injectTableFunction((
-      new FunctionIdentifier("graft_ref"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_ref"),
-      (exprs: Seq[Expression]) => {
-        val path = GraftExtensions.literalString(exprs(0), "graft_ref")
-        val name = GraftExtensions.literalString(exprs(1), "graft_ref")
-        sources.GraftStorage(org.apache.spark.sql.SparkSession.active)
-          .readVersionedRef(path, name).queryExecution.analyzed
-      }))
+    tvf("graft_ref") { (exprs, st) =>
+      val path = literalString(exprs(0), "graft_ref")
+      val name = literalString(exprs(1), "graft_ref")
+      st.readVersionedRef(path, name)
+    }
     // Refs inventory TVF: `SELECT * FROM graft_refs('/t')` →
     // (ref, version) per tag/branch, metadata-rate.
-    e.injectTableFunction((
-      new FunctionIdentifier("graft_refs"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_refs"),
-      (exprs: Seq[Expression]) => {
-        val path = GraftExtensions.literalString(exprs.head, "graft_refs")
-        sources.GraftStorage(org.apache.spark.sql.SparkSession.active)
-          .refsVersioned(path).queryExecution.analyzed
-      }))
+    tvf("graft_refs") { (exprs, st) =>
+      val path = literalString(exprs.head, "graft_refs")
+      st.refsVersioned(path)
+    }
     // Snapshot inventory TVF: `SELECT * FROM graft_files('/t')` →
     // (version, file, bytes) per manifest entry — metadata-rate at
     // any table size (manifests, not listings of data).
-    e.injectTableFunction((
-      new FunctionIdentifier("graft_files"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_files"),
-      (exprs: Seq[Expression]) => {
-        val path = GraftExtensions.literalString(exprs.head, "graft_files")
-        sources.GraftStorage(org.apache.spark.sql.SparkSession.active)
-          .filesVersioned(path).queryExecution.analyzed
-      }))
+    tvf("graft_files") { (exprs, st) =>
+      val path = literalString(exprs.head, "graft_files")
+      st.filesVersioned(path)
+    }
     // CDC TVF: `SELECT * FROM graft_changes('/t', v_from, v_to)` →
     // row-level inserts/deletes between two snapshots, computed from
     // the manifest file diff (cost scales with churn, not table
     // size; GraftStorage.changesVersioned).
-    e.injectTableFunction((
-      new FunctionIdentifier("graft_changes"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_changes"),
-      (exprs: Seq[Expression]) => {
-        val path = GraftExtensions.literalString(exprs(0), "graft_changes")
-        val from = GraftExtensions.literalLong(exprs(1), "graft_changes")
-        val to = GraftExtensions.literalLong(exprs(2), "graft_changes")
-        sources.GraftStorage(org.apache.spark.sql.SparkSession.active)
-          .changesVersioned(path, from, to).queryExecution.analyzed
-      }))
+    tvf("graft_changes") { (exprs, st) =>
+      val path = literalString(exprs(0), "graft_changes")
+      val from = literalLong(exprs(1), "graft_changes")
+      val to = literalLong(exprs(2), "graft_changes")
+      st.changesVersioned(path, from, to)
+    }
     // DESCRIBE HISTORY TVF: `SELECT * FROM graft_history('/t')` →
     // (version, committed_at, n_files, n_rows) per commit,
     // metadata-rate (manifests + R lines only).
-    e.injectTableFunction((
-      new FunctionIdentifier("graft_history"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_history"),
-      (exprs: Seq[Expression]) => {
-        val path = GraftExtensions.literalString(exprs.head, "graft_history")
-        sources.GraftStorage(org.apache.spark.sql.SparkSession.active)
-          .historyVersioned(path).queryExecution.analyzed
-      }))
+    tvf("graft_history") { (exprs, st) =>
+      val path = literalString(exprs.head, "graft_history")
+      st.historyVersioned(path)
+    }
     // Metadata-rate COUNT(*) TVF: `SELECT * FROM graft_count('/t'
     // [, version])` → one (cnt) row summed from the manifest's R
     // row-count lines when possible (GraftStorage.countVersioned) —
     // the stats-only-query fast path, SQL-visible.
-    e.injectTableFunction((
-      new FunctionIdentifier("graft_count"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_count"),
-      (exprs: Seq[Expression]) => {
-        val path = GraftExtensions.literalString(exprs.head, "graft_count")
-        val version = exprs.lift(1).map(e =>
-          GraftExtensions.literalLong(e, "graft_count"))
-        val s = org.apache.spark.sql.SparkSession.active
-        import s.implicits._
-        val st = sources.GraftStorage(s)
-        // manifest fast path resolves to a literal row; otherwise the
-        // count stays a LAZY plan — analysis (and EXPLAIN) must never
-        // trigger the fallback scan
-        (st.countVersionedFast(path, version) match {
-          case Some(n) => Seq(n).toDF("cnt")
-          case None => st.readVersioned(path, version)
-            .agg(org.apache.spark.sql.functions
-              .count(org.apache.spark.sql.functions.lit(1)).as("cnt"))
-        }).queryExecution.analyzed
-      }))
+    tvf("graft_count") { (exprs, st) =>
+      val path = literalString(exprs.head, "graft_count")
+      val version = exprs.lift(1).map(literalLong(_, "graft_count"))
+      import st.spark.implicits._
+      // manifest fast path resolves to a literal row; otherwise the
+      // count stays a LAZY plan — analysis (and EXPLAIN) must never
+      // trigger the fallback scan
+      st.countVersionedFast(path, version) match {
+        case Some(n) => Seq(n).toDF("cnt")
+        case None => st.readVersioned(path, version)
+          .agg(org.apache.spark.sql.functions
+            .count(org.apache.spark.sql.functions.lit(1)).as("cnt"))
+      }
+    }
     // Constraint inventory TVF: `SELECT * FROM graft_constraints('/t')`
     // → (name, predicate) — the DESCRIBE CONSTRAINTS surface of the
     // commit-gated CHECK machinery (GraftStorage.addCheckConstraint).
-    e.injectTableFunction((
-      new FunctionIdentifier("graft_constraints"),
-      new ExpressionInfo(classOf[GraftExtensions].getName,
-        "graft_constraints"),
-      (exprs: Seq[Expression]) => {
-        val path =
-          GraftExtensions.literalString(exprs.head, "graft_constraints")
-        val s = org.apache.spark.sql.SparkSession.active
-        import s.implicits._
-        sources.GraftStorage(s).checkConstraints(path).toSeq.sorted
-          .toDF("name", "predicate").queryExecution.analyzed
-      }))
+    tvf("graft_constraints") { (exprs, st) =>
+      val path = literalString(exprs.head, "graft_constraints")
+      import st.spark.implicits._
+      st.checkConstraints(path).toSeq.sorted.toDF("name", "predicate")
+    }
   }
 }
 

@@ -139,10 +139,8 @@ object Pipeline extends QueryModule {
   def qualityBuckets(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val q = TextStats.quality(s, dir).select($"doc_id", $"score")
-    val exact = graft.operators.ScaleGate.fitsExactNtile(s, q)
     graft.operators.ScaleGate
-      .gatedNtile(s, q, exact, "score", descending = true, "doc_id",
-        10, "bucket")
+      .gatedNtiles(s, q, Seq(("score", true, "bucket")), "doc_id", 10)
       .groupBy($"bucket")
       .agg(count(lit(1)).as("n"),
         round(min($"score"), 6).as("min_score"),

@@ -192,8 +192,7 @@ object Composite extends QueryModule {
     val base = perUser
       .crossJoin(broadcast(p.agg(max(unix_timestamp($"ts")).as("max_sec"))))
       .withColumn("rec_days", expr("(max_sec - last_sec) div 86400"))
-    val exact = ScaleGate.fitsExactNtile(s, base)
-    val rfm = ScaleGate.gatedNtiles(s, base, exact,
+    val rfm = ScaleGate.gatedNtiles(s, base,
       Seq(("rec_days", false, "r"), ("freq", true, "f"),
         ("cents", true, "m")), "user_id", 5)
     rfm.groupBy($"r", $"f", $"m")

@@ -253,7 +253,8 @@ object Quality extends QueryModule {
         it.flatMap { case (t, f) =>
           val in = org.apache.parquet.hadoop.util.HadoopInputFile
             .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in,
+            org.apache.parquet.HadoopReadOptions.builder(conf).build())
           try {
             val want = wanted(t).toSet
             r.getFooter.getBlocks.asScala.flatMap { b =>

@@ -18,9 +18,7 @@ import org.apache.spark.sql.internal.SQLConf
   * report runs on `approx_percentile` cuts — one distributed pass,
   * no global sort, the documented 100 TB semantics
   * (llm_quality_cuts oracles the primitive with error-bound checks).
-  *
-  * The small-sort gate ([[smallSortMaxBytes]]) is a plan-time one: it
-  * reads Spark's own coalescing confs and probes nothing.
+  * The one-partition gate ([[onePartitionMaxBytes]]) probes nothing.
   */
 object ScaleGate {
 
@@ -39,20 +37,19 @@ object ScaleGate {
     df.limit((t + 1).min(Int.MaxValue).toInt).count() <= t
   }
 
-  /** The small-sort gate ([[graft.plans.SmallSortRule]]): the largest
-    * ORDER BY input, in bytes, that AQE's `CoalesceShufflePartitions`
-    * packs into ONE partition after the range shuffle — so sorting it
-    * in place costs nothing the shuffle would not. Coalescing aims at
-    * max(min(total / minPartitionNum, advisory), minPartitionSize),
-    * so one partition holds everything up to
+  /** The one-partition gate ([[graft.plans.OnePartitionRule]]): the
+    * largest input, in bytes, that AQE's `CoalesceShufflePartitions`
+    * packs into ONE partition after a shuffle — so running it in one
+    * task with no shuffle at all costs nothing the shuffle would not.
+    * Coalescing aims at max(min(total / minPartitionNum, advisory),
+    * minPartitionSize), so one partition holds everything up to
     * `coalescePartitions.minPartitionSize` (1 MiB) in the default
     * `parallelismFirst` mode, and up to `advisoryPartitionSizeInBytes`
     * when `parallelismFirst` is off and no `minPartitionNum` is set.
-    * None when AQE or its partition coalescing is off: then the
-    * range shuffle keeps its partitions and the gate has no
-    * counterpart to match.
+    * None when AQE or its partition coalescing is off: then shuffles
+    * keep their partitions and the gate has no counterpart to match.
     */
-  def smallSortMaxBytes(conf: SQLConf): Option[Long] =
+  def onePartitionMaxBytes(conf: SQLConf): Option[Long] =
     if (!conf.adaptiveExecutionEnabled ||
         !conf.getConf(SQLConf.COALESCE_PARTITIONS_ENABLED)) None
     else {
@@ -65,30 +62,19 @@ object ScaleGate {
       else minSize)
     }
 
-  /** `ntile(n)` over a global ordering of one numeric column —
-    * exact (global window, `tiebreak` makes boundaries deterministic)
-    * below the gate, approx-percentile cuts above it. `valueCol`
-    * must be a plain non-null numeric column name. The approx form
-    * trades the equal-size guarantee for a cut-based bucketing with
-    * NO global sort: ties land in one bucket and sizes wobble by the
-    * sketch error — the documented large-scale semantics.
+  /** `ntile(n)` per `(valueCol, descending, out)` spec over a global
+    * ordering of a plain non-null numeric column — exact (one global
+    * window per spec; `tiebreak` makes boundaries deterministic) when
+    * `df` fits [[fitsExactNtile]], else approx-percentile cuts with NO
+    * global sort (ties land in one bucket, sizes wobble by the sketch
+    * error), EVERY cut array in a SINGLE aggregate pass + one broadcast
+    * cross join — at the 10⁹-row scale the gate exists for, per-column
+    * agg jobs would rescan the input once per spec.
     */
-  def gatedNtile(s: SparkSession, df: DataFrame, exact: Boolean,
-      valueCol: String, descending: Boolean, tiebreak: String,
-      n: Int, out: String): DataFrame =
-    gatedNtiles(s, df, exact, Seq((valueCol, descending, out)),
-      tiebreak, n)
-
-  /** Several gated ntiles over the SAME input in one shot: the exact
-    * path runs one window per spec (cheap below the gate), the approx
-    * path computes EVERY cut array in a SINGLE aggregate pass + one
-    * broadcast cross join — at the 10⁹-row scale the gate exists
-    * for, per-column agg jobs would rescan the input once per spec.
-    */
-  def gatedNtiles(s: SparkSession, df: DataFrame, exact: Boolean,
+  def gatedNtiles(s: SparkSession, df: DataFrame,
       specs: Seq[(String, Boolean, String)], tiebreak: String,
       n: Int): DataFrame = {
-    if (exact) {
+    if (fitsExactNtile(s, df)) {
       specs.foldLeft(df) { case (d, (valueCol, descending, out)) =>
         val order =
           if (descending) Seq(col(valueCol).desc, col(tiebreak))

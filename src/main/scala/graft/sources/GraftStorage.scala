@@ -418,7 +418,8 @@ final case class GraftStorage(
       try {
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new org.apache.hadoop.fs.Path(f), conf))
+            .fromPath(new org.apache.hadoop.fs.Path(f), conf),
+          org.apache.parquet.HadoopReadOptions.builder(conf).build())
         try footerBounds(reader.getFooter.getBlocks.asScala.toSeq, column, dt)
         finally reader.close()
       } catch { case _: Exception => None }
@@ -723,7 +724,8 @@ final case class GraftStorage(
       GraftStorage.onDriverPool(parts, threads = 16) { st =>
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(st, hconf))
+            .fromStatus(st, hconf),
+          org.apache.parquet.HadoopReadOptions.builder(hconf).build())
         val fields =
           try conv.convert(r.getFooter.getFileMetaData.getSchema)
             .fields.map(f => f.name -> f.dataType).toMap
@@ -2396,40 +2398,25 @@ final case class GraftStorage(
     }
   }
 
-  /** Footer row count of one freshly committed parquet file — a
-    * KB-scale metadata read, executed once per NEW file at commit
-    * time (never per table file).
-    */
-  private def footerRowCount(f: String): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(f),
-      spark.sparkContext.hadoopConfiguration)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
-  }
-
   /** `R\t<rows>\t<path>` manifest lines for a commit's fresh files —
     * row counts IN THE LOG, so `countVersioned` answers COUNT(*) from
-    * manifests alone.
+    * manifests alone. Each is a KB-scale footer read, once per NEW file
+    * at commit time (never per table file).
     */
-  private[sources] def rowCountLines(files: Seq[String]): Seq[String] =
-    if (files.size <= 1)
-      files.map(f => s"R\t${footerRowCount(f)}\t$f")
-    else {
-      // parallel footer opens (the fixed-8 pool the index merger
-      // uses): serial reads cost ~0.2 s per 30-file commit locally
-      // and a round trip per file on an object store
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(8, files.size))
-      try {
-        val futs = files.map { f =>
-          pool.submit(new java.util.concurrent.Callable[String] {
-            override def call(): String = s"R\t${footerRowCount(f)}\t$f"
-          })
-        }
-        futs.map(_.get())
-      } finally pool.shutdown()
+  private[sources] def rowCountLines(files: Seq[String]): Seq[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def line(f: String) = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile
+          .fromPath(new org.apache.hadoop.fs.Path(f), conf),
+        org.apache.parquet.HadoopReadOptions.builder(conf).build())
+      try s"R\t${r.getRecordCount}\t$f" finally r.close()
     }
+    // parallel footer opens: serial reads cost ~0.2 s per 30-file
+    // commit locally and a round trip per file on an object store
+    if (files.size <= 1) files.map(line)
+    else GraftStorage.onDriverPool(files)(line)
+  }
 
   /** COUNT(*) at metadata rate: when every data file of the snapshot
     * carries an `R` row-count line and no deletion vector is in play,

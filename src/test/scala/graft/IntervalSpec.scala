@@ -12,8 +12,10 @@ class IntervalSpec extends AnyFunSuite {
   import SparkTestSession.{spark, SF}
   import spark.implicits._
 
-  private lazy val merged = operators.IntervalAnalytics
-    .intervalMerge(spark, SF).cache()
+  // cached with the plan above the one-partition gate: the plan
+  // hygiene test below reads this cached plan back
+  private lazy val merged = OnePartitionSpec.withConf(OnePartitionSpec.Shut)(
+    operators.IntervalAnalytics.intervalMerge(spark, SF).cache())
 
   test("merged islands are disjoint, non-touching, and conserve the census") {
     val rows = merged.orderBy($"user_id", $"island").collect()
@@ -141,12 +143,15 @@ class IntervalSpec extends AnyFunSuite {
 
   test("interval family plan hygiene: merge/coverage shuffle once, " +
     "closest plans no join") {
-    def exec(df: org.apache.spark.sql.DataFrame) = {
-      df.collect()
-      // AQE toString prints Final AND Initial plans — count only final
-      df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-    }
+    // the plan above the one-partition gate
+    def exec(df: => org.apache.spark.sql.DataFrame) =
+      OnePartitionSpec.withConf(OnePartitionSpec.Shut) {
+        val d = df
+        d.collect()
+        // AQE toString prints Final AND Initial plans — count only final
+        d.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==")(0)
+      }
     def hashExchanges(p: String): Int =
       "Exchange hashpartitioning".r.findAllIn(p).length
     val pm = exec(operators.IntervalAnalytics.intervalMerge(spark, SF))

@@ -174,10 +174,13 @@ class OperatorSpec extends AnyFunSuite {
       mins.map(r => (r.getString(0), r.getDouble(1))).toSet)
     // plan: partial ObjectHashAggregate (map-side k-bounded heap)
     // before ONE exchange; no Window operator anywhere
-    val df = operators.SortsSets.topkGrouped(spark, SF)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
+    // the plan above the one-partition gate
+    val plan = OnePartitionSpec.withConf(OnePartitionSpec.Shut) {
+      val df = operators.SortsSets.topkGrouped(spark, SF)
+      df.collect()
+      df.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==")(0)
+    }
     assert(plan.contains("ObjectHashAggregate"), plan)
     assert(plan.contains("partial_top_k_rows"), plan)
     assert(!plan.contains("Window"), plan)

@@ -58,7 +58,9 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("catalog stats + CBO flip the filtered-dim join to broadcast") {
+    // both halves pin the plan above the one-partition gate
     operators.Joins.withCbo(spark) { scoped =>
+      scoped.conf.set(OnePartitionSpec.Shut._1, OnePartitionSpec.Shut._2)
       val p = plan(operators.Joins.cboDf(scoped, SF))
       assert(p.contains("BroadcastHashJoin"),
         s"CBO filter estimation should pick broadcast:\n${p.take(3000)}")
@@ -66,7 +68,8 @@ class PlanQualitySpec extends AnyFunSuite {
     // same query, same tiny threshold, CBO off: the file-size
     // estimate is above threshold, so no broadcast — the STATS made
     // the difference, not the data
-    val confs = Seq("spark.sql.autoBroadcastJoinThreshold" -> "4096")
+    val confs = Seq("spark.sql.autoBroadcastJoinThreshold" -> "4096",
+      OnePartitionSpec.Shut)
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
@@ -81,6 +84,8 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("runtime bloom filter is injected into the fact scan side") {
     operators.Joins.withRuntimeBloomFilter(spark) { scoped =>
+      // the plan above the one-partition gate: a shuffle join
+      scoped.conf.set(OnePartitionSpec.Shut._1, OnePartitionSpec.Shut._2)
       val df = operators.Joins.runtimeFilterDf(scoped, SF)
       val opt = df.queryExecution.optimizedPlan.toString
       assert(opt.contains("might_contain") && opt.contains("bloom_filter_agg"),
@@ -338,7 +343,9 @@ class PlanQualitySpec extends AnyFunSuite {
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "10KB",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      // the plan above the one-partition gate: a shuffle join
+      OnePartitionSpec.Shut)
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
@@ -434,8 +441,9 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("sequence packing shuffles once on the group key, not per stage") {
-    val p = llm.Curate.packSequences(spark, SF)
-      .queryExecution.executedPlan.toString
+    // the plan above the one-partition gate
+    val p = OnePartitionSpec.withConf(OnePartitionSpec.Shut)(
+      llm.Curate.packSequences(spark, SF).queryExecution.executedPlan.toString)
     // window on grp, then groupBy(grp, pack): hashpartitioning(grp)
     // already clusters (grp, pack), so the agg must reuse it
     val hashExchanges = p.linesIterator
@@ -456,8 +464,9 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("sessionization: lag, cumsum, and the session agg share ONE user shuffle") {
-    val p = operators.Windows.winSessionize(spark, SF)
-      .queryExecution.executedPlan.toString
+    // the plan above the one-partition gate
+    val p = OnePartitionSpec.withConf(OnePartitionSpec.Shut)(
+      operators.Windows.winSessionize(spark, SF).queryExecution.executedPlan.toString)
     // both windows and the groupBy(user_id, session_idx) are served by
     // hashpartitioning(user_id) — a second exchange would shuffle the
     // whole event stream again at scale
