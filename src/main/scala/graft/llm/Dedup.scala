@@ -1,7 +1,9 @@
 package graft.llm
 
 import graft.{Iterate, QueryModule, T}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.operators.ScaleGate
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators over the documents table — SURVEY.md §2.11
@@ -30,27 +32,16 @@ object Dedup extends QueryModule {
     * passes before the first gram existed. Row form feeds the
     * inverted index and the MinHash aggregate with no re-shaping.
     */
-  def shingleRows(docs: DataFrame): DataFrame = {
-    // parallelism guard: the corpus scan may be narrower than the
-    // cluster (one parquet file locally), and with no downstream
-    // exchange left the explode and everything checkpointed from it
-    // would inherit that width. Widening shuffles the DOCS (rows =
-    // corpus docs) — the bytes the old global distinct shuffled were
-    // the exploded SHINGLES, ~two orders of magnitude more rows. A
-    // corpus already wider than the cluster passes through.
-    val spark = docs.sparkSession
-    val cores = spark.sparkContext.defaultParallelism
-    val wide =
-      if (docs.rdd.getNumPartitions >= cores) docs
-      // keyed BY doc_id, not round-robin: the localCheckpoint every
-      // consumer takes preserves the hash partitioning, so their
-      // per-doc stages (size/minhash groupBy(doc_id), the PPJoin
-      // prefix-rank window) read it exchange-free
-      else docs.repartition(cores, col("doc_id"))
-    wide.select(col("doc_id"),
+  def shingleRows(docs: DataFrame): DataFrame =
+    // widening shuffles the DOCS, ~two orders of magnitude fewer rows
+    // than the exploded shingles the old global distinct shuffled
+    ScaleGate.widen(docs, col("doc_id")).select(col("doc_id"),
       explode(array_distinct(
         graft.functions.NgramFunctions.ngrams(col("text"), 3))).as("tok"))
-  }
+
+  /** (doc_id, n) rows: each doc's distinct-shingle count. */
+  private def docSizes(shingles: DataFrame): DataFrame =
+    shingles.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
 
   /** Exact dedup: content-hash cardinality (dropDuplicates analogue,
     * reduced to a checkable summary).
@@ -75,7 +66,7 @@ object Dedup extends QueryModule {
     // the per-branch codegen units small) instead of recomputing the
     // explode+window pipeline per branch
     val t = shingleRows(T.t(s, dir, "documents")).localCheckpoint()
-    val sz = t.groupBy($"doc_id").agg(count(lit(1)).as("n"))
+    val sz = docSizes(t)
     val inter = t.as("a").join(t.as("b"), "tok")
       .filter($"a.doc_id" < $"b.doc_id")
       .groupBy($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
@@ -159,7 +150,7 @@ object Dedup extends QueryModule {
         .select(explode(array($"doc_a", $"doc_b")).as("doc_id")).distinct()
       shingles.join(docs, Seq("doc_id"), "left_semi")
     } else shingles
-    val sz = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
+    val sz = docSizes(sh)
     val inter = cand
       .join(sh.as("ta"), $"ta.doc_id" === $"doc_a")
       .join(sh.as("tb"), $"tb.doc_id" === $"doc_b" && $"ta.tok" === $"tb.tok")
@@ -188,15 +179,20 @@ object Dedup extends QueryModule {
     * and feed every stage.
     */
   private[graft] def dedupNearOn(s: SparkSession, t: DataFrame): DataFrame = {
-    import s.implicits._
     val bands = bandRows(minhashSigs(t))
-    val candidates = bands.as("a")
-      .join(bands.as("b"), Seq("band", "bh"))
-      .filter($"a.doc_id" < $"b.doc_id")
-      .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
-      .distinct()
-    verifyPairs(s, candidates, t)
+    verifyPairs(s, bandPairs(bands, bands).distinct(), t)
   }
+
+  /** THE band-bucket candidate join: (doc_a, doc_b), doc_a < doc_b,
+    * per shared (band, bh) bucket — repeats included, callers dedup.
+    * In the corpus × batch forms (incremental, stored PPJoin) every
+    * corpus id is ≤ the cut and every batch id above it, so the
+    * filter drops no pair there; self-joins need it.
+    */
+  private[graft] def bandPairs(a: DataFrame, b: DataFrame): DataFrame =
+    a.as("a").join(b.as("b"), Seq("band", "bh"))
+      .filter(col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
 
   /** PPJoin-style EXACT similarity join via prefix filtering — the
     * deterministic complement to MinHash (which trades a ~1e-11 miss
@@ -229,7 +225,7 @@ object Dedup extends QueryModule {
     * regime GenScale's 30-word vocab reaches at sf1), its posting
     * list is O(N) and the candidate join degenerates to all-pairs:
     * r03 measured 5.0× at 10× data from exactly this. The hybrid
-    * routes around it: prefix tokens with df ≤ cap (5% of the corpus)
+    * routes around it: prefix tokens with df ≤ cap ([[dfCapOf]])
     * drive the EXACT inverted-index path unchanged, and the docs
     * whose prefixes contain saturated tokens — the only docs a
     * saturated token could have paired — fall back to banded MinHash
@@ -243,6 +239,68 @@ object Dedup extends QueryModule {
     * guarantee instead of a proof — the price of not being O(N²).
     */
   private val DfSatFrac = 0.05
+  private val PpjoinTau = 0.5
+
+  /** The df-saturation cap of an `nDocs` corpus (floored at 64). */
+  private def dfCapOf(nDocs: Long): Long =
+    math.max(64L, (DfSatFrac * nDocs).toLong)
+
+  /** (tok, df) rows: each shingle's document frequency. */
+  private def tokenDf(shingles: DataFrame): DataFrame =
+    shingles.groupBy(col("tok")).agg(count(lit(1)).as("df"))
+
+  /** THE prefix build: (doc_id, tok, df, pos, n) rows of each doc's
+    * first n − ⌈τn⌉ + 1 shingles in (df, tok) order; tokens `dfTab`
+    * lacks rank as df = 0 (the stored form's frozen order). No
+    * broadcast hint on the df join: the vocabulary scales with the
+    * corpus (AQE may still pick one when it is small).
+    */
+  private def prefixRows(shingles: DataFrame, dfTab: DataFrame,
+      tau: Double): DataFrame =
+    shingles.join(dfTab, Seq("tok"), "left_outer")
+      .withColumn("df", coalesce(col("df"), lit(0L)))
+      .withColumn("pos", row_number().over(
+        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("tok"))))
+      .join(docSizes(shingles), "doc_id")
+      .filter(col("pos") <= col("n") - ceil(lit(tau) * col("n")) + 1)
+      .select(col("doc_id"), col("tok"), col("df"), col("pos"), col("n"))
+
+  /** THE exact rare-token candidate join over two prefix tables:
+    * (doc_a, doc_b) pairs sharing a prefix token with df ≤ `dfCap`
+    * that pass the size filter and the POSITION filter (the PPJoin
+    * refinement that pays for the exact verify): the globally smallest
+    * shared token w — provably inside both prefixes, and recoverable
+    * per pair as min(struct(df, tok, …)) — bounds the whole
+    * intersection: every other shared token sorts after w in BOTH
+    * docs, so o ≤ min(na−pa, nb−pb)+1. Pairs whose bound can't reach
+    * the τ-overlap ⌈τ(na+nb)/(1+τ)⌉ die here, BEFORE the verify join
+    * expands them by |doc| shingles. doc_a < doc_b as in [[bandPairs]].
+    */
+  private def prefixCandidates(a: DataFrame, b: DataFrame, tau: Double,
+      dfCap: Long): DataFrame =
+    a.filter(col("df") <= dfCap).as("a")
+      .join(b.filter(col("df") <= dfCap).as("b"), "tok")
+      .filter(col("a.doc_id") < col("b.doc_id") &&
+        col("a.n") >= lit(tau) * col("b.n") &&
+        col("b.n") >= lit(tau) * col("a.n"))
+      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .agg(min(struct(col("a.df").as("df"), col("tok"),
+        col("a.pos").as("pa"), col("b.pos").as("pb"),
+        col("a.n").as("na"), col("b.n").as("nb"))).as("w"))
+      .filter(least(col("w.na") - col("w.pa"), col("w.nb") - col("w.pb")) + 1 >=
+        ceil(lit(tau / (1 + tau)) * (col("w.na") + col("w.nb"))))
+      .select(col("doc_a"), col("doc_b"))
+
+  /** Docs whose prefix holds a token with df > `dfCap`: the only
+    * docs a saturated token could pair, so the only ones the MinHash
+    * fallback bands.
+    */
+  private def satDocs(prefix: DataFrame, dfCap: Long): DataFrame =
+    prefix.filter(col("df") > dfCap).select(col("doc_id")).distinct()
+
+  /** Band rows of the shingled docs listed in `docs`. */
+  private def bandsOf(shingles: DataFrame, docs: DataFrame): DataFrame =
+    bandRows(minhashSigs(shingles.join(docs, "doc_id")))
 
   /** ADAPTIVE CROSSOVER (the `adaptiveBinWidth` pattern applied to
     * similarity join): prefix+position filtering earns its extra
@@ -268,17 +326,21 @@ object Dedup extends QueryModule {
   private val InvertedBudgetFactor = 256.0
 
   def dedupPpjoin(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val tau = 0.5
     val t = shingleRows(T.t(s, dir, "documents")).localCheckpoint()
-    val sz = t.groupBy($"doc_id").agg(count(lit(1)).as("n"))
     // one metadata-sized scalar (corpus doc count) picks the df cap;
-    // sz is a hash-agg over checkpointed shingles, not a corpus rescan
-    val nDocs = sz.count()
-    val dfCap = math.max(64L, (DfSatFrac * nDocs).toLong)
-    val dfTab = t.groupBy($"tok").agg(count(lit(1)).as("df"))
-      .localCheckpoint()
+    // a hash-agg over checkpointed shingles, not a corpus rescan
+    ppjoinWith(s, t, InvertedBudgetFactor, dfCapOf(docSizes(t).count()))
+  }
+
+  /** [[dedupPpjoin]] over materialized shingles with the caller's
+    * crossover budget (0 forces the prefix path) and df cap (0
+    * saturates every token, Long.MaxValue none).
+    */
+  private[graft] def ppjoinWith(s: SparkSession, t: DataFrame,
+      invertedBudget: Double, dfCap: Long): DataFrame = {
+    import s.implicits._
+    val tau = PpjoinTau
+    val dfTab = tokenDf(t).localCheckpoint()
     // measured df distribution → path choice (scalar aggregate)
     val m = dfTab.agg(
       sum($"df".cast("double") * $"df").as("sq"),
@@ -286,10 +348,9 @@ object Dedup extends QueryModule {
     // empty corpus (every doc shorter than the shingle width): both
     // sums are NULL — take the one-pass branch, which flows empty
     // frames to an empty result
-    if (m.isNullAt(0) ||
-        m.getDouble(0) <= InvertedBudgetFactor * m.getDouble(1)) {
+    if (m.isNullAt(0) || m.getDouble(0) <= invertedBudget * m.getDouble(1)) {
       // flat-df corpus: one-pass exact inverted join
-      val tt = t.join(sz, "doc_id")
+      val tt = t.join(docSizes(t), "doc_id")
       return tt.as("a").join(tt.as("b"), "tok")
         .filter($"a.doc_id" < $"b.doc_id" &&
           $"a.n" >= lit(tau) * $"b.n" && $"b.n" >= lit(tau) * $"a.n")
@@ -302,46 +363,44 @@ object Dedup extends QueryModule {
         .orderBy($"doc_a", $"doc_b")
     }
     // Zipfian regime: prefix + position machinery pays for itself
-    // df join stays a shuffle join by design: the shingle vocabulary
-    // scales with the corpus (no broadcast hint — AQE may still pick
-    // one when the vocab is actually small)
-    val ranked = t.join(dfTab, "tok")
-      .withColumn("pos", row_number().over(
-        Window.partitionBy($"doc_id").orderBy($"df", $"tok")))
-    val prefix = ranked.join(sz, "doc_id")
-      .filter($"pos" <= $"n" - ceil(lit(tau) * $"n") + 1)
-      .select($"doc_id", $"tok", $"df", $"pos", $"n")
-      .localCheckpoint()
-    val rare = prefix.filter($"df" <= dfCap)
-    // POSITION filter (the PPJoin refinement that pays for the exact
-    // verify): the globally smallest shared token w — provably inside
-    // both prefixes, and recoverable per pair as min(struct(df, tok,
-    // …)) — bounds the whole intersection: every other shared token
-    // sorts after w in BOTH docs, so o ≤ min(na−pa, nb−pb)+1. Pairs
-    // whose bound can't reach the τ-overlap ⌈τ(na+nb)/(1+τ)⌉ die
-    // here, BEFORE the verify join expands them by |doc| shingles.
-    val candExact = rare.as("a")
-      .join(rare.as("b"), "tok")
-      .filter($"a.doc_id" < $"b.doc_id" &&
-        $"a.n" >= lit(tau) * $"b.n" && $"b.n" >= lit(tau) * $"a.n")
-      .groupBy($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
-      .agg(min(struct($"a.df".as("df"), $"tok",
-        $"a.pos".as("pa"), $"b.pos".as("pb"),
-        $"a.n".as("na"), $"b.n".as("nb"))).as("w"))
-      .filter(least($"w.na" - $"w.pa", $"w.nb" - $"w.pb") + 1 >=
-        ceil(lit(tau / (1 + tau)) * ($"w.na" + $"w.nb")))
-      .select($"doc_a", $"doc_b")
-    // Saturated regime: only docs whose prefix CONTAINS a saturated
-    // token can form a pair the exact path missed — band just those.
-    val satDocs = prefix.filter($"df" > dfCap).select($"doc_id").distinct()
-    val satBands = bandRows(minhashSigs(
-      t.join(satDocs, "doc_id")))
-    val candLsh = satBands.as("a")
-      .join(satBands.as("b"), Seq("band", "bh"))
-      .filter($"a.doc_id" < $"b.doc_id")
-      .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
-    val candidates = candExact.unionByName(candLsh).distinct()
+    val prefix = prefixRows(t, dfTab, tau).localCheckpoint()
+    val sat = bandsOf(t, satDocs(prefix, dfCap))
+    val candidates = prefixCandidates(prefix, prefix, tau, dfCap)
+      .unionByName(bandPairs(sat, sat)).distinct()
     verifyPairs(s, candidates, t)
+  }
+
+  /** Corpus/batch cut of the stored and incremental forms (max/2). */
+  private def cutOf(docs: DataFrame): Long =
+    docs.agg(max(col("doc_id"))).head().getLong(0) / 2
+
+  private def ppjoinIndexFixture(s: SparkSession, dir: String): String =
+    graft.Fixtures.ensure(dir, "ppjoin_index") { out =>
+      import s.implicits._
+      val docs = T.t(s, dir, "documents")
+      val ct = shingleRows(docs.filter($"doc_id" <= cutOf(docs)))
+        .localCheckpoint()
+      val dfTab = tokenDf(ct)
+      prefixRows(ct, dfTab, PpjoinTau)
+        .write.mode("overwrite").parquet(s"$out/prefix")
+      ct.write.mode("overwrite").parquet(s"$out/shingles")
+      dfTab.write.mode("overwrite").parquet(s"$out/df")
+      // banded MinHash signatures of the CORPUS, for the probe-time
+      // df-saturation fallback (dedupPpjoin's hybrid, stored form):
+      // saturated-prefix corpus docs must be pairable WITHOUT a
+      // corpus rescan, so their band rows ride the index
+      bandRows(minhashSigs(ct))
+        .write.mode("overwrite").parquet(s"$out/bands")
+      // the saturation cap is part of the FROZEN order contract:
+      // defined once, from the indexed corpus, used by both sides
+      val nCorpusDocs = docSizes(ct).count()
+      Seq((nCorpusDocs, dfCapOf(nCorpusDocs)))
+        .toDF("n_docs", "df_cap")
+        .write.mode("overwrite").parquet(s"$out/meta")
+    }
+
+  override def prepare(s: SparkSession, dir: String): Unit = {
+    ppjoinIndexFixture(s, dir); ()
   }
 
   /** PPJoin against a PERSISTED prefix index — the batch-ingest form
@@ -359,93 +418,34 @@ object Dedup extends QueryModule {
     * frequencies drift. Verification reads corpus shingles FROM THE
     * INDEX. Same split contract as `llm_dedup_incremental` (corpus =
     * ids ≤ max/2, batch = the rest), so it shares that oracle.
+    *
+    * The df cap comes from the index's meta — the frozen-order
+    * contract extends to saturation: both sides agree on what's hot
+    * because both rank by the STORED df.
     */
-  private val PpjoinTau = 0.5
-
-  private def ppjoinIndexFixture(s: SparkSession, dir: String): String =
-    graft.Fixtures.ensure(dir, "ppjoin_index") { out =>
-      import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      val docs = T.t(s, dir, "documents")
-      val cut = docs.agg(max($"doc_id")).head().getLong(0) / 2
-      val ct = shingleRows(docs.filter($"doc_id" <= cut)).localCheckpoint()
-      val dfTab = ct.groupBy($"tok").agg(count(lit(1)).as("df"))
-      val sz = ct.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-      ct.join(dfTab, "tok")
-        .withColumn("pos", row_number().over(
-          Window.partitionBy($"doc_id").orderBy($"df", $"tok")))
-        .join(sz, "doc_id")
-        .filter($"pos" <= $"n" - ceil(lit(PpjoinTau) * $"n") + 1)
-        .select($"doc_id", $"tok", $"df", $"pos", $"n")
-        .write.mode("overwrite").parquet(s"$out/prefix")
-      ct.write.mode("overwrite").parquet(s"$out/shingles")
-      dfTab.write.mode("overwrite").parquet(s"$out/df")
-      // banded MinHash signatures of the CORPUS, for the probe-time
-      // df-saturation fallback (dedupPpjoin's hybrid, stored form):
-      // saturated-prefix corpus docs must be pairable WITHOUT a
-      // corpus rescan, so their band rows ride the index
-      bandRows(minhashSigs(ct))
-        .write.mode("overwrite").parquet(s"$out/bands")
-      // the saturation cap is part of the FROZEN order contract:
-      // defined once, from the indexed corpus, used by both sides
-      val nCorpusDocs = sz.count()
-      Seq((nCorpusDocs, math.max(64L, (DfSatFrac * nCorpusDocs).toLong)))
-        .toDF("n_docs", "df_cap")
-        .write.mode("overwrite").parquet(s"$out/meta")
-    }
-
-  override def prepare(s: SparkSession, dir: String): Unit = {
-    ppjoinIndexFixture(s, dir); ()
+  def dedupPpjoinStored(s: SparkSession, dir: String): DataFrame = {
+    val idxDir = ppjoinIndexFixture(s, dir)
+    ppjoinStoredWith(s, dir,
+      s.read.parquet(s"$idxDir/meta").head().getAs[Long]("df_cap"))
   }
 
-  def dedupPpjoinStored(s: SparkSession, dir: String): DataFrame = {
+  /** [[dedupPpjoinStored]] with the caller's df cap. */
+  private[graft] def ppjoinStoredWith(s: SparkSession, dir: String,
+      dfCap: Long): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val tau = PpjoinTau
     val docs = T.t(s, dir, "documents")
-    val cut = docs.agg(max($"doc_id")).head().getLong(0) / 2
+    val cut = cutOf(docs)
     val idxDir = ppjoinIndexFixture(s, dir)
     val bt = shingleRows(docs.filter($"doc_id" > cut)).localCheckpoint()
-    val bsz = bt.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val bprefix = bt
-      .join(s.read.parquet(s"$idxDir/df"), Seq("tok"), "left_outer")
-      .withColumn("df", coalesce($"df", lit(0L)))
-      .withColumn("pos", row_number().over(
-        Window.partitionBy($"doc_id").orderBy($"df", $"tok")))
-      .join(bsz, "doc_id")
-      .filter($"pos" <= $"n" - ceil(lit(tau) * $"n") + 1)
-      .select($"doc_id", $"tok", $"df", $"pos", $"n")
-    // the same df-saturation hybrid as dedupPpjoin — without it the
-    // tok join degenerates toward all-pairs on boilerplate corpora
-    // (hot prefix tokens with O(N) posting lists on BOTH the stored
-    // and the batch side). Rare tokens drive the exact path; docs
-    // whose prefix touches a saturated token fall back to banded
-    // MinHash, with the CORPUS side's bands read from the index (no
-    // corpus rescan). The cap comes from the index's meta — the
-    // frozen-order contract extends to saturation: both sides agree
-    // on what's hot because both rank by the STORED df.
-    val dfCap = s.read.parquet(s"$idxDir/meta")
-      .head().getAs[Long]("df_cap")
     val aPrefix = s.read.parquet(s"$idxDir/prefix")
-    val rareA = aPrefix.filter($"df" <= dfCap)
-    val rareB = bprefix.filter($"df" <= dfCap)
-    val candExact = rareA.as("a")
-      .join(rareB.as("b"), "tok")
-      .filter($"a.n" >= lit(tau) * $"b.n" && $"b.n" >= lit(tau) * $"a.n")
-      .groupBy($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
-      .agg(min(struct($"a.df".as("df"), $"tok",
-        $"a.pos".as("pa"), $"b.pos".as("pb"),
-        $"a.n".as("na"), $"b.n".as("nb"))).as("w"))
-      .filter(least($"w.na" - $"w.pa", $"w.nb" - $"w.pb") + 1 >=
-        ceil(lit(tau / (1 + tau)) * ($"w.na" + $"w.nb")))
-      .select($"doc_a", $"doc_b")
-    val satA = aPrefix.filter($"df" > dfCap).select($"doc_id").distinct()
-    val satB = bprefix.filter($"df" > dfCap).select($"doc_id").distinct()
-    val bandsA = s.read.parquet(s"$idxDir/bands").join(satA, "doc_id")
-    val bandsB = bandRows(minhashSigs(bt.join(satB, "doc_id")))
-    val candLsh = bandsA.as("a").join(bandsB.as("b"), Seq("band", "bh"))
-      .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
-    val candidates = candExact.unionByName(candLsh).distinct()
+    val bPrefix =
+      prefixRows(bt, s.read.parquet(s"$idxDir/df"), PpjoinTau)
+    // corpus-side bands read from the index (no corpus rescan)
+    val satA = s.read.parquet(s"$idxDir/bands")
+      .join(satDocs(aPrefix, dfCap), "doc_id")
+    val candidates = prefixCandidates(aPrefix, bPrefix, PpjoinTau, dfCap)
+      .unionByName(bandPairs(satA, bandsOf(bt, satDocs(bPrefix, dfCap))))
+      .distinct()
     verifyPairs(s, candidates,
       s.read.parquet(s"$idxDir/shingles").unionByName(bt))
   }
@@ -606,15 +606,11 @@ object Dedup extends QueryModule {
   def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = T.t(s, dir, "documents")
-    val cut = docs.agg(max($"doc_id")).head().getLong(0) / 2
+    val cut = cutOf(docs)
     val t = shingleRows(docs).localCheckpoint()
     val bands = bandRows(minhashSigs(t))
-    val corpusBands = bands.filter($"doc_id" <= cut)
-    val newBands = bands.filter($"doc_id" > cut)
-    val candidates = corpusBands.as("a")
-      .join(newBands.as("b"), Seq("band", "bh"))
-      .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
-      .distinct()
+    val candidates = bandPairs(bands.filter($"doc_id" <= cut),
+      bands.filter($"doc_id" > cut)).distinct()
     verifyPairs(s, candidates, t)
   }
 

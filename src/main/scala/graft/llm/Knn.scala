@@ -29,48 +29,50 @@ object Knn extends QueryModule {
   private def norm(v: Column): Column =
     sqrt(aggregate(transform(v, x => x * x), lit(0.0), (acc, x) => acc + x))
 
+  /** (vec_id, v, nrm) rows, widened ([[graft.operators.ScaleGate.widen]]). */
   private def base(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val raw = T.t(s, dir, "embeddings")
-    // parallelism guard (the shingleRows pattern): the embeddings scan
-    // may be narrower than the cluster (one parquet file locally), and
-    // the family's pipelines are broadcast-join map stages with NO
-    // downstream exchange — every localCheckpoint and distance kernel
-    // inherits the scan's width, so a 1-file corpus ran the whole PQ
-    // distance pass on ONE task (measured: pqDists 1.34 s → 0.22 s at
-    // sf0.1 once widened). Keyed by vec_id: checkpoints preserve the
-    // hash partitioning, so per-vector groupBy/window stages
-    // downstream run exchange-free. A corpus already wider than the
-    // cluster passes through untouched — at 100 TB this branch never
-    // fires.
-    val cores = s.sparkContext.defaultParallelism
-    val wide =
-      if (raw.rdd.getNumPartitions >= cores) raw
-      else raw.repartition(cores, $"vec_id")
-    wide.select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    graft.operators.ScaleGate.widen(T.t(s, dir, "embeddings"), $"vec_id")
+      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       .withColumn("nrm", norm($"v"))
   }
 
-  /** Brute-force cosine top-k for the first NQueries vectors. The
-    * similarity is the native CosineSimilarity expression — a fused
-    * codegen loop (same sequential accumulation as the HOF version).
+  /** THE top-k tail of every ANN variant: the first K rows per qid
+    * by (`order`, nid) as (qid, nid, score, rn), ordered by (qid, rn).
+    */
+  private def topKPerQuery(rows: DataFrame, order: Column,
+      score: Column): DataFrame =
+    rows
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(order, col("nid"))))
+      .filter(col("rn") <= K)
+      .select(col("qid"), col("nid"), score, col("rn"))
+      .orderBy(col("qid"), col("rn"))
+
+  /** THE exact cosine rerank of candidate (qid, qv, nid, nv) rows
+    * from any generator, self-matches dropped. The native
+    * CosineSimilarity is a fused codegen loop (same sequential
+    * accumulation as the HOF version).
+    */
+  private def cosineTopK(cand: DataFrame): DataFrame = {
+    val cos = round(col("cos"), 4)
+    topKPerQuery(
+      cand.filter(col("nid") =!= col("qid"))
+        .withColumn("cos",
+          graft.functions.VectorFunctions.cosine_sim(col("qv"), col("nv"))),
+      cos.desc, cos.as("cos_sim"))
+  }
+
+  /** Brute-force cosine top-k for the first NQueries vectors: every
+    * corpus vector is a candidate of every (broadcast) query.
     */
   def knn(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val b = base(s, dir)
     val q = b.filter($"vec_id" < NQueries)
       .select($"vec_id".as("qid"), $"v".as("qv"))
-    val c = b.select($"vec_id".as("nid"), $"v".as("nv"))
-    val w = Window.partitionBy($"qid")
-      .orderBy(round($"cos", 4).desc, $"nid")
-    c.crossJoin(broadcast(q))
-      .filter($"nid" =!= $"qid")
-      .withColumn("cos",
-        graft.functions.VectorFunctions.cosine_sim($"qv", $"nv"))
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" <= K)
-      .select($"qid", $"nid", round($"cos", 4).as("cos_sim"), $"rn")
-      .orderBy($"qid", $"rn")
+    cosineTopK(b.select($"vec_id".as("nid"), $"v".as("nv"))
+      .crossJoin(broadcast(q)))
   }
 
   private val NumPlanes = 6
@@ -127,25 +129,23 @@ object Knn extends QueryModule {
       .select($"vec_id".as("qid"), $"v".as("qv"),
         explode(probes).as("bucket"))
     val c = b.select($"vec_id".as("nid"), $"v".as("nv"), $"bucket")
-    val w = Window.partitionBy($"qid")
-      .orderBy(round($"cos", 4).desc, $"nid")
     // the 22 probe masks are distinct, so a candidate's bucket
     // matches at most ONE of a query's probe values — (qid, nid)
     // pairs are unique by construction and a dedup here would add a
     // full extra shuffle of the candidate set for no semantic effect
-    c.join(broadcast(q), "bucket")
-      .filter($"nid" =!= $"qid")
-      .select($"qid", $"nid", $"qv", $"nv")
-      .withColumn("cos",
-        graft.functions.VectorFunctions.cosine_sim($"qv", $"nv"))
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" <= K)
-      .select($"qid", $"nid", round($"cos", 4).as("cos_sim"), $"rn")
-      .orderBy($"qid", $"rn")
+    cosineTopK(c.join(broadcast(q), "bucket")
+      .select($"qid", $"nid", $"qv", $"nv"))
   }
 
   private val NumCells = 16
   private val NProbe = 4
+
+  /** The first NumCells vectors as centroids (cid, cv): the
+    * deterministic stand-in for a k-means fit ([[trainCentroids]]).
+    */
+  private def firstCells(b: DataFrame): DataFrame =
+    b.filter(col("vec_id") < NumCells)
+      .select(col("vec_id").as("cid"), col("v").as("cv"))
 
   /** IVF-style ANN: corpus vectors are assigned to their
     * nearest-centroid cell once (broadcast centroids, map-side argmax
@@ -159,9 +159,7 @@ object Knn extends QueryModule {
     import s.implicits._
     // materialized: feeds the centroid pick + both probe-plan branches
     val b = base(s, dir).localCheckpoint()
-    val cents = b.filter($"vec_id" < NumCells)
-      .select($"vec_id".as("cid"), $"v".as("cv"))
-    knnWithCells(s, b, cents)
+    knnWithCells(s, b, firstCells(b))
   }
 
   /** Lloyd-iteration spherical k-means, Spark-native: centroids stay
@@ -176,7 +174,6 @@ object Knn extends QueryModule {
   private[graft] def trainCentroids(s: SparkSession, b: DataFrame,
       k: Int, iters: Int): IndexedSeq[Seq[Double]] = {
     import s.implicits._
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
     var cents: IndexedSeq[Seq[Double]] = b.filter($"vec_id" < k)
       .orderBy($"vec_id").select($"v").collect()
       .map(_.getSeq[Double](0).toSeq).toIndexedSeq
@@ -228,10 +225,6 @@ object Knn extends QueryModule {
     knnWithCells(s, b, cents)
   }
 
-  /** Shared IVF probe plan: assign corpus rows to their top-1 cell,
-    * probe queries into their NProbe cells, equi-join on cell id,
-    * exact cosine rank.
-    */
   /** Broadcast-centroid cell ranking — THE assignment every IVF
     * surface shares: rows (vec_id, v, …) × centroids (cid, cv) gain
     * csim and crn (cosine rank of the centroid; ties to the smaller
@@ -243,7 +236,6 @@ object Knn extends QueryModule {
     */
   private def cellRank(b: DataFrame, cents: DataFrame,
       maxRank: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     b.crossJoin(broadcast(cents))
       .withColumn("csim",
         graft.functions.VectorFunctions.cosine_sim(col("v"), col("cv")))
@@ -253,6 +245,10 @@ object Knn extends QueryModule {
       .filter(col("crn") <= maxRank)
   }
 
+  /** Shared IVF probe plan: assign corpus rows to their top-1 cell,
+    * probe queries into their NProbe cells, equi-join on cell id,
+    * [[cosineTopK]].
+    */
   private def knnWithCells(s: SparkSession, b: DataFrame,
       cents: DataFrame): DataFrame = {
     import s.implicits._
@@ -264,15 +260,7 @@ object Knn extends QueryModule {
       .select($"vec_id".as("nid"), $"v".as("nv"), $"cid")
     val qprobe = ranked.filter($"vec_id" < NQueries && $"crn" <= NProbe)
       .select($"vec_id".as("qid"), $"v".as("qv"), $"cid")
-    val w = Window.partitionBy($"qid").orderBy(round($"cos", 4).desc, $"nid")
-    corpus.join(broadcast(qprobe), "cid")
-      .filter($"nid" =!= $"qid")
-      .withColumn("cos",
-        graft.functions.VectorFunctions.cosine_sim($"qv", $"nv"))
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" <= K)
-      .select($"qid", $"nid", round($"cos", 4).as("cos_sim"), $"rn")
-      .orderBy($"qid", $"rn")
+    cosineTopK(corpus.join(broadcast(qprobe), "cid"))
   }
 
   private val StoredQueries = 5
@@ -295,14 +283,16 @@ object Knn extends QueryModule {
     */
   private def ivfStoredFixture(s: SparkSession, dir: String): String =
     graft.Fixtures.ensure(dir, "ivf_stored") { out =>
-      import s.implicits._
-      val b = base(s, dir).localCheckpoint()
-      val cents = b.filter($"vec_id" < NumCells)
-        .select($"vec_id".as("cid"), $"v".as("cv"))
-      val assigned = cellRank(b, cents, 1)
-        .select($"vec_id", $"v", $"cid".cast("int").as("cell"))
-      graft.sources.GraftStorage(s).writeIndexed(assigned, out, "cell", "cell")
+      graft.sources.GraftStorage(s)
+        .writeIndexed(homeCells(s, dir), out, "cell", "cell")
     }
+
+  /** (vec_id, v, cell): the home cells both stored IVF indexes hold. */
+  private def homeCells(s: SparkSession, dir: String): DataFrame = {
+    val b = base(s, dir).localCheckpoint()
+    cellRank(b, firstCells(b), 1)
+      .select(col("vec_id"), col("v"), col("cid").cast("int").as("cell"))
+  }
 
   def knnIvfStored(s: SparkSession, dir: String): DataFrame =
     ivfProbeStored(s, dir, ivfStoredFixture(s, dir))
@@ -324,12 +314,7 @@ object Knn extends QueryModule {
   private def ivfAppendFixture(s: SparkSession, dir: String): String =
     graft.Fixtures.ensure(dir, "ivf_appended") { out =>
       import s.implicits._
-      val b = base(s, dir).localCheckpoint()
-      val cents = b.filter($"vec_id" < NumCells)
-        .select($"vec_id".as("cid"), $"v".as("cv"))
-      val assigned = cellRank(b, cents, 1)
-        .select($"vec_id", $"v", $"cid".cast("int").as("cell"))
-        .localCheckpoint()
+      val assigned = homeCells(s, dir).localCheckpoint()
       val st = graft.sources.GraftStorage(s)
       st.writeIndexed(assigned.filter($"vec_id" % 2 === 0), out,
         "cell", "cell")
@@ -341,12 +326,10 @@ object Knn extends QueryModule {
       out: String): DataFrame = {
     import s.implicits._
     val b = base(s, dir)
-    val cents = b.filter($"vec_id" < NumCells)
-      .select($"vec_id".as("cid"), $"v".as("cv"))
     // probe ranking for the query vectors only — corpus assignment
     // comes from DISK, not recomputation
     val qprobe = cellRank(b.filter($"vec_id" < StoredQueries),
-      cents, NProbe)
+      firstCells(b), NProbe)
       .select($"vec_id".as("qid"), $"v".as("qv"), $"cid".cast("int").as("cell"))
       .localCheckpoint()
     val probedCells = qprobe.select($"cell").distinct()
@@ -354,15 +337,7 @@ object Knn extends QueryModule {
     val corpus = graft.sources.GraftStorage(s).readPruned(out)
       .filter($"cell".isin(probedCells: _*))
       .select($"vec_id".as("nid"), $"v".as("nv"), $"cell")
-    val w = Window.partitionBy($"qid").orderBy(round($"cos", 4).desc, $"nid")
-    corpus.join(broadcast(qprobe), "cell")
-      .filter($"nid" =!= $"qid")
-      .withColumn("cos",
-        graft.functions.VectorFunctions.cosine_sim($"qv", $"nv"))
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" <= K)
-      .select($"qid", $"nid", round($"cos", 4).as("cos_sim"), $"rn")
-      .orderBy($"qid", $"rn")
+    cosineTopK(corpus.join(broadcast(qprobe), "cell"))
   }
 
   /** Grid blocks per side for the exact pair join — at real scale
@@ -488,13 +463,11 @@ object Knn extends QueryModule {
   def semDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val b = base(s, dir).localCheckpoint()
-    val cents = b.filter($"vec_id" < NumCells)
-      .select($"vec_id".as("cid"), $"v".as("cv"))
     // cell-partitioned CACHE (not localCheckpoint): InMemoryRelation
     // advertises the partitioning, so the pair self-join reads both
     // sides from the same co-partitioned blocks — zero exchanges for
     // the quadratic step (the graph-family layout)
-    val assigned = cellRank(b, cents, 1)
+    val assigned = cellRank(b, firstCells(b), 1)
       .select($"vec_id", $"v", $"cid")
       .repartition(math.max(2,
         s.conf.get("spark.sql.shuffle.partitions", "32").toInt / 2), $"cid")
@@ -621,21 +594,7 @@ object Knn extends QueryModule {
     import s.implicits._
     val cand = ivfCandidates(s, dir)
     val sub = pqSub(s, dir)
-    val dists = pqDists(s, sub, pqCb0(s, sub))
-    val codes = pqArgmin(s, dists)
-      .select($"vec_id".as("nid"), $"m", $"c".as("code"))
-    val lut = dists.filter($"vec_id" < NQueries)
-      .select($"vec_id".as("qid"), $"m", $"c".as("code"), $"dist")
-    val wTop = Window.partitionBy($"qid").orderBy($"adc", $"nid")
-    cand.join(codes, "nid")
-      .join(broadcast(lut), Seq("qid", "m", "code"))
-      .groupBy($"qid", $"nid")
-      .agg(sum($"dist").as("adc"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter($"rn" <= K)
-      .select($"qid", $"nid",
-        round($"adc".cast(DoubleType), 4).as("adc_dist"), $"rn")
-      .orderBy($"qid", $"rn")
+    pqProbe(s, pqDists(s, sub, pqCb0(s, sub)), Some(cand))
   }
 
   /** The coarse quantizer's (qid, nid) candidate pairs: corpus
@@ -646,9 +605,7 @@ object Knn extends QueryModule {
   private def ivfCandidates(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val b = base(s, dir).localCheckpoint()
-    val cents = b.filter($"vec_id" < NumCells)
-      .select($"vec_id".as("cid"), $"v".as("cv"))
-    val rankedc = cellRank(b, cents, NProbe)
+    val rankedc = cellRank(b, firstCells(b), NProbe)
       .select($"vec_id", $"cid", $"crn")
       .localCheckpoint()
     val cellOf = rankedc.filter($"crn" === 1)
@@ -725,23 +682,23 @@ object Knn extends QueryModule {
       .select($"vec_id", $"m", ($"pk" % PqCodes).as("c"))
   }
 
-  /** Encode (WindowGroupLimit argmin) + asymmetric-distance top-k. */
-  private def pqProbe(s: SparkSession, dists: DataFrame): DataFrame = {
+  /** THE ADC rerank: encode (packed argmin), then asymmetric-distance
+    * top-k of every code row (or, given IVF `cand` (qid, nid) pairs,
+    * of the candidates' codes) against the broadcast query LUT.
+    */
+  private def pqProbe(s: SparkSession, dists: DataFrame,
+      cand: Option[DataFrame] = None): DataFrame = {
     import s.implicits._
     val codes = pqArgmin(s, dists)
       .select($"vec_id".as("nid"), $"m", $"c".as("code"))
-    val lut = dists.filter($"vec_id" < NQueries)
-      .select($"vec_id".as("qid"), $"m", $"c".as("code"), $"dist")
-    val wTop = Window.partitionBy($"qid").orderBy($"adc", $"nid")
-    codes.join(broadcast(lut), Seq("m", "code"))
-      .filter($"nid" =!= $"qid")
-      .groupBy($"qid", $"nid")
-      .agg(sum($"dist").as("adc"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter($"rn" <= K)
-      .select($"qid", $"nid",
-        round($"adc".cast(DoubleType), 4).as("adc_dist"), $"rn")
-      .orderBy($"qid", $"rn")
+    val lut = broadcast(dists.filter($"vec_id" < NQueries)
+      .select($"vec_id".as("qid"), $"m", $"c".as("code"), $"dist"))
+    val scored = cand match {
+      case Some(c) => c.join(codes, "nid").join(lut, Seq("qid", "m", "code"))
+      case None => codes.join(lut, Seq("m", "code")).filter($"nid" =!= $"qid")
+    }
+    topKPerQuery(scored.groupBy($"qid", $"nid").agg(sum($"dist").as("adc")),
+      $"adc", round($"adc".cast(DoubleType), 4).as("adc_dist"))
   }
 
   /** Per-label centroids in component form: (label, pos, n, sum_v) —
@@ -764,14 +721,6 @@ object Knn extends QueryModule {
       .orderBy($"label", $"pos")
   }
 
-  /** Recall@K of the IVF index vs exact brute force — the quality
-    * instrumentation every ANN deployment needs next to the index
-    * itself: per query, how many of the true top-K the probe plan
-    * recovered. Integer ppm (drift contract) rather than a float
-    * ratio. Both sides are the library's own oracled operators, so
-    * this composes two verified plans; the DuckDB oracle composes the
-    * same two SQL bodies.
-    */
   /** kNN CLASSIFIER evaluation — the standard embedding-space quality
     * probe (a labeled holdout classified by its K nearest neighbors'
     * majority vote): per true label, how many of the query vectors
@@ -799,6 +748,14 @@ object Knn extends QueryModule {
       .orderBy($"label")
   }
 
+  /** Recall@K of the IVF index vs exact brute force — the quality
+    * instrumentation every ANN deployment needs next to the index
+    * itself: per query, how many of the true top-K the probe plan
+    * recovered. Integer ppm (drift contract) rather than a float
+    * ratio. Both sides are the library's own oracled operators, so
+    * this composes two verified plans; the DuckDB oracle composes the
+    * same two SQL bodies.
+    */
   def knnRecall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val brute = knn(s, dir).select($"qid", $"nid")

@@ -50,7 +50,7 @@ object Mv extends QueryModule {
         count(lit(1)).as("cnt"),
         min($"l_shipdate").as("min_ship"),
         max($"l_shipdate").as("max_ship"),
-        hll_sketch_agg($"l_suppkey").as("hll_supp"))
+        hll_sketch_agg($"l_suppkey", HllLgK).as("hll_supp"))
   }
 
   private def buildCoarse(s: SparkSession, dir: String) = {
@@ -104,7 +104,7 @@ object Mv extends QueryModule {
         countCol = Some("cnt"),
         mins = Map("l_shipdate" -> "min_ship"),
         maxs = Map("l_shipdate" -> "max_ship"),
-        hlls = Map("l_suppkey" -> ("hll_supp", DefaultLgK)),
+        hlls = Map("l_suppkey" -> ("hll_supp", HllLgK)),
         sourceFingerprint = Some(srcFp)))
     // a COARSER summary over the same source: returnflag-only rollup.
     // The selector prefers it (fewest grouping columns = smallest
@@ -175,12 +175,15 @@ object Mv extends QueryModule {
     path
   }
 
-  /** Spark's default lgConfigK, read off the expression itself so a
-    * version bump can't silently diverge the registration.
+  /** lgConfigK of the MV's `hll_supp` sketch, of its registration
+    * and of mv_distinct_rollup's query — the rewrite fires only when
+    * the query's lgConfigK is the registered one. A sketch (and a
+    * union of such sketches) stays in its exact coupon regime up to
+    * 0.75·2^(lgK−3) distinct values: 12,288 here, above sf1's 10,000
+    * suppliers per flag. Spark's default 12 stops at 384 (sf0.1's
+    * 1,000 suppliers estimated as 988).
     */
-  private lazy val DefaultLgK =
-    new org.apache.spark.sql.catalyst.expressions.aggregate.HllSketchAgg(
-      org.apache.spark.sql.catalyst.expressions.Literal(0L)).lgConfigK
+  private[graft] val HllLgK = 17
 
   /** REFRESH MATERIALIZED VIEW: rebuild ALL FOUR summaries from the
     * current source and re-register with the fresh fingerprint — the
@@ -241,8 +244,8 @@ object Mv extends QueryModule {
   /** Distinct-count rollup from MV sketch partials: the per-(rf, ls)
     * HLL sketches union into per-rf sketches — register-wise max is
     * lossless, so the estimate equals the direct base-table sketch
-    * bit-for-bit (and, at this cardinality, the EXACT distinct count,
-    * which is what the DuckDB oracle checks).
+    * bit-for-bit (and, up to [[HllLgK]]'s coupon limit, the EXACT
+    * distinct count, which is what the DuckDB oracle checks).
     */
   def mvDistinctRollup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -251,7 +254,8 @@ object Mv extends QueryModule {
       T.t(s, dir, "lineitem")
         .groupBy($"l_returnflag")
         .agg(
-          hll_sketch_estimate(hll_sketch_agg($"l_suppkey")).as("n_supp"),
+          hll_sketch_estimate(hll_sketch_agg($"l_suppkey", HllLgK))
+            .as("n_supp"),
           count(lit(1)).as("cnt"))
     ).orderBy($"l_returnflag")
   }
@@ -391,7 +395,7 @@ object Mv extends QueryModule {
          |  FROM lineitem GROUP BY l_linestatus)
          |WHERE sum_price > 50000000 ORDER BY l_linestatus""".stripMargin,
     // the sketch stays in its exact (coupon) regime at fixture
-    // cardinalities, so the estimate IS the exact distinct count
+    // cardinalities (see HllLgK), so the estimate IS the exact count
     "mv_distinct_rollup" ->
       """SELECT l_returnflag,
         |  CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS n_supp,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -18,7 +18,8 @@ import org.apache.spark.sql.internal.SQLConf
   * report runs on `approx_percentile` cuts — one distributed pass,
   * no global sort, the documented 100 TB semantics
   * (llm_quality_cuts oracles the primitive with error-bound checks).
-  * The one-partition gate ([[onePartitionMaxBytes]]) probes nothing.
+  * The one-partition gate ([[onePartitionMaxBytes]]) and the
+  * narrow-scan widen ([[widen]]) probe nothing.
   */
 object ScaleGate {
 
@@ -61,6 +62,22 @@ object ScaleGate {
         minSize max conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
       else minSize)
     }
+
+  /** The narrow-scan widen: `df` hash-repartitioned on `key` to
+    * `defaultParallelism` partitions when it has fewer, else `df`
+    * itself (at 100 TB the scan is always wider and this never fires).
+    * A fixture table is one parquet file, and the LLM pipelines over
+    * it (the shingle explode, the embedding distance kernels) are map
+    * stages with no exchange downstream — every localCheckpoint and
+    * kernel would inherit the scan's one task (measured: pqDists
+    * 1.34 s → 0.22 s at sf0.1 once widened). Keyed, not round-robin:
+    * a localCheckpoint keeps the hash partitioning, so per-key
+    * groupBy and window stages downstream read it exchange-free.
+    */
+  def widen(df: DataFrame, key: Column): DataFrame = {
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions >= cores) df else df.repartition(cores, key)
+  }
 
   /** `ntile(n)` per `(valueCol, descending, out)` spec over a global
     * ordering of a plain non-null numeric column — exact (one global

@@ -49,8 +49,70 @@ class LlmSpec extends AnyFunSuite {
     val plan = pp.queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin") &&
       !plan.contains("CartesianProduct"), plan.take(2000))
+    // the fixture's flat df (Σdf²/Σdf ≈ 2) is under the inverted budget
+    assert(onePass(pp), "expected the one-pass inverted branch")
     assert(pairSet(pp) == exactPairs,
       s"missing=${exactPairs -- pairSet(pp)} extra=${pairSet(pp) -- exactPairs}")
+  }
+
+  // The fixtures never blow the inverted budget nor reach the df cap
+  // (max df ≤ 25 against a cap of 64), so the prefix/position path and
+  // the saturated LSH fallback run only when forced by these arguments.
+  private lazy val shingles =
+    llm.Dedup.shingleRows(T.t(spark, SF, "documents")).localCheckpoint()
+
+  /** The one-pass branch is the only one that aggregates first(n). */
+  private def onePass(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.toString.contains("first(")
+
+  test("ppjoin prefix path with no saturated token returns exactly the " +
+    "exact-jaccard pairs") {
+    val pp = llm.Dedup.ppjoinWith(spark, shingles, invertedBudget = 0,
+      dfCap = Long.MaxValue)
+    assert(!onePass(pp))
+    assert(pairSet(pp) == exactPairs,
+      s"missing=${exactPairs -- pairSet(pp)} extra=${pairSet(pp) -- exactPairs}")
+  }
+
+  test("ppjoin prefix path with every token saturated (all-LSH fallback) " +
+    "returns exactly the exact-jaccard pairs") {
+    val pp = llm.Dedup.ppjoinWith(spark, shingles, invertedBudget = 0,
+      dfCap = 0L)
+    assert(!onePass(pp))
+    assert(pairSet(pp) == exactPairs,
+      s"missing=${exactPairs -- pairSet(pp)} extra=${pairSet(pp) -- exactPairs}")
+  }
+
+  test("ppjoin keeps pairs at J = τ whose shared tokens end the prefix") {
+    // pair p is docs 2p and 2p+1: k tokens of each doc's own (df 1),
+    // m shared ones (df 2). Rarest-first puts the shared tokens LAST,
+    // so at J = m/(2k+m) = τ the pair shares only the prefix's tail
+    val specs = for (k <- 1 to 4; m <- Seq(2 * k - 1, 2 * k, 2 * k + 1))
+      yield (k, m)
+    val rows = specs.zipWithIndex.flatMap { case ((k, m), p) =>
+      val shared = (0 until m).map(i => s"p${p}_s$i")
+      Seq(2L * p, 2L * p + 1).flatMap { d =>
+        ((0 until k).map(i => s"d${d}_u$i") ++ shared).map(t => (d, t))
+      }
+    }
+    val want = specs.zipWithIndex.collect {
+      case ((k, m), p) if 2 * m >= 2 * k + m => (2L * p, 2L * p + 1)
+    }.toSet
+    val sh = rows.toDF("doc_id", "tok")
+    for (budget <- Seq(0.0, 256.0)) {
+      val got =
+        pairSet(llm.Dedup.ppjoinWith(spark, sh, budget, Long.MaxValue))
+      assert(got == want,
+        s"budget=$budget missing=${want -- got} extra=${got -- want}")
+    }
+  }
+
+  test("stored-index ppjoin with every corpus token saturated matches the " +
+    "LSH incremental pairs exactly") {
+    val stored = pairSet(llm.Dedup.ppjoinStoredWith(spark, SF, dfCap = 0L))
+    val lsh = pairSet(llm.Dedup.dedupIncremental(spark, SF))
+    assert(lsh.nonEmpty)
+    assert(stored == lsh, s"missing=${lsh -- stored} extra=${stored -- lsh}")
   }
 
   test("simhash banding recovers most planted near-dup pairs") {
@@ -389,10 +451,7 @@ class LlmSpec extends AnyFunSuite {
     val sh = llm.Dedup.shingleRows(T.t(spark, SF01, "documents"))
       .localCheckpoint()
     val bands = llm.Dedup.bandRows(llm.Dedup.minhashSigs(sh))
-    val candidates = bands.as("a").join(bands.as("b"), Seq("band", "bh"))
-      .filter($"a.doc_id" < $"b.doc_id")
-      .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
-      .distinct()
+    val candidates = llm.Dedup.bandPairs(bands, bands).distinct()
     def verify(prune: Boolean) =
       llm.Dedup.verifyPairsWith(spark, candidates, sh, prune)
     def semiJoins(df: org.apache.spark.sql.DataFrame) =
@@ -405,6 +464,21 @@ class LlmSpec extends AnyFunSuite {
     val rows = plain.as[(Long, Long, Double)].collect().toSeq
     assert(rows.nonEmpty)
     assert(pruned.as[(Long, Long, Double)].collect().toSeq == rows)
+  }
+
+  test("narrow-scan widen: a scan narrower than the cluster is hash-spread " +
+    "by its key, a scan as wide passes through") {
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    val cores = spark.sparkContext.defaultParallelism
+    assume(cores > 1)
+    val narrow = spark.range(100).toDF().coalesce(1)
+    val widened = operators.ScaleGate.widen(narrow, $"id")
+    assert(widened.rdd.getNumPartitions == cores)
+    assert(widened.queryExecution.optimizedPlan.collectFirst {
+      case r: RepartitionByExpression => r.partitionExpressions.map(_.sql)
+    } == Some(Seq("id")), widened.queryExecution.optimizedPlan)
+    val wide = spark.range(0, 100, 1, cores).toDF()
+    assert(operators.ScaleGate.widen(wide, $"id") eq wide)
   }
 
   test("PQ packed argmin raises ARITHMETIC_OVERFLOW past " +

@@ -98,12 +98,15 @@ class MvSpec extends AnyFunSuite {
     val paths = scannedPaths(df)
     assert(paths.nonEmpty && paths.forall(_.contains(operators.Mv.MvName)),
       s"expected only MV scans, got: $paths")
-    val direct = T.t(spark, SF, "lineitem")
+    def direct(lgK: Int) = T.t(spark, SF, "lineitem")
       .groupBy($"l_returnflag")
-      .agg(hll_sketch_estimate(hll_sketch_agg($"l_suppkey")).as("n_supp"),
+      .agg(hll_sketch_estimate(hll_sketch_agg($"l_suppkey", lgK)).as("n_supp"),
         count(lit(1)).as("cnt"))
       .orderBy($"l_returnflag")
-    assert(df.collect().toSeq == direct.collect().toSeq)
+    assert(df.collect().toSeq == direct(operators.Mv.HllLgK).collect().toSeq)
+    // a sketch at another lgConfigK cannot be answered from the MV's
+    val otherK = operators.Mv.withMvRewrite(direct(12))
+    assert(!scannedPaths(otherK).exists(_.contains(operators.Mv.MvName)))
     val exact = T.t(spark, SF, "lineitem")
       .groupBy($"l_returnflag")
       .agg(countDistinct($"l_suppkey").as("n_supp"), count(lit(1)).as("cnt"))

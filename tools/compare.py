@@ -39,16 +39,24 @@ def main():
             print(f"FAIL {name}: no spark output")
             n_fail += 1
             continue
+        # the oracle and the Spark-output read fail for different
+        # reasons (e.g. DuckDB out of temp space vs a bad Spark write):
+        # report which side failed
         try:
             duck = con.execute(oracle[name])
             dcols = [d[0] for d in duck.description]
             drows = duck.fetchall()
+        except Exception as e:
+            print(f"FAIL {name}: oracle error: {e}")
+            n_fail += 1
+            continue
+        try:
             sq = con.execute(
                 f"SELECT * FROM read_parquet({files!r})")
             scols = [d[0] for d in sq.description]
             srows = sq.fetchall()
         except Exception as e:
-            print(f"FAIL {name}: exec error: {e}")
+            print(f"FAIL {name}: spark output error: {e}")
             n_fail += 1
             continue
         if sorted(dcols) != sorted(scols):
